@@ -261,7 +261,8 @@ def run_scaling(sf_dir: str, n: int, n4: int, pr_iters: int = 10,
         spark.stop()
         time.sleep(2)
 
-    results = {}
+    results = {}  # per core count
+    tc_err = {}   # tc_approx only: the exact count and the estimate's error
     nvals = None
     n_vertices = 1 << scale
     for cores in (n, n4):
@@ -345,8 +346,8 @@ def run_scaling(sf_dir: str, n: int, n4: int, pr_iters: int = 10,
             # one untimed exact count (outside the gated measurement) to
             # report the estimator's relative error alongside efficiency
             exact = triangle_count(g)
-            results["exact_triangles"] = exact
-            results["rel_err"] = round(
+            tc_err["exact_triangles"] = exact
+            tc_err["rel_err"] = round(
                 abs(results[cores]["estimate"] - exact) / exact, 4
             ) if exact else None
         spark.stop()
@@ -369,8 +370,7 @@ def run_scaling(sf_dir: str, n: int, n4: int, pr_iters: int = 10,
     if algo == "tc_approx":
         out["k"] = results[n4].get("k")
         out["estimate"] = results[n4].get("estimate")
-        out["exact_triangles"] = results.get("exact_triangles")
-        out["rel_err"] = results.get("rel_err")
+        out.update(tc_err)
     names = {"pr": "PageRank", "cc": "Connected-components",
              "lp": "Label-propagation (majority)", "tc": "Triangle-count",
              "tc_approx": "Triangle-count DOULION estimator"}

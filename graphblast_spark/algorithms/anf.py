@@ -38,12 +38,7 @@ from pyspark.sql import functions as F
 
 from graphblast_spark.descriptor import DEFAULT_DESC
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import (
-    SuperstepRunner,
-    scaled_partition_count,
-    stable_partitions,
-    truncate_plan,
-)
+from graphblast_spark.runtime.superstep import SuperstepRunner, loop_width
 
 
 def neighborhood_function_exact(
@@ -93,43 +88,43 @@ def hyperball(
     aggregate; one scalar action reads Σ estimate. State: |V| sketch
     rows, lineage truncated each round."""
     spark = g.edges.sparkSession
-    n_part = scaled_partition_count(spark, g.edges.count())
-    e = g.edges.select("src", "dst").repartition(n_part, "src").persist()
+    width = loop_width(spark, g.edges.count())
+    e = g.edges.select("src", "dst").repartition(width, "src").persist()
     e.count()
     if runner is None:
         runner = SuperstepRunner(spark)
 
-    counters = (
-        g.vertices.groupBy("id")
-        .agg(F.hll_sketch_agg("id", F.lit(lg_config_k)).alias("sk"))
-        .transform(truncate_plan)
-    )
+    def init():
+        return {"counters": g.vertices.groupBy("id").agg(
+            F.hll_sketch_agg("id", F.lit(lg_config_k)).alias("sk"))}
 
     def total(c: DataFrame) -> float:
         return float(
             c.agg(F.sum(F.hll_sketch_estimate("sk"))).first()[0]
         )
 
-    rows = [(0, total(counters))]
-    with stable_partitions(spark, shuffle_partitions=n_part):
-        for t in range(1, max_t + 1):
-            cs = counters.hint("shuffle_hash")
-            gathered = (
-                e.join(cs, e["dst"] == cs["id"], "inner")
-                .select(e["src"].alias("id"), cs["sk"].alias("sk"))
-            )
-            counters = (
-                gathered.unionByName(counters)
-                .groupBy("id")
-                .agg(F.hll_union_agg("sk", F.lit(True)).alias("sk"))
-                .transform(truncate_plan)  # superstep action
-            )
-            n_t = total(counters)
-            runner.commit(t - 1, {}, metrics={"t": t, "n_pairs": n_t})
-            rows.append((t, n_t))
-            if n_t == rows[-2][1]:  # saturated: balls stopped growing
-                break
+    def step(s, it, sc):
+        counters = s["counters"]
+        cs = counters.hint("shuffle_hash")
+        gathered = (
+            e.join(cs, e["dst"] == cs["id"], "inner")
+            .select(e["src"].alias("id"), cs["sk"].alias("sk"))
+        )
+        return {"counters": (
+            gathered.unionByName(counters)
+            .groupBy("id")
+            .agg(F.hll_union_agg("sk", F.lit(True)).alias("sk"))
+        )}
+
+    def converged(new, old, sc):
+        # N(0..t) rides in the scalars, so a resumed run keeps the series
+        series = sc.get("n_pairs") or [total(old["counters"])]
+        n_t = total(new["counters"])
+        return {"n_pairs": series + [n_t]}, n_t == series[-1]  # balls stopped growing
+
+    state, sc, _ = runner.iterate(init, step, iters=max_t, converged=converged, width=width)
     e.unpersist()
+    rows = list(enumerate(sc.get("n_pairs") or [total(state["counters"])]))
     return spark.createDataFrame(rows, "t int, n_pairs double")
 
 
@@ -179,58 +174,60 @@ def harmonic_centrality_hyperball(
 
     Returns (id long, harmonic double)."""
     spark = g.edges.sparkSession
-    n_part = scaled_partition_count(spark, g.edges.count())
-    e = g.edges.select("src", "dst").repartition(n_part, "src").persist()
+    width = loop_width(spark, g.edges.count())
+    e = g.edges.select("src", "dst").repartition(width, "src").persist()
     e.count()
     if runner is None:
         runner = SuperstepRunner(spark)
 
-    counters = (
-        g.vertices.groupBy("id")
-        .agg(F.hll_sketch_agg("id", F.lit(lg_config_k)).alias("sk"))
-        .withColumn("est", F.hll_sketch_estimate("sk"))
-        .withColumn("harmonic", F.lit(0.0))
-        .transform(truncate_plan)
-    )
+    def init():
+        return {"counters": (
+            g.vertices.groupBy("id")
+            .agg(F.hll_sketch_agg("id", F.lit(lg_config_k)).alias("sk"))
+            .withColumn("est", F.hll_sketch_estimate("sk"))
+            .withColumn("harmonic", F.lit(0.0))
+        )}
 
     def total(c: DataFrame) -> float:
         return float(c.agg(F.sum("est")).first()[0])
 
-    prev_total = total(counters)
-    with stable_partitions(spark, shuffle_partitions=n_part):
-        for t in range(1, max_t + 1):
-            cs = counters.hint("shuffle_hash")
-            gathered = (
-                e.join(cs, e["dst"] == cs["id"], "inner")
-                .select(e["src"].alias("id"), cs["sk"].alias("sk"))
+    def step(s, it, sc):
+        counters, t = s["counters"], it + 1
+        cs = counters.hint("shuffle_hash")
+        gathered = (
+            e.join(cs, e["dst"] == cs["id"], "inner")
+            .select(e["src"].alias("id"), cs["sk"].alias("sk"))
+        )
+        unioned = (
+            gathered.unionByName(counters.select("id", "sk"))
+            .groupBy("id")
+            .agg(F.hll_union_agg("sk", F.lit(True)).alias("sk"))
+            .withColumn("est_new", F.hll_sketch_estimate("sk"))
+        )
+        return {"counters": (
+            unioned.join(
+                counters.select("id", F.col("est").alias("est_old"), "harmonic"),
+                "id",
             )
-            unioned = (
-                gathered.unionByName(counters.select("id", "sk"))
-                .groupBy("id")
-                .agg(F.hll_union_agg("sk", F.lit(True)).alias("sk"))
-                .withColumn("est_new", F.hll_sketch_estimate("sk"))
+            .select(
+                "id", "sk",
+                F.col("est_new").alias("est"),
+                (
+                    F.col("harmonic")
+                    + F.greatest(
+                        F.col("est_new") - F.col("est_old"), F.lit(0.0)
+                    ) / F.lit(float(t))
+                ).alias("harmonic"),
             )
-            counters = (
-                unioned.join(
-                    counters.select("id", F.col("est").alias("est_old"), "harmonic"),
-                    "id",
-                )
-                .select(
-                    "id", "sk",
-                    F.col("est_new").alias("est"),
-                    (
-                        F.col("harmonic")
-                        + F.greatest(
-                            F.col("est_new") - F.col("est_old"), F.lit(0.0)
-                        ) / F.lit(float(t))
-                    ).alias("harmonic"),
-                )
-                .transform(truncate_plan)  # superstep action
-            )
-            cur = total(counters)
-            runner.commit(t - 1, {}, metrics={"t": t, "n_pairs": cur})
-            if cur == prev_total:  # all balls saturated
-                break
-            prev_total = cur
+        )}
+
+    def converged(new, old, sc):
+        prev = sc["total"] if "total" in sc else total(old["counters"])
+        cur = total(new["counters"])
+        return {"total": cur}, cur == prev  # all balls saturated
+
+    counters = runner.iterate(
+        init, step, iters=max_t, converged=converged, width=width
+    )[0]["counters"]
     e.unpersist()
     return counters.select("id", F.round("harmonic", 6).alias("harmonic"))

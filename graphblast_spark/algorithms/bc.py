@@ -32,13 +32,11 @@ Physical plan (scale notes):
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, child_runner, stable_partitions, truncate_plan
+from graphblast_spark.runtime.superstep import SuperstepRunner, child_runner, truncate_plan
 
 
 def betweenness_centrality(
@@ -122,84 +120,78 @@ def _bc_one_batch(
     edges = g.edges.select("src", "dst")
 
     # -- forward: per-level frontiers (root, id, sigma) -----------------
-    level0 = roots.select(
-        F.col("id").alias("root"), "id", F.lit(1.0).alias("sigma")
-    ).transform(truncate_plan)
-    levels: list[DataFrame] = [level0]
-    sp_all = level0.select("root", "id")  # settled (root, vertex) pairs
+    # state: level frames L<depth> plus the settled (root, vertex) pairs
+    def fwd_init():
+        level0 = roots.select(F.col("id").alias("root"), "id", F.lit(1.0).alias("sigma"))
+        return {"L000000": level0, "settled": level0.select("root", "id")}
 
-    with stable_partitions(spark):
-        d = 0
-        while max_depth is None or d < max_depth:
-            t0 = time.time()
-            fr = levels[d].hint("shuffle_hash")
-            nxt = (
-                edges.join(fr, on=edges["src"] == fr["id"], how="inner")
-                .groupBy(fr["root"].alias("root"), edges["dst"].alias("id"))
-                .agg(F.sum("sigma").alias("sigma"))
-                .join(sp_all, on=["root", "id"], how="left_anti")
-                .transform(truncate_plan)  # superstep action
-            )
-            n_new = nxt.count()
-            runner.commit(d, {}, scalars={"frontier": n_new},
-                          metrics={"ms": (time.time() - t0) * 1000.0, "phase": "fwd"})
-            if n_new == 0:
-                break
-            levels.append(nxt)
-            sp_all = sp_all.unionByName(nxt.select("root", "id")).transform(truncate_plan)
-            d += 1
+    def fwd_step(s, d, sc):
+        fr = s[f"L{d:06d}"].hint("shuffle_hash")
+        nxt = (
+            edges.join(fr, on=edges["src"] == fr["id"], how="inner")
+            .groupBy(fr["root"].alias("root"), edges["dst"].alias("id"))
+            .agg(F.sum("sigma").alias("sigma"))
+            .join(s["settled"], on=["root", "id"], how="left_anti")
+            .transform(truncate_plan)
+        )
+        if nxt.isEmpty():
+            return None
+        return {**s, f"L{d + 1:06d}": nxt,
+                "settled": s["settled"].unionByName(nxt.select("root", "id"))}
 
-    deepest = len(levels) - 1
+    # a BFS expands at most |V| - 1 times, so g.n only caps the unbounded form
+    fwd = child_runner(runner, spark, "fwd").iterate(
+        fwd_init, fwd_step, iters=max_depth if max_depth is not None else g.n
+    )[0]
+    deepest = len(fwd) - 2
+    levels = [fwd[f"L{d:06d}"] for d in range(deepest + 1)]
 
     # -- backward: delta accumulation, deepest level has delta 0 --------
-    deltas: list[DataFrame] = []  # (root, id, delta) per level, deepest first
-    delta_next: DataFrame | None = None  # deltas at level d+1
-    with stable_partitions(spark):
-        for d in range(deepest - 1, -1, -1):
-            t0 = time.time()
-            cur, nxt_lvl = levels[d], levels[d + 1]
-            succ = nxt_lvl.select(
-                F.col("root").alias("t_root"),
-                F.col("id").alias("t_id"),
-                F.col("sigma").alias("t_sigma"),
+    # state: delta frames D<level> (root, id, delta), deepest first
+    def bwd_step(s, i, sc):
+        d = deepest - 1 - i
+        cur = levels[d]
+        succ = levels[d + 1].select(
+            F.col("root").alias("t_root"),
+            F.col("id").alias("t_id"),
+            F.col("sigma").alias("t_sigma"),
+        )
+        if i > 0:
+            succ = succ.join(
+                s[f"D{d + 1:06d}"].select(
+                    F.col("root").alias("t_root"),
+                    F.col("id").alias("t_id"),
+                    "delta",
+                ),
+                on=["t_root", "t_id"],
+                how="left",
+            ).select("t_root", "t_id", "t_sigma",
+                     F.coalesce("delta", F.lit(0.0)).alias("delta"))
+        else:
+            succ = succ.withColumn("delta", F.lit(0.0))
+        contrib = (
+            cur.join(edges, on=cur["id"] == edges["src"], how="inner")
+            .join(
+                succ,
+                on=(cur["root"] == succ["t_root"]) & (edges["dst"] == succ["t_id"]),
+                how="inner",
             )
-            if delta_next is not None:
-                succ = succ.join(
-                    delta_next.select(
-                        F.col("root").alias("t_root"),
-                        F.col("id").alias("t_id"),
-                        "delta",
-                    ),
-                    on=["t_root", "t_id"],
-                    how="left",
-                ).select("t_root", "t_id", "t_sigma",
-                         F.coalesce("delta", F.lit(0.0)).alias("delta"))
-            else:
-                succ = succ.withColumn("delta", F.lit(0.0))
-            contrib = (
-                cur.join(edges, on=cur["id"] == edges["src"], how="inner")
-                .join(
-                    succ,
-                    on=(cur["root"] == succ["t_root"]) & (edges["dst"] == succ["t_id"]),
-                    how="inner",
-                )
-                .groupBy(cur["root"].alias("root"), cur["id"].alias("id"))
-                .agg(
-                    F.sum(
-                        (cur["sigma"] / succ["t_sigma"]) * (F.lit(1.0) + succ["delta"])
-                    ).alias("delta")
-                )
+            .groupBy(cur["root"].alias("root"), cur["id"].alias("id"))
+            .agg(
+                F.sum(
+                    (cur["sigma"] / succ["t_sigma"]) * (F.lit(1.0) + succ["delta"])
+                ).alias("delta")
             )
-            # vertices at this level with no DAG successor get delta 0
-            delta_next = (
-                cur.select("root", "id")
-                .join(contrib, on=["root", "id"], how="left")
-                .select("root", "id", F.coalesce("delta", F.lit(0.0)).alias("delta"))
-                .transform(truncate_plan)  # superstep action
-            )
-            runner.commit(deepest - 1 - d, {},
-                          metrics={"ms": (time.time() - t0) * 1000.0, "phase": "bwd"})
-            deltas.append(delta_next)
+        )
+        # vertices at this level with no DAG successor get delta 0
+        return {**s, f"D{d:06d}": (
+            cur.select("root", "id")
+            .join(contrib, on=["root", "id"], how="left")
+            .select("root", "id", F.coalesce("delta", F.lit(0.0)).alias("delta"))
+        )}
+
+    bwd = child_runner(runner, spark, "bwd").iterate(dict, bwd_step, iters=deepest)[0]
+    deltas = [bwd[f"D{d:06d}"] for d in range(deepest - 1, -1, -1)]
 
     if not deltas:
         return spark.createDataFrame([], "id long, bc double")

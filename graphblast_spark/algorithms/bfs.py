@@ -16,8 +16,6 @@ switchpoint (pull) — the reference's --mxvmode 0 direction optimization.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -43,42 +41,28 @@ def bfs(
         src_df = spark.range(1).select(
             F.lit(source).cast("long").alias("id"), F.lit(0).cast("long").alias("depth")
         )
-        return {"depths": src_df, "frontier": src_df.select("id")}
+        return {"depths": src_df, "frontier": src_df}
 
-    state, start_iter, scalars = runner.resume_or_init(init)
-    depths, frontier = state["depths"], state["frontier"]
-    frontier_n = int(scalars.get("frontier_n", 1))
-
-    for it in range(start_iter, desc.max_niter):
-        if frontier_n == 0:
-            break
-        t0 = time.time()
+    def step(s, it, sc):
+        frontier_n = sc.get("frontier_n", 1)
         push = (
             desc.mxv_mode == MxvMode.PUSHONLY
             or (desc.mxv_mode == MxvMode.PUSHPULL and frontier_n / max(g.n, 1) <= desc.switchpoint)
         )
-        f = F.broadcast(frontier) if push else frontier
+        f = F.broadcast(s["frontier"]) if push else s["frontier"]
         nxt = (
             g.edges.join(f, on=g.edges["src"] == f["id"], how="inner")
             .select(g.edges["dst"].alias("id"))
             .distinct()
-            .join(depths, on="id", how="left_anti")  # complemented visited mask
+            .join(s["depths"], on="id", how="left_anti")  # complemented visited mask
             .withColumn("depth", F.lit(it + 1).cast("long"))
             .transform(truncate_plan)
         )
-        frontier_n = nxt.count()
-        depths = depths.unionByName(nxt)
-        if (it + 1) % 8 == 0:
-            depths = depths.transform(truncate_plan)  # bound the union tree
-        state = runner.commit(
-            it,
-            {"depths": depths, "frontier": nxt.select("id")},
-            scalars={"frontier_n": frontier_n},
-            metrics={
-                "ms": (time.time() - t0) * 1000.0,
-                "direction": "push" if push else "pull",
-                "frontier": frontier_n,
-            },
-        )
-        depths, frontier = state["depths"], state["frontier"]
-    return depths
+        return {"depths": s["depths"].unionByName(nxt), "frontier": nxt}
+
+    def converged(new, old, sc):
+        n = new["frontier"].count()
+        return {"frontier_n": n}, n == 0
+
+    state, _, _ = runner.iterate(init, step, iters=desc.max_niter, converged=converged)
+    return state["depths"]

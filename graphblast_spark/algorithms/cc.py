@@ -31,15 +31,13 @@ web graph whose link chains can be thousands long.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
 from graphblast_spark.operators.assign import extract_gather
-from graphblast_spark.runtime.superstep import SuperstepRunner, stable_partitions, truncate_plan
+from graphblast_spark.runtime.superstep import SuperstepRunner, loop_width
 
 
 def _hook_step(e_sym: DataFrame, parent: DataFrame, scatter_hook: bool) -> DataFrame:
@@ -117,12 +115,11 @@ def connected_components(
     # the min aggregate, so skip the dedup shuffle (cf. util.hpp:263-329
     # which dedups at build — our build already deduped (src,dst)).
     e = g.edges.select("src", "dst")
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # pin layout on dst — the hook join's edge-side key — so only the
     # (small) parent table shuffles each superstep
     e_sym = (
         e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition(n_part, "dst")
+        .repartition(loop_width(spark), "dst")
         .persist()
     )
     e_sym.count()
@@ -146,51 +143,38 @@ def connected_components(
         )
         return {"parent": warm}
 
-    state, start_iter, _ = runner.resume_or_init(init)
-    parent = state["parent"]
+    def step(s, it, sc):
+        hooked = _hook_step(e_sym, s["parent"], scatter_hook)
+        # (2) shortcut/jump: f[u] = f[f[u]] (cc.hpp:98-99 extractGather)
+        return {"parent": extract_gather(hooked, hooked) if pointer_jump else hooked}
 
-    with stable_partitions(spark):
-        for it in range(start_iter, desc.max_niter):
-            t0 = time.time()
-            hooked = _hook_step(e_sym, parent, scatter_hook)
-            # (2) shortcut/jump: f[u] = f[f[u]] (cc.hpp:98-99 extractGather)
-            new_parent = extract_gather(hooked, hooked) if pointer_jump else hooked
-            new_parent = new_parent.transform(truncate_plan)
+    def converged(new, old, sc):
+        # (3) convergence (cc.hpp:102-104 MinimumNotEqualTo reduce).
+        # Labels are integers and strictly monotone non-increasing, so
+        # Σ label is an exact fixpoint witness: unchanged sum ⟺ no
+        # label moved. One agg over the just-checkpointed table — no
+        # 1M×1M diff join per superstep. Summed as decimal(38,0):
+        # at 10^12 vertices × 10^12-sized labels the int64 sum
+        # overflows (~10^24 ≫ 2^63) — ANSI Spark (4.x default) kills
+        # the job mid-superstep, non-ANSI wraps silently and a
+        # wrapped collision could fake convergence; decimal keeps
+        # the witness exact at any scale for the same single-agg
+        # cost (tests/test_operators3.py pins both behaviors).
+        label_sum = int(
+            new["parent"].agg(F.sum(F.col("val").cast("decimal(38,0)"))).first()[0]
+        )
+        return {"label_sum": label_sum}, label_sum == sc.get("label_sum")
 
-            # (3) convergence (cc.hpp:102-104 MinimumNotEqualTo reduce).
-            # Labels are integers and strictly monotone non-increasing, so
-            # Σ label is an exact fixpoint witness: unchanged sum ⟺ no
-            # label moved. One agg over the just-checkpointed table — no
-            # 1M×1M diff join per superstep. Summed as decimal(38,0):
-            # at 10^12 vertices × 10^12-sized labels the int64 sum
-            # overflows (~10^24 ≫ 2^63) — ANSI Spark (4.x default) kills
-            # the job mid-superstep, non-ANSI wraps silently and a
-            # wrapped collision could fake convergence; decimal keeps
-            # the witness exact at any scale for the same single-agg
-            # cost (tests/test_operators3.py pins both behaviors).
-            label_sum = int(
-                new_parent.agg(F.sum(F.col("val").cast("decimal(38,0)"))).first()[0]
-            )
-            changed = None if it == start_iter else (label_sum != prev_sum)
-            prev_sum = label_sum
-            ms = (time.time() - t0) * 1000.0
-            state = runner.commit(
-                it, {"parent": new_parent},
-                scalars={"label_sum": label_sum}, metrics={"ms": ms},
-            )
-            parent = state["parent"]
-            if changed is False:
-                break
-        else:
-            raise RuntimeError(
-                f"connected_components did not converge within "
-                f"max_niter={desc.max_niter} supersteps (labels still "
-                f"moving) — raise Descriptor.max_niter; a silent return "
-                f"here would hand back wrong components"
-            )
-
+    state, _, done = runner.iterate(init, step, iters=desc.max_niter, converged=converged)
     e_sym.unpersist()
-    return parent.select("id", F.col("val").alias("component"))
+    if not done:
+        raise RuntimeError(
+            f"connected_components did not converge within "
+            f"max_niter={desc.max_niter} supersteps (labels still "
+            f"moving) — raise Descriptor.max_niter; a silent return "
+            f"here would hand back wrong components"
+        )
+    return state["parent"].select("id", F.col("val").alias("component"))
 
 
 def remap_labels(

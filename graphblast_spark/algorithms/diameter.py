@@ -14,14 +14,12 @@ can't express with a single Vector.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, child_runner, stable_partitions, truncate_plan
+from graphblast_spark.runtime.superstep import SuperstepRunner, child_runner, truncate_plan
 
 # Frontier-state budget for root-batched sweeps: the multi-source state
 # is O(reached (root, vertex) pairs) ≤ |roots|·|V|; batches are sized so
@@ -104,41 +102,30 @@ def _msbfs_one_batch(
     desc: Descriptor,
     runner: SuperstepRunner,
 ):
-    spark = g.edges.sparkSession
-
     def init():
         seed = src_df.select("root", F.col("root").alias("id"),
                              F.lit(0).cast("long").alias("depth"))
-        return {"visited": seed, "frontier": seed.select("root", "id")}
+        return {"visited": seed, "frontier": seed}
 
-    state, start_iter, scalars = runner.resume_or_init(init)
-    visited, frontier = state["visited"], state["frontier"]
-    frontier_n = int(scalars.get("frontier_n", src_df.count()))
+    def step(s, it, sc):
+        frontier_n = sc["frontier_n"] if "frontier_n" in sc else src_df.count()
+        fr = F.broadcast(s["frontier"]) if frontier_n <= 1_000_000 else s["frontier"]
+        nxt = (
+            g.edges.join(fr, on=g.edges["src"] == fr["id"], how="inner")
+            .select("root", F.col("dst").alias("id"))
+            .distinct()
+            .join(s["visited"], on=["root", "id"], how="left_anti")
+            .withColumn("depth", F.lit(it + 1).cast("long"))
+            .transform(truncate_plan)
+        )
+        return {"visited": s["visited"].unionByName(nxt), "frontier": nxt}
 
-    with stable_partitions(spark):
-        for it in range(start_iter, desc.max_niter):
-            if frontier_n == 0:
-                break
-            t0 = time.time()
-            fr = F.broadcast(frontier) if frontier_n <= 1_000_000 else frontier
-            nxt = (
-                g.edges.join(fr, on=g.edges["src"] == fr["id"], how="inner")
-                .select("root", F.col("dst").alias("id"))
-                .distinct()
-                .join(visited, on=["root", "id"], how="left_anti")
-                .withColumn("depth", F.lit(it + 1).cast("long"))
-            )
-            nxt = nxt.transform(truncate_plan)
-            frontier_n = nxt.count()
-            visited = visited.unionByName(nxt)
-            frontier = nxt.select("root", "id")
-            state = runner.truncate({"visited": visited, "frontier": frontier})
-            visited, frontier = state["visited"], state["frontier"]
-            runner.commit(
-                it, state, scalars={"frontier_n": frontier_n},
-                metrics={"ms": (time.time() - t0) * 1000.0, "frontier": frontier_n},
-            )
-    return visited
+    def converged(new, old, sc):
+        n = new["frontier"].count()
+        return {"frontier_n": n}, n == 0
+
+    state, _, _ = runner.iterate(init, step, iters=desc.max_niter, converged=converged)
+    return state["visited"]
 
 
 def closeness_centrality(

@@ -23,15 +23,28 @@ ties), so the coloring is unique and reproducible in the SQL oracle.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphblast_spark.algorithms.mis import lcg_weight, mis
+from graphblast_spark.algorithms.mis import lcg_weight, local_maxima, mis
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, stable_partitions, truncate_plan
+from graphblast_spark.runtime.superstep import SuperstepRunner, truncate_plan
+
+
+def _smallest_free(used: str):
+    """Smallest color ≥ 1 absent from the ``used`` color set (null →
+    1): min over {1..|used|+1} ∖ used — gc.hpp's forbidden-array scan
+    reframed as an array expression over a small set."""
+    return F.coalesce(
+        F.array_min(
+            F.array_except(
+                F.sequence(F.lit(1), F.coalesce(F.size(used), F.lit(0)) + 1),
+                F.coalesce(used, F.array().cast("array<int>")),
+            )
+        ),
+        F.lit(1),
+    ).cast("int")
 
 
 def graph_coloring(
@@ -60,47 +73,18 @@ def graph_coloring(
         colored = spark.createDataFrame([], "id long, color int")
         return {"cand": cand, "colored": colored}
 
-    state, start_iter, _ = runner.resume_or_init(init)
-    cand, colored = state["cand"], state["colored"]
+    def step(s, it, sc):
+        # local (weight, id) maxima of the uncolored (see mis.py)
+        winners = local_maxima(adj, s["cand"]).transform(truncate_plan)
+        if winners.isEmpty():
+            return None
+        return {
+            "cand": s["cand"].join(winners, on="id", how="left_anti"),
+            "colored": s["colored"].unionByName(winners.withColumn("color", F.lit(it + 1))),
+        }
 
     max_rounds = fixed_rounds if fixed_rounds is not None else desc.max_niter
-    with stable_partitions(spark):
-        for it in range(start_iter, max_rounds):
-            t0 = time.time()
-            # max (weight, id) of uncolored neighbors — the id component
-            # breaks LCG-weight ties for ids ≥ 2^31−1 (see mis.py)
-            c2 = cand.select(F.col("id").alias("nid"), F.col("w").alias("nw"))
-            m = (
-                adj.join(c2, on=adj["src"] == c2["nid"], how="inner")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.max(F.struct(F.col("nw").alias("w"), F.col("nid").alias("i"))).alias("m"))
-            )
-            winners = (
-                cand.join(m, on="id", how="left")
-                .filter(
-                    F.col("m").isNull()
-                    | (F.struct(F.col("w").alias("w"), F.col("id").alias("i")) > F.col("m"))
-                )
-                .select("id")
-            )
-            winners = winners.transform(truncate_plan)
-            n_new = winners.count()
-            if n_new == 0:
-                runner.commit(
-                    it, {"cand": cand, "colored": colored},
-                    scalars={"succ": 0}, metrics={"ms": 0.0},
-                )
-                break
-            colored = colored.unionByName(
-                winners.withColumn("color", F.lit(it + 1))
-            )
-            cand = cand.join(winners, on="id", how="left_anti")
-            state = runner.truncate({"cand": cand, "colored": colored})
-            cand, colored = state["cand"], state["colored"]
-            runner.commit(
-                it, state, scalars={"succ": n_new},
-                metrics={"ms": (time.time() - t0) * 1000.0, "colored": n_new},
-            )
+    colored = runner.iterate(init, step, iters=max_rounds)[0]["colored"]
 
     out = g.vertices.join(colored, on="id", how="left").select(
         "id", F.coalesce("color", F.lit(0)).alias("color")
@@ -207,71 +191,51 @@ def graph_coloring_spec(
             )
         }
 
-    state, start_iter, _ = runner.resume_or_init(init)
-    colors = state["colors"]
+    def step(s, it, sc):
+        colors = s["colors"]
+        c_nbr = colors.select(
+            F.col("id").alias("src"), F.col("color").alias("ncolor"),
+            F.col("wk").alias("nwk"),
+        )
+        # min equal-color-neighbor key per conflicted vertex
+        mnb = (
+            adj.join(c_nbr, on="src")
+            .join(
+                colors.select(F.col("id").alias("dst"), "color", "wk"),
+                on="dst",
+            )
+            .filter(F.col("ncolor") == F.col("color"))
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.min("nwk").alias("mnb"))
+        )
+        movers = (
+            colors.join(mnb, on="id")
+            .filter(F.col("wk") < F.col("mnb"))
+            .select("id")
+            .transform(truncate_plan)
+        )
+        if movers.isEmpty():
+            return None
+        used = (
+            adj.join(movers.withColumnRenamed("id", "dst"), on="dst", how="left_semi")
+            .join(c_nbr.select("src", "ncolor"), on="src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.collect_set("ncolor").alias("used"))
+        )
+        newc = movers.join(used, on="id", how="left").select(
+            "id", _smallest_free("used").alias("newcolor"),
+        )
+        return {"colors": (
+            colors.join(newc, on="id", how="left")
+            .select(
+                "id",
+                F.coalesce("newcolor", "color").alias("color"),
+                "wk",
+            )
+        )}
 
     max_rounds = fixed_rounds if fixed_rounds is not None else desc.max_niter
-    with stable_partitions(spark):
-        for it in range(start_iter, max_rounds):
-            t0 = time.time()
-            c_nbr = colors.select(
-                F.col("id").alias("src"), F.col("color").alias("ncolor"),
-                F.col("wk").alias("nwk"),
-            )
-            # min equal-color-neighbor key per conflicted vertex
-            mnb = (
-                adj.join(c_nbr, on="src")
-                .join(
-                    colors.select(F.col("id").alias("dst"), "color", "wk"),
-                    on="dst",
-                )
-                .filter(F.col("ncolor") == F.col("color"))
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("nwk").alias("mnb"))
-            )
-            movers = (
-                colors.join(mnb, on="id")
-                .filter(F.col("wk") < F.col("mnb"))
-                .select("id")
-                .transform(truncate_plan)
-            )
-            n_mov = movers.count()
-            if n_mov == 0:
-                runner.commit(it, {"colors": colors}, scalars={"movers": 0},
-                              metrics={"ms": 0.0})
-                break
-            used = (
-                adj.join(movers.withColumnRenamed("id", "dst"), on="dst", how="left_semi")
-                .join(c_nbr.select("src", "ncolor"), on="src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.collect_set("ncolor").alias("used"))
-            )
-            newc = movers.join(used, on="id", how="left").select(
-                "id",
-                F.coalesce(
-                    F.array_min(
-                        F.array_except(
-                            F.sequence(F.lit(1), F.coalesce(F.size("used"), F.lit(0)) + 1),
-                            F.coalesce("used", F.array().cast("array<int>")),
-                        )
-                    ),
-                    F.lit(1),
-                ).cast("int").alias("newcolor"),
-            )
-            colors = (
-                colors.join(newc, on="id", how="left")
-                .select(
-                    "id",
-                    F.coalesce("newcolor", "color").alias("color"),
-                    "wk",
-                )
-            )
-            state = runner.truncate({"colors": colors})
-            colors = state["colors"]
-            runner.commit(
-                it, state, scalars={"movers": n_mov},
-                metrics={"ms": (time.time() - t0) * 1000.0, "movers": n_mov},
-            )
+    colors = runner.iterate(init, step, iters=max_rounds)[0]["colors"]
 
     out = colors.select("id", "color")
     adj.unpersist()
@@ -316,68 +280,29 @@ def graph_coloring_jp(
         colored = spark.createDataFrame([], "id long, color int")
         return {"cand": cand, "colored": colored}
 
-    state, start_iter, _ = runner.resume_or_init(init)
-    cand, colored = state["cand"], state["colored"]
+    def step(s, it, sc):
+        cand, colored = s["cand"], s["colored"]
+        winners = local_maxima(adj, cand).transform(truncate_plan)
+        if winners.isEmpty():
+            return None
+        # smallest color not used by already-colored neighbors
+        cl = colored.select(F.col("id").alias("nid"), "color")
+        used = (
+            adj.join(winners, on=adj["dst"] == winners["id"], how="left_semi")
+            .join(cl, on=F.col("src") == F.col("nid"), how="inner")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.collect_set("color").alias("used"))
+        )
+        assigned = winners.join(used, on="id", how="left").select(
+            "id", _smallest_free("used").alias("color"),
+        )
+        return {
+            "cand": cand.join(winners, on="id", how="left_anti"),
+            "colored": colored.unionByName(assigned),
+        }
 
     max_rounds = fixed_rounds if fixed_rounds is not None else desc.max_niter
-    with stable_partitions(spark):
-        for it in range(start_iter, max_rounds):
-            t0 = time.time()
-            c2 = cand.select(F.col("id").alias("nid"), F.col("w").alias("nw"))
-            m = (
-                adj.join(c2, on=adj["src"] == c2["nid"], how="inner")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.max(F.struct(F.col("nw").alias("w"), F.col("nid").alias("i"))).alias("m"))
-            )
-            winners = (
-                cand.join(m, on="id", how="left")
-                .filter(
-                    F.col("m").isNull()
-                    | (F.struct(F.col("w").alias("w"), F.col("id").alias("i")) > F.col("m"))
-                )
-                .select("id")
-            )
-            winners = winners.transform(truncate_plan)
-            n_new = winners.count()
-            if n_new == 0:
-                runner.commit(
-                    it, {"cand": cand, "colored": colored},
-                    scalars={"succ": 0}, metrics={"ms": 0.0},
-                )
-                break
-            # smallest color not used by already-colored neighbors:
-            # min over {1..|used|+1} ∖ used (gc.hpp's forbidden-array
-            # scan, reframed as an array expression over a small set)
-            cl = colored.select(F.col("id").alias("nid"), "color")
-            used = (
-                adj.join(winners, on=adj["dst"] == winners["id"], how="left_semi")
-                .join(cl, on=F.col("src") == F.col("nid"), how="inner")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.collect_set("color").alias("used"))
-            )
-            assigned = (
-                winners.join(used, on="id", how="left")
-                .select(
-                    "id",
-                    F.coalesce(
-                        F.array_min(
-                            F.array_except(
-                                F.sequence(F.lit(1), F.coalesce(F.size("used"), F.lit(0)) + 1),
-                                F.coalesce("used", F.array().cast("array<int>")),
-                            )
-                        ),
-                        F.lit(1),
-                    ).cast("int").alias("color"),
-                )
-            )
-            colored = colored.unionByName(assigned)
-            cand = cand.join(winners, on="id", how="left_anti")
-            state = runner.truncate({"cand": cand, "colored": colored})
-            cand, colored = state["cand"], state["colored"]
-            runner.commit(
-                it, state, scalars={"succ": n_new},
-                metrics={"ms": (time.time() - t0) * 1000.0, "colored": n_new},
-            )
+    colored = runner.iterate(init, step, iters=max_rounds)[0]["colored"]
 
     out = g.vertices.join(colored, on="id", how="left").select(
         "id", F.coalesce("color", F.lit(0)).alias("color")

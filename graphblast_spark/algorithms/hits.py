@@ -22,13 +22,11 @@ output over the full vertex universe.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, stable_partitions, truncate_plan
+from graphblast_spark.runtime.superstep import SuperstepRunner, truncate_plan
 
 
 def hits(
@@ -50,9 +48,6 @@ def hits(
         u0 = g.vertices.select("id", F.lit(1.0 / n).alias("val"))
         return {"hub": u0, "authority": u0}
 
-    state, start_iter, _ = runner.resume_or_init(init)
-    hub, authority = state["hub"], state["authority"]
-
     def _pull(vec: DataFrame, in_key: str, out_key: str) -> DataFrame:
         """One vecmat half-step + density restore (union-before-agg,
         one shuffle — the pagerank.py pattern)."""
@@ -70,17 +65,13 @@ def hits(
         total = vec.agg(F.sum("val")).first()[0] or 1.0
         return vec.select("id", (F.col("val") / F.lit(float(total))).alias("val"))
 
-    with stable_partitions(spark):
-        for it in range(start_iter, fixed_iters):
-            t0 = time.time()
-            authority = _l1_normalize(_pull(hub, "src", "dst")).transform(truncate_plan)
-            hub = _l1_normalize(_pull(authority, "dst", "src")).transform(truncate_plan)
-            state = runner.commit(
-                it, {"hub": hub, "authority": authority},
-                metrics={"ms": (time.time() - t0) * 1000.0},
-            )
-            hub, authority = state["hub"], state["authority"]
+    def step(s, it, sc):
+        # authority is truncated here: the hub half-step reads it twice
+        authority = _l1_normalize(_pull(s["hub"], "src", "dst")).transform(truncate_plan)
+        return {"hub": _l1_normalize(_pull(authority, "dst", "src")), "authority": authority}
 
+    state, _, _ = runner.iterate(init, step, iters=fixed_iters)
+    hub, authority = state["hub"], state["authority"]
     return (
         hub.withColumnRenamed("val", "hub")
         .join(authority.withColumnRenamed("val", "authority"), on="id", how="outer")

@@ -29,17 +29,11 @@ switching applies.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import (
-    SuperstepRunner,
-    stable_partitions,
-    truncate_plan,
-)
+from graphblast_spark.runtime.superstep import SuperstepRunner, truncate_plan
 
 
 def katz_centrality(
@@ -70,32 +64,23 @@ def katz_centrality(
     def init():
         return {"x": verts.select("id", F.lit(float(beta)).alias("val"))}
 
-    state, start_iter, _ = runner.resume_or_init(init)
-    x = state["x"]
+    def step(s, it, sc):
+        v = s["x"].hint("shuffle_hash")
+        contribs = edges.join(v, on=edges["src"] == v["id"], how="inner").select(
+            F.col("dst").alias("id"), F.col("val").alias("c")
+        )
+        # Union-before-agg density restore (pagerank.py pattern):
+        # vertices with no in-links surface with c=0 in the same
+        # single shuffle, so the affine map below stays dense.
+        return {"x": (
+            contribs.unionByName(verts.select("id", F.lit(0.0).alias("c")))
+            .groupBy("id")
+            .agg(
+                (F.lit(float(beta)) + F.lit(float(alpha)) * F.sum("c")).alias("val")
+            )
+        )}
 
-    with stable_partitions(spark):
-        for it in range(start_iter, fixed_iters):
-            t0 = time.time()
-            v = x.hint("shuffle_hash")
-            contribs = edges.join(v, on=edges["src"] == v["id"], how="inner").select(
-                F.col("dst").alias("id"), F.col("val").alias("c")
-            )
-            # Union-before-agg density restore (pagerank.py pattern):
-            # vertices with no in-links surface with c=0 in the same
-            # single shuffle, so the affine map below stays dense.
-            x = (
-                contribs.unionByName(verts.select("id", F.lit(0.0).alias("c")))
-                .groupBy("id")
-                .agg(
-                    (F.lit(float(beta)) + F.lit(float(alpha)) * F.sum("c")).alias("val")
-                )
-                .transform(truncate_plan)
-            )
-            state = runner.commit(
-                it, {"x": x}, metrics={"ms": (time.time() - t0) * 1000.0}
-            )
-            x = state["x"]
-
+    x = runner.iterate(init, step, iters=fixed_iters)[0]["x"]
     return x.select("id", F.col("val").alias("katz"))
 
 
@@ -134,36 +119,28 @@ def eigenvector_centrality(
     def init():
         return {"x": verts.select("id", F.lit(1.0).alias("val"))}
 
-    state, start_iter, _ = runner.resume_or_init(init)
-    x = state["x"]
+    def step(s, it, sc):
+        v = s["x"].hint("shuffle_hash")
+        contribs = edges.join(v, on=edges["src"] == v["id"], how="inner").select(
+            F.col("dst").alias("id"), F.col("val").alias("c")
+        )
+        # truncate the un-normalized vector BEFORE the norm: both
+        # the 1-row norm aggregate and the normalization read y, and
+        # without materialization each would re-execute the |E|-row
+        # join+agg (ReuseExchange is best-effort under AQE)
+        y = (
+            contribs.unionByName(verts.select("id", F.lit(0.0).alias("c")))
+            .groupBy("id")
+            .agg(F.sum("c").alias("val"))
+            .transform(truncate_plan)
+        )
+        nrm = y.agg(F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("nrm"))
+        return {"x": y.crossJoin(F.broadcast(nrm)).select(
+            "id",
+            F.when(F.col("nrm") > 0.0, F.col("val") / F.col("nrm"))
+            .otherwise(F.lit(0.0))
+            .alias("val"),
+        )}
 
-    with stable_partitions(spark):
-        for it in range(start_iter, fixed_iters):
-            t0 = time.time()
-            v = x.hint("shuffle_hash")
-            contribs = edges.join(v, on=edges["src"] == v["id"], how="inner").select(
-                F.col("dst").alias("id"), F.col("val").alias("c")
-            )
-            # truncate the un-normalized vector BEFORE the norm: both
-            # the 1-row norm aggregate and the normalization read y, and
-            # without materialization each would re-execute the |E|-row
-            # join+agg (ReuseExchange is best-effort under AQE)
-            y = (
-                contribs.unionByName(verts.select("id", F.lit(0.0).alias("c")))
-                .groupBy("id")
-                .agg(F.sum("c").alias("val"))
-                .transform(truncate_plan)
-            )
-            nrm = y.agg(F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("nrm"))
-            x = y.crossJoin(F.broadcast(nrm)).select(
-                "id",
-                F.when(F.col("nrm") > 0.0, F.col("val") / F.col("nrm"))
-                .otherwise(F.lit(0.0))
-                .alias("val"),
-            )
-            state = runner.commit(
-                it, {"x": x}, metrics={"ms": (time.time() - t0) * 1000.0}
-            )
-            x = state["x"]
-
+    x = runner.iterate(init, step, iters=fixed_iters)[0]["x"]
     return x.select("id", F.col("val").alias("eigen"))

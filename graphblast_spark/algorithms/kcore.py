@@ -18,14 +18,12 @@ rounds).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, stable_partitions, truncate_plan
+from graphblast_spark.runtime.superstep import SuperstepRunner, loop_width
 
 
 def k_core(
@@ -55,42 +53,30 @@ def k_core(
     def init():
         return {"remaining": g.vertices.select("id")}
 
-    state, start_iter, scalars = runner.resume_or_init(init)
-    remaining = state["remaining"]
-    # previous round's survivor count, carried across iterations (and
-    # through checkpoint resume) so each peel round costs exactly ONE
-    # action — the survivors count — instead of recounting `remaining`
-    n_prev = int(scalars["n"]) if "n" in scalars else None
+    def step(s, it, sc):
+        remaining = s["remaining"]
+        # degree within the remaining-induced subgraph
+        live = (
+            adj.join(remaining.withColumnRenamed("id", "src"), on="src", how="left_semi")
+            .join(remaining.withColumnRenamed("id", "dst"), on="dst", how="left_semi")
+        )
+        deg = live.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("d"))
+        return {"remaining": (
+            remaining.join(deg, on="id", how="left")
+            .filter(F.coalesce(F.col("d"), F.lit(0)) >= k)
+            .select("id")
+        )}
+
+    def converged(new, old, sc):
+        # the previous round's survivor count rides in the scalars (and
+        # through checkpoint resume), so each peel round costs exactly
+        # ONE action — the survivors count
+        n_prev = sc["n"] if "n" in sc else old["remaining"].count()
+        n_now = new["remaining"].count()
+        return {"n": n_now}, n_now == n_prev or n_now == 0
 
     max_rounds = fixed_rounds if fixed_rounds is not None else desc.max_niter
-    with stable_partitions(spark):
-        for it in range(start_iter, max_rounds):
-            t0 = time.time()
-            # degree within the remaining-induced subgraph
-            live = (
-                adj.join(remaining.withColumnRenamed("id", "src"), on="src", how="left_semi")
-                .join(remaining.withColumnRenamed("id", "dst"), on="dst", how="left_semi")
-            )
-            deg = live.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("d"))
-            survivors = (
-                remaining.join(deg, on="id", how="left")
-                .filter(F.coalesce(F.col("d"), F.lit(0)) >= k)
-                .select("id")
-                .transform(truncate_plan)
-            )
-            if n_prev is None:
-                n_prev = remaining.count()  # first round only
-            n_now = survivors.count()
-            remaining = survivors
-            state = runner.truncate({"remaining": remaining})
-            remaining = state["remaining"]
-            runner.commit(
-                it, state, scalars={"n": n_now},
-                metrics={"ms": (time.time() - t0) * 1000.0, "remaining": n_now},
-            )
-            if n_now == n_prev or n_now == 0:
-                break
-            n_prev = n_now
+    remaining = runner.iterate(init, step, iters=max_rounds, converged=converged)[0]["remaining"]
 
     out = g.vertices.join(
         remaining.withColumn("in_core", F.lit(1)), on="id", how="left"
@@ -140,13 +126,12 @@ def core_decomposition(
     e = g.edges.select(
         F.col("src").alias("a"), F.col("dst").alias("b")
     ).filter(F.col("a") != F.col("b"))
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # symmetric closure deduped with ONE distinct (mirror-then-dedup —
     # dedup-then-mirror would evaluate the distinct shuffle twice)
     adj = (
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
-        .repartition(n_part, "b")
+        .repartition(loop_width(spark), "b")
         .persist()
     )
     adj.count()
@@ -161,51 +146,46 @@ def core_decomposition(
             )
         }
 
-    state, start_iter, scalars = runner.resume_or_init(init)
-    core = state["core"]
-    prev = int(scalars["w"]) if "w" in scalars else _sum_witness(core, "c")
-
-    max_rounds = fixed_rounds if fixed_rounds is not None else desc.max_niter
     w = Window.partitionBy("id").orderBy(F.col("val").desc())
-    with stable_partitions(spark):
-        for it in range(start_iter, max_rounds):
-            t0 = time.time()
-            cd = core.select(F.col("id").alias("b"), F.col("c").alias("cb"))
-            cs = core.select(F.col("id").alias("a"), F.col("c").alias("ca"))
-            cnt = (
-                adj.join(cd, "b").join(cs, "a")
-                .groupBy(F.col("a").alias("id"),
-                         F.least("cb", "ca").alias("val"))
-                .agg(F.count(F.lit(1)).alias("n"))
-            )
-            h = (
-                cnt.withColumn("cum", F.sum("n").over(w))
-                .groupBy("id")
-                .agg(F.max(F.least(F.col("val"), F.col("cum"))).alias("h"))
-            )
-            new_core = core.join(h, "id", "left").select(
-                "id",
-                F.coalesce("h", F.lit(0)).cast("long").alias("c"),
-            ).transform(truncate_plan)
-            state = runner.truncate({"core": new_core})
-            new_core = state["core"]
-            cur = _sum_witness(new_core, "c")
-            core = new_core
-            runner.commit(
-                it, state, scalars={"w": cur},
-                metrics={"ms": (time.time() - t0) * 1000.0, "witness": cur},
-            )
-            if cur == prev and fixed_rounds is None:
-                break
-            prev = cur
-        else:
-            if fixed_rounds is None:
-                raise RuntimeError(
-                    f"core_decomposition did not converge within "
-                    f"max_niter={desc.max_niter} h-index rounds; raise "
-                    f"desc.max_niter (rounds needed is graph-dependent, "
-                    f"typically O(peel depth))"
-                )
+
+    def step(s, it, sc):
+        core = s["core"]
+        cd = core.select(F.col("id").alias("b"), F.col("c").alias("cb"))
+        cs = core.select(F.col("id").alias("a"), F.col("c").alias("ca"))
+        cnt = (
+            adj.join(cd, "b").join(cs, "a")
+            .groupBy(F.col("a").alias("id"),
+                     F.least("cb", "ca").alias("val"))
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+        h = (
+            cnt.withColumn("cum", F.sum("n").over(w))
+            .groupBy("id")
+            .agg(F.max(F.least(F.col("val"), F.col("cum"))).alias("h"))
+        )
+        return {"core": core.join(h, "id", "left").select(
+            "id",
+            F.coalesce("h", F.lit(0)).cast("long").alias("c"),
+        )}
+
+    def converged(new, old, sc):
+        prev = sc["w"] if "w" in sc else _sum_witness(old["core"], "c")
+        cur = _sum_witness(new["core"], "c")
+        return {"w": cur}, cur == prev
+
+    state, _, done = runner.iterate(
+        init, step,
+        iters=fixed_rounds if fixed_rounds is not None else desc.max_niter,
+        converged=None if fixed_rounds is not None else converged,
+    )
+    if fixed_rounds is None and not done:
+        raise RuntimeError(
+            f"core_decomposition did not converge within "
+            f"max_niter={desc.max_niter} h-index rounds; raise "
+            f"desc.max_niter (rounds needed is graph-dependent, "
+            f"typically O(peel depth))"
+        )
+    core = state["core"]
 
     adj.unpersist()
     return core.select("id", F.col("c").alias("coreness"))

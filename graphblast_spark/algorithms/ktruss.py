@@ -24,13 +24,11 @@ support (mxm_masked) per round.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, stable_partitions, truncate_plan
+from graphblast_spark.runtime.superstep import SuperstepRunner
 
 
 def _support(und: DataFrame) -> DataFrame:
@@ -82,41 +80,31 @@ def k_truss(
         runner = SuperstepRunner(spark)
 
     e = g.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    und = (
-        e.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-        .transform(truncate_plan)
-    )
-    n_edges = und.count()
+    und = e.select(
+        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+    ).distinct()
 
-    with stable_partitions(spark):
-        for rnd in range(max_rounds):
-            t0 = time.time()
-            if n_edges == 0:
-                break
-            sup = _support(und)
-            keep = sup.filter(F.col("support") >= k - 2).transform(truncate_plan)
-            n_keep = keep.count()
-            runner.commit(
-                rnd, {},
-                metrics={"edges": n_keep, "ms": (time.time() - t0) * 1000.0},
-            )
-            if n_keep == n_edges:
-                return keep
-            und = keep.select("a", "b")
-            n_edges = n_keep
-    if n_edges > 0:
+    def step(s, it, sc):
+        sup = _support(s["edges"].select("a", "b"))
+        return {"edges": sup.filter(F.col("support") >= k - 2)}
+
+    def converged(new, old, sc):
+        n_prev = sc["edges"] if "edges" in sc else old["edges"].count()
+        n_keep = new["edges"].count()
+        return {"edges": n_keep}, n_keep == n_prev or n_keep == 0
+
+    state, scalars, done = runner.iterate(
+        lambda: {"edges": und}, step, iters=max_rounds, converged=converged
+    )
+    if not done:
         # A pathological peel can remove one edge per round; silently
         # returning the empty frame here would misreport a non-empty
         # truss as empty. Fail loudly instead.
         raise RuntimeError(
             f"k_truss did not converge within max_rounds={max_rounds} "
-            f"({n_edges} edges still unsettled); raise max_rounds"
+            f"({scalars.get('edges', 'all')} edges still unsettled); raise max_rounds"
         )
-    # empty truss: preserve the output schema
-    return und.limit(0).withColumn("support", F.lit(0))
+    return state["edges"]
 
 
 def truss_decomposition(
@@ -197,54 +185,49 @@ def truss_decomposition(
             )
         }
 
-    state, start_iter, scalars = runner.resume_or_init(init)
-    t = state["t"]
-    prev = int(scalars["w"]) if "w" in scalars else _sum_witness(t, "t")
-
-    rounds = fixed_rounds if fixed_rounds is not None else max_rounds
     w = Window.partitionBy("ea", "eb").orderBy(F.col("val").desc())
-    with stable_partitions(spark):
-        for it in range(start_iter, rounds):
-            t0 = time.time()
-            te = t.select(F.col("a").alias("ea"), F.col("b").alias("eb"),
-                          F.col("t").alias("tself"))
-            tx = t.select(F.col("a").alias("xa"), F.col("b").alias("xb"),
-                          F.col("t").alias("t1"))
-            ty = t.select(F.col("a").alias("ya"), F.col("b").alias("yb"),
-                          F.col("t").alias("t2"))
-            cnt = (
-                tri.join(tx, ["xa", "xb"]).join(ty, ["ya", "yb"]).join(te, ["ea", "eb"])
-                .groupBy("ea", "eb",
-                         F.least("tself", F.least("t1", "t2")).alias("val"))
-                .agg(F.count(F.lit(1)).alias("n"))
-            )
-            h = (
-                cnt.withColumn("cum", F.sum("n").over(w))
-                .groupBy("ea", "eb")
-                .agg(F.max(F.least(F.col("val"), F.col("cum"))).alias("h"))
-                .select(F.col("ea").alias("a"), F.col("eb").alias("b"), "h")
-            )
-            new_t = und.join(h, ["a", "b"], "left").select(
-                "a", "b", F.coalesce("h", F.lit(0)).cast("long").alias("t")
-            ).transform(truncate_plan)
-            state = runner.truncate({"t": new_t})
-            new_t = state["t"]
-            cur = _sum_witness(new_t, "t")
-            t = new_t
-            runner.commit(
-                it, state, scalars={"w": cur},
-                metrics={"ms": (time.time() - t0) * 1000.0, "witness": cur},
-            )
-            if cur == prev and fixed_rounds is None:
-                break
-            prev = cur
-        else:
-            if fixed_rounds is None:
-                raise RuntimeError(
-                    f"truss_decomposition did not converge within "
-                    f"max_rounds={max_rounds} h-index rounds; raise "
-                    f"max_rounds"
-                )
+
+    def step(s, it, sc):
+        t = s["t"]
+        te = t.select(F.col("a").alias("ea"), F.col("b").alias("eb"),
+                      F.col("t").alias("tself"))
+        tx = t.select(F.col("a").alias("xa"), F.col("b").alias("xb"),
+                      F.col("t").alias("t1"))
+        ty = t.select(F.col("a").alias("ya"), F.col("b").alias("yb"),
+                      F.col("t").alias("t2"))
+        cnt = (
+            tri.join(tx, ["xa", "xb"]).join(ty, ["ya", "yb"]).join(te, ["ea", "eb"])
+            .groupBy("ea", "eb",
+                     F.least("tself", F.least("t1", "t2")).alias("val"))
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+        h = (
+            cnt.withColumn("cum", F.sum("n").over(w))
+            .groupBy("ea", "eb")
+            .agg(F.max(F.least(F.col("val"), F.col("cum"))).alias("h"))
+            .select(F.col("ea").alias("a"), F.col("eb").alias("b"), "h")
+        )
+        return {"t": und.join(h, ["a", "b"], "left").select(
+            "a", "b", F.coalesce("h", F.lit(0)).cast("long").alias("t")
+        )}
+
+    def converged(new, old, sc):
+        prev = sc["w"] if "w" in sc else _sum_witness(old["t"], "t")
+        cur = _sum_witness(new["t"], "t")
+        return {"w": cur}, cur == prev
+
+    state, _, done = runner.iterate(
+        init, step,
+        iters=fixed_rounds if fixed_rounds is not None else max_rounds,
+        converged=None if fixed_rounds is not None else converged,
+    )
+    if fixed_rounds is None and not done:
+        raise RuntimeError(
+            f"truss_decomposition did not converge within "
+            f"max_rounds={max_rounds} h-index rounds; raise "
+            f"max_rounds"
+        )
+    t = state["t"]
 
     tri.unpersist()
     und.unpersist()

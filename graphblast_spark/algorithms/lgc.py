@@ -21,15 +21,13 @@ pattern: work proportional to the frontier's edge boundary, not |E|).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
 from graphblast_spark.operators.vecmat import vxm
-from graphblast_spark.runtime.superstep import SuperstepRunner, stable_partitions
+from graphblast_spark.runtime.superstep import SuperstepRunner
 
 
 def lgc(
@@ -58,63 +56,58 @@ def lgc(
         p0 = spark.createDataFrame([], "id long, p double")
         return {"p": p0, "r": r0}
 
-    state, start_iter, _ = runner.resume_or_init(init)
-    p, r = state["p"], state["r"]
+    def frontier(r: DataFrame) -> DataFrame:
+        # classify r rows: frontier = r > d·eps (isolated/dangling
+        # sources have no deg row → treat d as 0 → any r>0 is frontier
+        # but has no edges to push along; matches reference dense-d=0)
+        rd = r.join(deg, on="id", how="left").select(
+            "id", "r", F.coalesce(F.col("val"), F.lit(0.0)).alias("d")
+        )
+        return rd.filter(F.col("r") > F.col("d") * F.lit(eps))
+
+    def step(s, it, sc):
+        p, r = s["p"], s["r"]
+        f = frontier(r)
+        # frontier size = the previous superstep's convergence scalar
+        # (reduce succ, lgc.hpp:137); counted here only on a fresh start
+        n_f = sc["succ"] if "succ" in sc else f.count()
+        if n_f == 0:
+            return None
+
+        # p += α·r on frontier (outer-merge: off-frontier p kept)
+        p = (
+            p.join(f.select("id", "r"), on="id", how="full")
+            .select(
+                "id",
+                (F.coalesce("p", F.lit(0.0))
+                 + F.lit(alpha) * F.coalesce("r", F.lit(0.0))).alias("p"),
+            )
+        )
+
+        # halved residual on frontier; r2 = r/d on frontier
+        f_push = f.filter(F.col("d") > 0).select(
+            "id", (F.lit((1.0 - alpha) / 2.0) * F.col("r") / F.col("d")).alias("val")
+        )
+
+        # r ⟵ (old r with frontier rows halved) accum(+)= Aᵀ·r2 —
+        # the reference's accum-mxv (lgc.hpp:126-128), first-class:
+        # vxm handles push/pull by u_nvals vs switchpoint and merges
+        # into the old vector with accum="plus" (operators/accum.py).
+        r_kept = r.join(f.select("id"), on="id", how="left_anti")
+        r_half = f.select("id", (F.lit((1.0 - alpha) / 2.0) * F.col("r")).alias("r"))
+        r_base = r_kept.unionByName(r_half).select("id", F.col("r").alias("val"))
+        r = vxm(
+            f_push, g, "PlusMultiplies", desc=desc, u_nvals=n_f,
+            accum="plus", w=r_base,
+        ).select("id", F.col("val").alias("r"))
+        return {"p": p, "r": r}
+
+    def converged(new, old, sc):
+        n_f = frontier(new["r"]).count()
+        return {"succ": n_f}, n_f == 0
 
     niter = fixed_iters if fixed_iters is not None else desc.max_niter
-    with stable_partitions(spark):
-        for it in range(start_iter, niter):
-            t0 = time.time()
-            # classify r rows: frontier = r > d·eps (isolated/dangling
-            # sources have no deg row → treat d as 0 → any r>0 is frontier
-            # but has no edges to push along; matches reference dense-d=0)
-            rd = r.join(deg, on="id", how="left").select(
-                "id", "r", F.coalesce(F.col("val"), F.lit(0.0)).alias("d")
-            )
-            f = rd.filter(F.col("r") > F.col("d") * F.lit(eps)).persist()
-            n_f = f.count()  # superstep action (reduce succ, lgc.hpp:137)
-            if n_f == 0:
-                f.unpersist()
-                runner.commit(
-                    it, {"p": p, "r": r}, scalars={"succ": 0}, metrics={"ms": 0.0}
-                )
-                break
-
-            # p += α·r on frontier (outer-merge: off-frontier p kept)
-            p = (
-                p.join(f.select("id", "r"), on="id", how="full")
-                .select(
-                    "id",
-                    (F.coalesce("p", F.lit(0.0))
-                     + F.lit(alpha) * F.coalesce("r", F.lit(0.0))).alias("p"),
-                )
-            )
-
-            # halved residual on frontier; r2 = r/d on frontier
-            f_push = f.filter(F.col("d") > 0).select(
-                "id", (F.lit((1.0 - alpha) / 2.0) * F.col("r") / F.col("d")).alias("val")
-            )
-            bcast = n_f / max(g.n, 1) <= desc.switchpoint
-
-            # r ⟵ (old r with frontier rows halved) accum(+)= Aᵀ·r2 —
-            # the reference's accum-mxv (lgc.hpp:126-128), first-class:
-            # vxm handles push/pull by u_nvals vs switchpoint and merges
-            # into the old vector with accum="plus" (operators/accum.py).
-            r_kept = r.join(f.select("id"), on="id", how="left_anti")
-            r_half = f.select("id", (F.lit((1.0 - alpha) / 2.0) * F.col("r")).alias("r"))
-            r_base = r_kept.unionByName(r_half).select("id", F.col("r").alias("val"))
-            r = vxm(
-                f_push, g, "PlusMultiplies", desc=desc, u_nvals=n_f,
-                accum="plus", w=r_base,
-            ).select("id", F.col("val").alias("r"))
-            state = runner.truncate({"p": p, "r": r})
-            p, r = state["p"], state["r"]
-            f.unpersist()
-            runner.commit(
-                it, state, scalars={"succ": n_f},
-                metrics={"ms": (time.time() - t0) * 1000.0,
-                         "frontier": n_f, "direction": "push" if bcast else "pull"},
-            )
+    p = runner.iterate(init, step, iters=niter, converged=converged)[0]["p"]
 
     deg.unpersist()
     return p.filter(F.col("p") > 0)

@@ -46,8 +46,6 @@ the standard synchronous-parallel reformulation.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -55,8 +53,7 @@ from graphblast_spark.matrix import Graph
 from graphblast_spark.runtime.superstep import (
     SuperstepRunner,
     child_runner,
-    scaled_partition_count,
-    stable_partitions,
+    loop_width,
     truncate_plan,
 )
 
@@ -185,7 +182,6 @@ def louvain(
     mapping = g.vertices.select("id", F.col("id").alias("community"))
 
     for lvl in range(levels):
-        lrun = child_runner(runner, spark, f"level{lvl}")
         und = und.persist()
         n_edges = und.count()
         if n_edges == 0:
@@ -195,93 +191,85 @@ def louvain(
         # (sym = 2|E| rows) — at sandbox scale the 4-shuffle move
         # round otherwise schedules hundreds of near-empty tasks per
         # superstep (the scc.py lesson); a no-op at real data volumes.
-        width = scaled_partition_count(spark, 2 * n_edges)
-        with stable_partitions(spark, width):
-            nondiag = und.filter(F.col("a") != F.col("b"))
-            sym = (
-                nondiag.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w")
-                .unionByName(
-                    nondiag.select(
-                        F.col("b").alias("src"), F.col("a").alias("dst"), "w"
-                    )
+        width = loop_width(spark, 2 * n_edges)
+        nondiag = und.filter(F.col("a") != F.col("b"))
+        sym = (
+            nondiag.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w")
+            .unionByName(
+                nondiag.select(
+                    F.col("b").alias("src"), F.col("a").alias("dst"), "w"
                 )
-                .persist()
             )
-            deg = (
-                sym.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("d1"))
-                .unionByName(
-                    und.filter(F.col("a") == F.col("b")).select(
-                        F.col("a").alias("id"), (F.lit(2.0) * F.col("w")).alias("d1")
-                    )
+            .persist()
+        )
+        deg = (
+            sym.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("d1"))
+            .unionByName(
+                und.filter(F.col("a") == F.col("b")).select(
+                    F.col("a").alias("id"), (F.lit(2.0) * F.col("w")).alias("d1")
                 )
-                .groupBy("id")
-                .agg(F.sum("d1").alias("deg"))
-                .persist()
             )
-            m2 = float(deg.agg(F.sum("deg")).first()[0] or 0.0)
-            if m2 <= 0.0:
-                und.unpersist(); sym.unpersist(); deg.unpersist()
-                break
+            .groupBy("id")
+            .agg(F.sum("d1").alias("deg"))
+            .repartition(width, "id")
+            .persist()
+        )
+        m2 = float(deg.agg(F.sum("deg")).first()[0] or 0.0)
+        if m2 <= 0.0:
+            und.unpersist(); sym.unpersist(); deg.unpersist()
+            break
 
-            state, start_iter, scalars = lrun.resume_or_init(
-                lambda: {"comm": deg.select("id", F.col("id").alias("comm"))}
-            )
-            comm = state["comm"]
-            zero_streak = 0
-            # level_moved is checkpointed (cumulative) so a resumed run
-            # takes the same contraction decision as an uninterrupted
-            # one — an in-memory counter reset to 0 by resume would
-            # silently skip level lvl+1 and return a coarser partition
-            level_moved = int(scalars.get("level_moved", 0))
-            for it in range(start_iter, move_rounds):
-                t0 = time.time()
-                nxt = _move_round(sym, deg, comm, m2, it % 2).transform(
-                    truncate_plan
-                )
-                movers = nxt.join(
-                    comm.withColumnRenamed("comm", "prev"), "id"
-                ).filter(F.col("comm") != F.col("prev")).count()
-                level_moved += movers
-                state = lrun.commit(
-                    it, {"comm": nxt},
-                    scalars={"movers": movers, "level_moved": level_moved},
-                    metrics={"ms": (time.time() - t0) * 1000.0},
-                )
-                comm = state["comm"]
-                zero_streak = zero_streak + 1 if movers == 0 else 0
-                if zero_streak >= 2:
-                    break
+        def step(s, it, sc):
+            return {"comm": _move_round(sym, deg, s["comm"], m2, it % 2)}
 
-            cm = comm.select(F.col("id").alias("v"), F.col("comm").alias("cv"))
-            # LEFT join + coalesce: isolated vertices (in g.vertices
-            # but no edges, hence absent from deg/comm) keep their own
-            # singleton community instead of dropping out of the output
-            mapping = (
-                mapping.join(cm, mapping["community"] == cm["v"], "left")
+        def converged(new, old, sc):
+            movers = new["comm"].join(
+                old["comm"].withColumnRenamed("comm", "prev"), "id"
+            ).filter(F.col("comm") != F.col("prev")).count()
+            # level_moved and the zero-move streak ride in the scalars,
+            # so a resumed run takes the same stop and contraction
+            # decisions as an uninterrupted one
+            streak = sc.get("zero_streak", 0) + 1 if movers == 0 else 0
+            return {
+                "movers": movers,
+                "level_moved": sc.get("level_moved", 0) + movers,
+                "zero_streak": streak,
+            }, streak >= 2
+
+        state, scalars, _ = child_runner(runner, spark, f"level{lvl}").iterate(
+            lambda: {"comm": deg.select("id", F.col("id").alias("comm"))},
+            step, iters=move_rounds, converged=converged, width=width,
+        )
+        cm = state["comm"].select(F.col("id").alias("v"), F.col("comm").alias("cv"))
+        # LEFT join + coalesce: isolated vertices (in g.vertices
+        # but no edges, hence absent from deg/comm) keep their own
+        # singleton community instead of dropping out of the output
+        mapping = (
+            mapping.join(cm, mapping["community"] == cm["v"], "left")
+            .select(
+                "id",
+                F.coalesce("cv", F.col("community")).alias("community"),
+            )
+            .transform(truncate_plan)
+        )
+        # Contract only when another level will consume it: at the
+        # final level (or a zero-move fixpoint, where coarser
+        # levels cannot move either) the contracted graph is dead
+        # work.
+        contracted = None
+        if lvl < levels - 1 and scalars.get("level_moved", 0) > 0:
+            contracted = (
+                und.join(cm.withColumnRenamed("v", "a").withColumnRenamed("cv", "ca"), "a")
+                .join(cm.withColumnRenamed("v", "b").withColumnRenamed("cv", "cb"), "b")
                 .select(
-                    "id",
-                    F.coalesce("cv", F.col("community")).alias("community"),
+                    F.least("ca", "cb").alias("a"),
+                    F.greatest("ca", "cb").alias("b"),
+                    "w",
                 )
+                .groupBy("a", "b")
+                .agg(F.sum("w").alias("w"))
                 .transform(truncate_plan)
             )
-            # Contract only when another level will consume it: at the
-            # final level (or a zero-move fixpoint, where coarser
-            # levels cannot move either) the contracted graph is dead
-            # work.
-            contracted = None
-            if lvl < levels - 1 and level_moved > 0:
-                contracted = (
-                    und.join(cm.withColumnRenamed("v", "a").withColumnRenamed("cv", "ca"), "a")
-                    .join(cm.withColumnRenamed("v", "b").withColumnRenamed("cv", "cb"), "b")
-                    .select(
-                        F.least("ca", "cb").alias("a"),
-                        F.greatest("ca", "cb").alias("b"),
-                        "w",
-                    )
-                    .groupBy("a", "b")
-                    .agg(F.sum("w").alias("w"))
-                    .transform(truncate_plan)
-                )
         und.unpersist(); sym.unpersist(); deg.unpersist()
         if contracted is None:
             break

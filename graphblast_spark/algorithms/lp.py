@@ -3,11 +3,11 @@
 The reference has no LP (SURVEY §2.9) — the north rule requires it.
 Two deterministic variants:
 
-- ``label_propagation_min``: synchronous min-label diffusion over the
-  undirected graph — the reference's CC-convergent analog (composition
-  of its vxm-with-MinimumSelectSecond pattern, cc.hpp:78): converges to
-  the same partition as connected components; kept as the
-  SQL-oracle-checkable LP.
+- ``label_propagation_min``: min-label diffusion over the undirected
+  graph (the reference's vxm-with-MinimumSelectSecond pattern,
+  cc.hpp:78). Its fixpoint is the connected-components partition with
+  component-min labels, so it runs as :func:`connected_components`;
+  kept as the SQL-oracle-checkable LP.
 
 - ``label_propagation_majority``: synchronous majority vote with the
   deterministic tiebreak (highest neighbor-label count, ties → smallest
@@ -24,27 +24,13 @@ the label dimension first, the classic salting-by-natural-subkey.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphblast_spark.algorithms.cc import connected_components
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, stable_partitions, truncate_plan
-
-
-def _sym(g: Graph) -> DataFrame:
-    # Deduped symmetrized view: when both (a,b) and (b,a) existed in the
-    # directed input, the mirrored union would double them — harmless
-    # under min (CC) but it corrupts majority VOTE COUNTS, so dedup here.
-    # Layout pinned on dst (the per-superstep join key) so only the
-    # small label table shuffles each iteration.
-    e = g.edges.select("src", "dst")
-    n_part = int(g.edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().repartition(n_part, "dst")
+from graphblast_spark.runtime.superstep import SuperstepRunner, loop_width
 
 
 def label_propagation_min(
@@ -53,47 +39,12 @@ def label_propagation_min(
     runner: SuperstepRunner | None = None,
 ) -> DataFrame:
     """Min-label fixpoint: label'(u) = min(label(u), min_{v∈N(u)} label(v)).
-    Returns (id, label) = CC partition with component-min labels."""
-    spark = g.edges.sparkSession
-    e_sym = _sym(g).persist()
-    e_sym.count()
-    if runner is None:
-        runner = SuperstepRunner(spark)
-
-    state, start_iter, _ = runner.resume_or_init(
-        lambda: {"labels": g.vertices.select("id", F.col("id").alias("val"))}
+    Returns (id, label) = CC partition with component-min labels — the
+    fixpoint :func:`connected_components` reaches in O(log) supersteps
+    with hooking and pointer jumping, so this is that call renamed."""
+    return connected_components(g, desc=desc, runner=runner).select(
+        "id", F.col("component").alias("label")
     )
-    labels = state["labels"]
-    with stable_partitions(spark):
-        for it in range(start_iter, desc.max_niter):
-            t0 = time.time()
-            lb = labels.hint("shuffle_hash")
-            nbr = (
-                e_sym.join(lb, on=e_sym["dst"] == lb["id"])
-                .groupBy(e_sym["src"].alias("id"))
-                .agg(F.min(lb["val"]).alias("nmin"))
-            )
-            new_labels = labels.join(nbr, on="id", how="left").select(
-                "id", F.least(F.col("val"), F.coalesce("nmin", "val")).alias("val")
-            ).transform(truncate_plan)
-            # monotone min labels: Σ label unchanged ⟺ fixpoint —
-            # summed as decimal(38,0) so the witness stays exact past
-            # int64 (10^12 ids × 10^12 labels ≈ 10^24 would wrap and a
-            # wrapped collision could fake convergence)
-            label_sum = int(
-                new_labels.agg(F.sum(F.col("val").cast("decimal(38,0)"))).first()[0]
-            )
-            changed = None if it == start_iter else (label_sum != prev_sum)
-            prev_sum = label_sum
-            state = runner.commit(
-                it, {"labels": new_labels}, scalars={"label_sum": label_sum},
-                metrics={"ms": (time.time() - t0) * 1000.0},
-            )
-            labels = state["labels"]
-            if changed is False:
-                break
-    e_sym.unpersist()
-    return labels.select("id", F.col("val").alias("label"))
 
 
 def label_propagation_majority(
@@ -104,41 +55,47 @@ def label_propagation_majority(
     """Majority LP for exactly ``iters`` synchronous supersteps.
     Returns (id, label)."""
     spark = g.edges.sparkSession
-    e_sym = _sym(g).persist()
+    # Deduped symmetrized view: when both (a,b) and (b,a) existed in the
+    # directed input, the mirrored union would double them — it would
+    # corrupt the VOTE COUNTS, so dedup here. Layout pinned on dst (the
+    # per-superstep join key) so only the small label table shuffles
+    # each iteration.
+    e = g.edges.select("src", "dst")
+    e_sym = e.unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct().repartition(loop_width(spark), "dst").persist()
     e_sym.count()
     if runner is None:
         runner = SuperstepRunner(spark)
 
-    state, start_iter, _ = runner.resume_or_init(
-        lambda: {"labels": g.vertices.select("id", F.col("id").alias("val"))}
+    def step(s, it, sc):
+        labels = s["labels"]
+        lb = labels.hint("shuffle_hash")
+        votes = (
+            e_sym.join(lb, on=e_sym["dst"] == lb["id"])
+            .groupBy(e_sym["src"].alias("id"), lb["val"].alias("lbl"))
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        # argmax by (cnt desc, lbl asc) as an aggregated max over
+        # (cnt, -lbl) — a hash agg with map-side partial combine,
+        # replacing a row_number window whose per-id sort shuffle
+        # was the one sort left in the superstep (the window also
+        # blocked AQE from reusing the votes exchange)
+        winner = (
+            votes.groupBy("id")
+            .agg(F.max(F.struct(F.col("cnt").alias("c"), (-F.col("lbl")).alias("nl"))).alias("b"))
+            .select("id", (-F.col("b.nl")).alias("new"))
+        )
+        return {"labels": labels.join(winner, on="id", how="left").select(
+            "id", F.coalesce("new", "val").alias("val")
+        )}
+
+    state, _, _ = runner.iterate(
+        lambda: {"labels": g.vertices.select("id", F.col("id").alias("val"))},
+        step, iters=iters,
     )
-    labels = state["labels"]
-    with stable_partitions(spark):
-        for it in range(start_iter, iters):
-            t0 = time.time()
-            lb = labels.hint("shuffle_hash")
-            votes = (
-                e_sym.join(lb, on=e_sym["dst"] == lb["id"])
-                .groupBy(e_sym["src"].alias("id"), lb["val"].alias("lbl"))
-                .agg(F.count(F.lit(1)).alias("cnt"))
-            )
-            # argmax by (cnt desc, lbl asc) as an aggregated max over
-            # (cnt, -lbl) — a hash agg with map-side partial combine,
-            # replacing a row_number window whose per-id sort shuffle
-            # was the one sort left in the superstep (the window also
-            # blocked AQE from reusing the votes exchange)
-            winner = (
-                votes.groupBy("id")
-                .agg(F.max(F.struct(F.col("cnt").alias("c"), (-F.col("lbl")).alias("nl"))).alias("b"))
-                .select("id", (-F.col("b.nl")).alias("new"))
-            )
-            new_labels = labels.join(winner, on="id", how="left").select(
-                "id", F.coalesce("new", "val").alias("val")
-            ).transform(truncate_plan)
-            state = runner.commit(it, {"labels": new_labels}, metrics={"ms": (time.time() - t0) * 1000.0})
-            labels = state["labels"]
     e_sym.unpersist()
-    return labels.select("id", F.col("val").alias("label"))
+    return state["labels"].select("id", F.col("val").alias("label"))
 
 
 def community_modularity(g: Graph, labels: DataFrame, label_col: str = "label") -> DataFrame:

@@ -35,19 +35,12 @@ one live-count action per round.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.algorithms.walks import _A_ID, _A_STEP, _MOD
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import (
-    SuperstepRunner,
-    scaled_partition_count,
-    stable_partitions,
-    truncate_plan,
-)
+from graphblast_spark.runtime.superstep import SuperstepRunner, loop_width, truncate_plan
 
 
 def _edge_struct():
@@ -86,8 +79,7 @@ def maximal_matching(
         .distinct()
         .persist()
     )
-    n_edges = und0.count()
-    width = scaled_partition_count(spark, max(n_edges, 1))
+    width = loop_width(spark, max(und0.count(), 1))
 
     def init():
         return {
@@ -95,62 +87,52 @@ def maximal_matching(
             "matched": und0.limit(0).select("a", "b"),
         }
 
-    state, start_iter, _ = runner.resume_or_init(init)
-    live, matched = state["live"], state["matched"]
-    n_rounds = fixed_rounds if fixed_rounds is not None else max_rounds
-
-    try:
-      with stable_partitions(spark, width):
-        for rnd in range(start_iter, n_rounds):
-            t0 = time.time()
-            n_live = live.count()
-            if n_live == 0:
-                runner.commit(
-                    rnd, {"live": live, "matched": matched},
-                    scalars={"live": 0},
-                )
-                break
-            pe = live.select("a", "b", _edge_struct().alias("e"))
-            choice = (
-                pe.select(F.col("a").alias("v"), "e")
-                .unionByName(pe.select(F.col("b").alias("v"), "e"))
-                .groupBy("v")
-                .agg(F.min("e").alias("pick"))
-            )
-            ca = choice.select(F.col("v").alias("a"), F.col("pick").alias("pa"))
-            cb = choice.select(F.col("v").alias("b"), F.col("pick").alias("pb"))
-            mutual = (
-                pe.join(ca.hint("shuffle_hash"), "a")
-                .join(cb.hint("shuffle_hash"), "b")
-                .filter((F.col("pa") == F.col("e")) & (F.col("pb") == F.col("e")))
-                .select("a", "b")
-                .transform(truncate_plan)
-            )
-            matched = matched.unionByName(mutual)
-            mva = (
-                mutual.select(F.col("a").alias("va"))
-                .unionByName(mutual.select(F.col("b").alias("va")))
-            )
-            mvb = mva.select(F.col("va").alias("vb"))
-            live = (
+    def step(s, it, sc):
+        live, matched = s["live"], s["matched"]
+        if live.isEmpty():
+            return None
+        pe = live.select("a", "b", _edge_struct().alias("e"))
+        choice = (
+            pe.select(F.col("a").alias("v"), "e")
+            .unionByName(pe.select(F.col("b").alias("v"), "e"))
+            .groupBy("v")
+            .agg(F.min("e").alias("pick"))
+        )
+        ca = choice.select(F.col("v").alias("a"), F.col("pick").alias("pa"))
+        cb = choice.select(F.col("v").alias("b"), F.col("pick").alias("pb"))
+        mutual = (
+            pe.join(ca.hint("shuffle_hash"), "a")
+            .join(cb.hint("shuffle_hash"), "b")
+            .filter((F.col("pa") == F.col("e")) & (F.col("pb") == F.col("e")))
+            .select("a", "b")
+            .transform(truncate_plan)
+        )
+        mva = (
+            mutual.select(F.col("a").alias("va"))
+            .unionByName(mutual.select(F.col("b").alias("va")))
+        )
+        mvb = mva.select(F.col("va").alias("vb"))
+        return {
+            "live": (
                 live.join(mva.hint("shuffle_hash"),
                           F.col("a") == F.col("va"), "left_anti")
                 .join(mvb.hint("shuffle_hash"),
                       F.col("b") == F.col("vb"), "left_anti")
-                .transform(truncate_plan)
+            ),
+            "matched": matched.unionByName(mutual),
+        }
+
+    try:
+        state, _, done = runner.iterate(
+            init, step,
+            iters=fixed_rounds if fixed_rounds is not None else max_rounds,
+            width=width,
+        )
+        if fixed_rounds is None and not done and state["live"].head(1):
+            raise RuntimeError(
+                f"maximal_matching did not converge within "
+                f"max_rounds={max_rounds}"
             )
-            state = runner.commit(
-                rnd, {"live": live, "matched": matched},
-                scalars={"live": n_live},
-                metrics={"ms": (time.time() - t0) * 1000.0},
-            )
-            live, matched = state["live"], state["matched"]
-        else:
-            if fixed_rounds is None and live.head(1):
-                raise RuntimeError(
-                    f"maximal_matching did not converge within "
-                    f"max_rounds={max_rounds}"
-                )
     finally:
         und0.unpersist()
-    return matched
+    return state["matched"]

@@ -32,14 +32,12 @@ zero ≡ row removal from the sparse candidate set, SURVEY §2.4).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, stable_partitions, truncate_plan
+from graphblast_spark.runtime.superstep import SuperstepRunner, truncate_plan
 
 _LCG_A = 1103515245
 _LCG_B = 12345
@@ -52,6 +50,30 @@ def lcg_weight(col, round_: int = 0):
     return F.pmod(
         col * F.lit(_LCG_A) + F.lit(_LCG_B * (round_ + 1)), F.lit(_MERSENNE31)
     ) + F.lit(1)
+
+
+def local_maxima(adj: DataFrame, cand: DataFrame) -> DataFrame:
+    """(id) of the candidates whose (weight, id) beats every candidate
+    neighbor's — no candidate neighbor → m null → winner. m(v) = max
+    (weight, id) among still-candidate neighbors (vxm
+    MaximumMultiplies, mis.hpp:64-65); the id component breaks
+    LCG-weight ties for ids ≥ 2^31−1 (struct max/> is lexicographic,
+    so tie-free graphs are unaffected). Two adjacent candidates can
+    never both win."""
+    c2 = cand.select(F.col("id").alias("nid"), F.col("w").alias("nw"))
+    m = (
+        adj.join(c2, on=adj["src"] == c2["nid"], how="inner")
+        .groupBy(F.col("dst").alias("id"))
+        .agg(F.max(F.struct(F.col("nw").alias("w"), F.col("nid").alias("i"))).alias("m"))
+    )
+    return (
+        cand.join(m, on="id", how="left")
+        .filter(
+            F.col("m").isNull()
+            | (F.struct(F.col("w").alias("w"), F.col("id").alias("i")) > F.col("m"))
+        )
+        .select("id")
+    )
 
 
 def mis(
@@ -83,59 +105,25 @@ def mis(
         members = spark.createDataFrame([], "id long")
         return {"cand": cand, "members": members}
 
-    state, start_iter, _ = runner.resume_or_init(init)
-    cand, members = state["cand"], state["members"]
+    def step(s, it, sc):
+        cand, members = s["cand"], s["members"]
+        winners = local_maxima(adj, cand).transform(truncate_plan)
+        if winners.isEmpty():
+            return None
+        # remove winners and their neighbors from candidates
+        # (masked assign-to-zero ×2, mis.hpp:72-83, 86-91)
+        nbrs = (
+            adj.join(winners, on=adj["src"] == winners["id"], how="left_semi")
+            .select(F.col("dst").alias("id"))
+            .distinct()
+        )
+        return {
+            "cand": cand.join(winners, on="id", how="left_anti").join(nbrs, on="id", how="left_anti"),
+            "members": members.unionByName(winners),
+        }
 
     max_rounds = fixed_rounds if fixed_rounds is not None else desc.max_niter
-    with stable_partitions(spark):
-        for it in range(start_iter, max_rounds):
-            t0 = time.time()
-            # m(v) = max (weight, id) among still-candidate neighbors
-            # (vxm MaximumMultiplies, mis.hpp:64-65); the id component
-            # breaks LCG-weight ties for ids ≥ 2^31−1 (struct max/> is
-            # lexicographic, so tie-free graphs are unaffected)
-            c2 = cand.select(F.col("id").alias("nid"), F.col("w").alias("nw"))
-            m = (
-                adj.join(c2, on=adj["src"] == c2["nid"], how="inner")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.max(F.struct(F.col("nw").alias("w"), F.col("nid").alias("i"))).alias("m"))
-            )
-            # winners: candidates whose (weight, id) beats every candidate
-            # neighbor's (no candidate neighbor → m null → winner)
-            winners = (
-                cand.join(m, on="id", how="left")
-                .filter(
-                    F.col("m").isNull()
-                    | (F.struct(F.col("w").alias("w"), F.col("id").alias("i")) > F.col("m"))
-                )
-                .select("id")
-            )
-            winners = winners.transform(truncate_plan)  # superstep action
-            n_new = winners.count()
-            if n_new == 0:
-                runner.commit(
-                    it, {"cand": cand, "members": members},
-                    scalars={"succ": 0}, metrics={"ms": 0.0},
-                )
-                break
-            members = members.unionByName(winners)
-            # remove winners and their neighbors from candidates
-            # (masked assign-to-zero ×2, mis.hpp:72-83, 86-91)
-            nbrs = (
-                adj.join(winners, on=adj["src"] == winners["id"], how="left_semi")
-                .select(F.col("dst").alias("id"))
-                .distinct()
-            )
-            cand = (
-                cand.join(winners, on="id", how="left_anti")
-                .join(nbrs, on="id", how="left_anti")
-            )
-            state = runner.truncate({"cand": cand, "members": members})
-            cand, members = state["cand"], state["members"]
-            runner.commit(
-                it, state, scalars={"succ": n_new},
-                metrics={"ms": (time.time() - t0) * 1000.0, "new_members": n_new},
-            )
+    members = runner.iterate(init, step, iters=max_rounds)[0]["members"]
 
     out = g.vertices.join(
         members.withColumn("in_mis", F.lit(1)), on="id", how="left"

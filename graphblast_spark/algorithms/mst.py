@@ -33,18 +33,11 @@ convergence in pytest and round 1 is SQL-oracle-replayable
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import (
-    SuperstepRunner,
-    scaled_partition_count,
-    stable_partitions,
-    truncate_plan,
-)
+from graphblast_spark.runtime.superstep import SuperstepRunner, loop_width, truncate_plan
 
 
 def _canonical_weighted(edges: DataFrame) -> DataFrame:
@@ -78,8 +71,7 @@ def minimum_spanning_forest(
     from graphblast_spark.algorithms.cc import connected_components
 
     und = _canonical_weighted(g.edges).persist()
-    n_edges = und.count()
-    width = scaled_partition_count(spark, max(n_edges, 1))
+    width = loop_width(spark, max(und.count(), 1))
 
     def init():
         return {
@@ -93,77 +85,64 @@ def minimum_spanning_forest(
             "forest": und.limit(0).select("a", "b", "w"),
         }
 
-    state, start_iter, _ = runner.resume_or_init(init)
-    comp, forest = state["comp"], state["forest"]
-
-    try:
-      with stable_partitions(spark, width):
-        for rnd in range(start_iter, max_rounds):
-            t0 = time.time()
-            la = comp.select(F.col("id").alias("a"), F.col("comp").alias("ca"))
-            lb = comp.select(F.col("id").alias("b"), F.col("comp").alias("cb"))
-            cross = (
-                und.join(la.hint("shuffle_hash"), "a")
-                .join(lb.hint("shuffle_hash"), "b")
-                .filter(F.col("ca") != F.col("cb"))
-                .persist()
+    def step(s, it, sc):
+        comp, forest = s["comp"], s["forest"]
+        la = comp.select(F.col("id").alias("a"), F.col("comp").alias("ca"))
+        lb = comp.select(F.col("id").alias("b"), F.col("comp").alias("cb"))
+        cross = (
+            und.join(la.hint("shuffle_hash"), "a")
+            .join(lb.hint("shuffle_hash"), "b")
+            .filter(F.col("ca") != F.col("cb"))
+            .persist()
+        )
+        # each side's component nominates the edge; min by (w,a,b).
+        # ca/cb ride as trailing struct fields (the (w,a,b) prefix
+        # alone decides the min, so the tie-break is unchanged) so
+        # pair_edges below is a pure projection instead of two
+        # more label joins per round.
+        sel = (
+            cross.select(F.col("ca").alias("c"), "w", "a", "b", "ca", "cb")
+            .unionByName(
+                cross.select(F.col("cb").alias("c"), "w", "a", "b", "ca", "cb")
             )
-            n_cross = cross.count()
-            if n_cross == 0:
-                cross.unpersist()
-                runner.commit(
-                    rnd, {"comp": comp, "forest": forest},
-                    scalars={"cross": 0},
-                )
-                break
-            # each side's component nominates the edge; min by (w,a,b).
-            # ca/cb ride as trailing struct fields (the (w,a,b) prefix
-            # alone decides the min, so the tie-break is unchanged) so
-            # pair_edges below is a pure projection instead of two
-            # more label joins per round.
-            sel = (
-                cross.select(F.col("ca").alias("c"), "w", "a", "b", "ca", "cb")
-                .unionByName(
-                    cross.select(F.col("cb").alias("c"), "w", "a", "b", "ca", "cb")
-                )
-                .groupBy("c")
-                .agg(F.min(F.struct("w", "a", "b", "ca", "cb")).alias("e"))
-                .select(F.col("e.a").alias("a"), F.col("e.b").alias("b"),
-                        F.col("e.w").alias("w"),
-                        F.col("e.ca").alias("ca"), F.col("e.cb").alias("cb"))
-                .distinct()
-                .transform(truncate_plan)
-            )
-            forest = forest.unionByName(sel.select("a", "b", "w"))
-            # union step: CC over the selected component-pair graph
-            pair_edges = sel.select(
-                F.col("ca").alias("src"), F.col("cb").alias("dst"),
-                F.lit(1.0).alias("val"),
-            )
-            cg = Graph.build(pair_edges, symmetrize=True)
-            merged = connected_components(cg)  # (id=old comp, component=new)
-            cg.unpersist()
-            comp = (
+            .groupBy("c")
+            .agg(F.min(F.struct("w", "a", "b", "ca", "cb")).alias("e"))
+            .select(F.col("e.a").alias("a"), F.col("e.b").alias("b"),
+                    F.col("e.w").alias("w"),
+                    F.col("e.ca").alias("ca"), F.col("e.cb").alias("cb"))
+            .distinct()
+            .transform(truncate_plan)
+        )
+        cross.unpersist()
+        if sel.isEmpty():  # no crossing edge left: the forest is spanning
+            return None
+        # union step: CC over the selected component-pair graph
+        pair_edges = sel.select(
+            F.col("ca").alias("src"), F.col("cb").alias("dst"),
+            F.lit(1.0).alias("val"),
+        )
+        cg = Graph.build(pair_edges, symmetrize=True)
+        merged = connected_components(cg)  # (id=old comp, component=new)
+        cg.unpersist()
+        return {
+            "comp": (
                 comp.join(
                     merged.select(F.col("id").alias("comp"),
                                   F.col("component").alias("nc")).hint("shuffle_hash"),
                     "comp", "left",
                 )
                 .select("id", F.coalesce("nc", "comp").alias("comp"))
-                .transform(truncate_plan)
-            )
-            cross.unpersist()
-            state = runner.commit(
-                rnd, {"comp": comp, "forest": forest},
-                scalars={"cross": n_cross},
-                metrics={"ms": (time.time() - t0) * 1000.0},
-            )
-            comp, forest = state["comp"], state["forest"]
-        else:
+            ),
+            "forest": forest.unionByName(sel.select("a", "b", "w")),
+        }
+
+    try:
+        state, _, done = runner.iterate(init, step, iters=max_rounds, width=width)
+        if not done:
             raise RuntimeError(
                 f"minimum_spanning_forest did not converge within "
                 f"max_rounds={max_rounds}"
             )
     finally:
         und.unpersist()
-    return forest.distinct()
+    return state["forest"].distinct()

@@ -29,8 +29,6 @@ Physical plan per superstep (scale notes):
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -39,7 +37,7 @@ from graphblast_spark.matrix import Graph
 from graphblast_spark.runtime.superstep import (
     SuperstepRunner,
     child_runner,
-    stable_partitions,
+    loop_width,
     truncate_plan,
 )
 
@@ -63,11 +61,10 @@ def pagerank_prep(g: Graph, alpha: float = 0.85, weighted: bool = False) -> Data
     else:
         deg = g.out_degrees()  # (id, val=outdeg) — only vertices with out-edges
         w_num = F.lit(alpha)
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     w_edges = (
         g.edges.join(deg, on=g.edges["src"] == deg["id"], how="inner")
         .select(g.edges["src"], g.edges["dst"], (w_num / deg["val"]).alias("w"))
-        .repartition(n_part, "src")  # pin layout: stable src-hash across supersteps
+        .repartition(loop_width(spark), "src")  # pin layout: stable src-hash across supersteps
         .persist()
     )
     w_edges.count()  # materialize prep once
@@ -84,6 +81,7 @@ def pagerank(
     w_edges: DataFrame | None = None,
     init_ranks: DataFrame | None = None,
     weighted: bool = False,
+    teleport: DataFrame | None = None,
 ) -> DataFrame:
     """Returns (id long, val double). ``fixed_iters`` skips the
     convergence action entirely (the reference benchmark mode,
@@ -97,16 +95,23 @@ def pagerank(
     point, so any start converges to the same scores; a near-fixpoint
     start converges in a few supersteps instead of tens (the
     incremental-analytics path). Ignored when a checkpoint resume is
-    in progress (the checkpointed state wins)."""
+    in progress (the checkpointed state wins).
+
+    ``teleport`` (id, c) replaces the uniform (1-α)/n teleport with a
+    per-vertex one; it must carry a row for every vertex (zeros
+    included), because it doubles as the density restore. This is the
+    personalized form (:func:`personalized_pagerank`)."""
     spark = g.edges.sparkSession
     n = g.n
-    teleport = (1.0 - alpha) / n
 
     caller_prep = w_edges is not None
     if w_edges is None:
         w_edges = pagerank_prep(g, alpha, weighted=weighted)
 
-    zeros = g.vertices.select("id", F.lit(0.0).alias("c"))
+    if teleport is None:
+        base, const = g.vertices.select("id", F.lit(0.0).alias("c")), (1.0 - alpha) / n
+    else:
+        base, const = teleport, 0.0
 
     if runner is None:
         runner = SuperstepRunner(spark)
@@ -116,50 +121,39 @@ def pagerank(
             return {"ranks": init_ranks.select("id", F.col("val").cast("double"))}
         return {"ranks": g.vertices.select("id", F.lit(1.0 / n).alias("val"))}
 
-    state, start_iter, _ = runner.resume_or_init(init)
-    ranks = state["ranks"]
+    def step(s, it, sc):
+        # shuffle-hash hint: probe the persisted src-partitioned edge
+        # table, build the hash table from ranks — avoids re-sorting |E|
+        # rows per superstep (sort-merge), measured 1.6× faster at 16M
+        # edges / local[32].
+        r = s["ranks"].hint("shuffle_hash")
+        contribs = (
+            w_edges.join(r, on=w_edges["src"] == r["id"], how="inner")
+            .select(w_edges["dst"].alias("id"), (F.col("w") * r["val"]).alias("c"))
+        )
+        return {"ranks": (
+            contribs.unionByName(base)
+            .groupBy("id")
+            .agg((F.lit(const) + F.sum("c")).alias("val"))
+        )}
 
-    niter = fixed_iters if fixed_iters is not None else desc.max_niter
-    with stable_partitions(spark):
-        for it in range(start_iter, niter):
-            t0 = time.time()
-            # shuffle-hash hint: probe the persisted src-partitioned edge
-            # table, build the hash table from ranks — avoids re-sorting |E|
-            # rows per superstep (sort-merge), measured 1.6× faster at 16M
-            # edges / local[32].
-            r = ranks.hint("shuffle_hash")
-            contribs = (
-                w_edges.join(r, on=w_edges["src"] == r["id"], how="inner")
-                .select(w_edges["dst"].alias("id"), (F.col("w") * r["val"]).alias("c"))
-            )
-            new_ranks = (
-                contribs.unionByName(zeros)
-                .groupBy("id")
-                .agg((F.lit(teleport) + F.sum("c")).alias("val"))
-            )
-            new_ranks = new_ranks.transform(truncate_plan)  # superstep action
+    def converged(new, old, sc):
+        err = (
+            new["ranks"].join(old["ranks"], on="id")
+            .agg(F.sum(F.pow(new["ranks"]["val"] - old["ranks"]["val"], 2)).alias("e"))
+            .first()["e"]
+        )
+        return {"err": err}, err < eps
 
-            err = None
-            if fixed_iters is None:
-                err = (
-                    new_ranks.join(ranks, on="id")
-                    .agg(F.sum(F.pow(new_ranks["val"] - ranks["val"], 2)).alias("e"))
-                    .first()["e"]
-                )
-            ms = (time.time() - t0) * 1000.0
-            state = runner.commit(
-                it,
-                {"ranks": new_ranks},
-                scalars={"err": err},
-                metrics={"ms": ms, "err_over_n": (err / n) if err is not None else None},
-            )
-            ranks = state["ranks"]
-            if err is not None and err < eps:
-                break
+    state, _, _ = runner.iterate(
+        init, step,
+        iters=fixed_iters if fixed_iters is not None else desc.max_niter,
+        converged=None if fixed_iters is not None else converged,
+    )
 
     if not caller_prep:
         w_edges.unpersist()
-    return ranks
+    return state["ranks"]
 
 
 def personalized_pagerank(
@@ -173,12 +167,10 @@ def personalized_pagerank(
 ) -> DataFrame:
     """Personalized PageRank: the teleport mass (1-α) lands uniformly on
     the seed set S instead of all vertices; init = 1/|S| on S, 0
-    elsewhere. Same superstep plan as :func:`pagerank` (persisted
-    src-partitioned weighted edges, shuffle-hash probe, union-before-agg
-    density restore, one eager localCheckpoint per iteration) — only the
-    teleport vector changes: a per-vertex base table rides the same
-    pre-aggregate union the dense-restore zeros use, so PPR costs
-    exactly what PR costs per superstep.
+    elsewhere. It is :func:`pagerank`'s loop with a teleport vector —
+    the per-vertex base table rides the same pre-aggregate union the
+    dense-restore zeros use, so PPR costs exactly what PR costs per
+    superstep, and checkpoints and resumes the same way.
 
     Returns (id long, val double) dense over all vertices."""
     spark = g.edges.sparkSession
@@ -199,45 +191,22 @@ def personalized_pagerank(
             "vertices of the graph — teleport mass would silently vanish"
         )
 
-    caller_prep = w_edges is not None
-    if w_edges is None:
-        w_edges = pagerank_prep(g, alpha, weighted=weighted)
-    if runner is None:
-        runner = SuperstepRunner(spark)
-
-    tele = (1.0 - alpha) / n_seeds
-    # base = teleport on seeds + explicit zero per vertex (density)
-    base = (
+    # teleport on seeds + explicit zero per vertex (density)
+    tele = (
         g.vertices.join(seeds, on="id", how="left_semi")
-        .select("id", F.lit(tele).alias("c"))
+        .select("id", F.lit((1.0 - alpha) / n_seeds).alias("c"))
         .unionByName(g.vertices.select("id", F.lit(0.0).alias("c")))
         .transform(truncate_plan)
     )
-    ranks = (
+    init = (
         g.vertices.join(seeds.withColumn("__s", F.lit(1)), on="id", how="left")
         .select("id", F.when(F.col("__s").isNotNull(), 1.0 / n_seeds)
                 .otherwise(0.0).alias("val"))
     )
-
-    with stable_partitions(spark):
-        for it in range(fixed_iters):
-            t0 = time.time()
-            r = ranks.hint("shuffle_hash")
-            contribs = (
-                w_edges.join(r, on=w_edges["src"] == r["id"], how="inner")
-                .select(w_edges["dst"].alias("id"), (F.col("w") * r["val"]).alias("c"))
-            )
-            ranks = (
-                contribs.unionByName(base)
-                .groupBy("id")
-                .agg(F.sum("c").alias("val"))
-                .transform(truncate_plan)  # superstep action
-            )
-            runner.commit(it, {}, metrics={"ms": (time.time() - t0) * 1000.0})
-
-    if not caller_prep:
-        w_edges.unpersist()
-    return ranks
+    return pagerank(
+        g, alpha=alpha, runner=runner, fixed_iters=fixed_iters, w_edges=w_edges,
+        init_ranks=init, weighted=weighted, teleport=tele,
+    )
 
 
 def remap_ranks(

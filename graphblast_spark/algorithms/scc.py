@@ -46,18 +46,11 @@ O(|V|) rows.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import (
-    SuperstepRunner,
-    scaled_shuffle,
-    stable_partitions,
-    truncate_plan,
-)
+from graphblast_spark.runtime.superstep import SuperstepRunner, loop_width, truncate_plan
 
 
 def _sum_witness(df: DataFrame, col: str) -> int:
@@ -159,31 +152,18 @@ def strongly_connected_components(
     """Returns (id long, scc_id long), scc_id = min vertex id of the
     strongly connected component."""
     spark = g.edges.sparkSession
-    n_edges = g.edges.count()
-    with scaled_shuffle(spark, n_edges) as n_part:
-        # One pinned orientation: both colorings probe the persisted
-        # src-partitioned edges (the backward pass flips the JOIN key,
-        # not the layout); per-round activity is a semi-join filter.
-        # Partition width is clamped to the edge count (scaled_shuffle)
-        # so the ~30 supersteps per outer round don't schedule hundreds
-        # of near-empty tasks each on small remainders; every loop
-        # shuffle below runs at the same width, keeping the persisted
-        # edges co-partitioned with the state.
-        e_fwd = g.edges.select("src", "dst").repartition(n_part, "src").persist()
-        e_fwd.count()
-        return _scc_loop(g, spark, e_fwd, runner, max_rounds, max_inner)
-
-
-def _scc_loop(
-    g: Graph,
-    spark,
-    e_fwd: DataFrame,
-    runner: SuperstepRunner | None,
-    max_rounds: int,
-    max_inner: int,
-) -> DataFrame:
     if runner is None:
         runner = SuperstepRunner(spark)
+    # One pinned orientation: both colorings probe the persisted
+    # src-partitioned edges (the backward pass flips the JOIN key, not
+    # the layout); per-round activity is a semi-join filter. The width
+    # is clamped to the edge count so the ~30 supersteps per outer
+    # round don't schedule hundreds of near-empty tasks each on small
+    # remainders; every loop shuffle runs at the same width, keeping
+    # the persisted edges co-partitioned with the state.
+    width = loop_width(spark, g.edges.count())
+    e_fwd = g.edges.select("src", "dst").repartition(width, "src").persist()
+    e_fwd.count()
 
     def init():
         return {
@@ -191,101 +171,89 @@ def _scc_loop(
             "assigned": g.vertices.select("id", F.col("id").alias("scc_id")).limit(0),
         }
 
-    state, start_round, _ = runner.resume_or_init(init)
-    remaining, assigned = state["remaining"], state["assigned"]
+    def step(s, rnd, sc):
+        remaining, assigned = s["remaining"], s["assigned"]
+        n_rem = sc["remaining"] if "remaining" in sc else remaining.count()
 
-    with stable_partitions(spark):
-        for rnd in range(start_round, max_rounds):
-            t0 = time.time()
-            n_rem = remaining.count()
-            if n_rem == 0:
-                runner.commit(rnd, {}, metrics={"phase": "done"})
-                break
-
-            # -- 1. trim to fixpoint --------------------------------------
-            while True:
-                act = (
-                    e_fwd.join(remaining.hint("shuffle_hash"),
-                               e_fwd["src"] == remaining["id"], "left_semi")
-                    .join(remaining.hint("shuffle_hash"),
-                          F.col("dst") == remaining["id"], "left_semi")
-                )
-                keep = (
-                    remaining.join(act, remaining["id"] == act["src"], "left_semi")
-                    .join(act, remaining["id"] == act["dst"], "left_semi")
-                    .transform(truncate_plan)
-                )
-                n_keep = keep.count()
-                if n_keep == n_rem:
-                    break
-                trimmed = remaining.join(keep, "id", "left_anti")
-                assigned = assigned.unionByName(
-                    trimmed.select("id", F.col("id").alias("scc_id"))
-                ).transform(truncate_plan)
-                remaining, n_rem = keep, n_keep
-            if n_rem == 0:
-                state = runner.commit(
-                    rnd, {"remaining": remaining, "assigned": assigned},
-                    metrics={"phase": "trim-emptied", "ms": (time.time() - t0) * 1000},
-                )
-                remaining, assigned = state["remaining"], state["assigned"]
-                continue
-
-            act = act.transform(truncate_plan)  # edges inside `keep`
-
-            # -- 2. forward max-coloring (pointer-jumped) -----------------
-            # cf(v) = max id with a path TO v. O(log diameter) supersteps.
-            cf = _max_coloring(act, remaining, "src", "dst", max_inner)
-
-            # -- 3. backward max-coloring WITHIN color classes ------------
-            # Key fact: every vertex in class r has id ≤ r (its cf is r,
-            # and any vertex reaches itself, so id ≤ cf). Hence for
-            # cb(v) = max id reachable FROM v staying inside the class:
-            # cb(v) ≤ r always, and cb(v) == r ⟺ v reaches the root r
-            # within the class ⟺ (with cf(v) == r: r reaches v) v and r
-            # are mutually reachable ⟺ v ∈ SCC(r). The O(diameter)
-            # backward BFS becomes a second O(log diameter) jumped
-            # coloring — measured 85 s → 26 s on the sf0.1 ordseq graph
-            # (the BFS was ~60 s of depth-bound supersteps).
-            cfs = cf.select(F.col("id").alias("src"), F.col("val").alias("cls"))
-            cfd = cf.select(F.col("id").alias("dst"), F.col("val").alias("cls"))
-            ec = (
-                act.join(cfs, "src")
-                .join(cfd, ["dst", "cls"])
-                .select("src", "dst")
+        # -- 1. trim to fixpoint --------------------------------------
+        while True:
+            act = (
+                e_fwd.join(remaining.hint("shuffle_hash"),
+                           e_fwd["src"] == remaining["id"], "left_semi")
+                .join(remaining.hint("shuffle_hash"),
+                      F.col("dst") == remaining["id"], "left_semi")
+            )
+            keep = (
+                remaining.join(act, remaining["id"] == act["src"], "left_semi")
+                .join(act, remaining["id"] == act["dst"], "left_semi")
                 .transform(truncate_plan)
             )
-            cb = _max_coloring(ec, remaining, "dst", "src", max_inner)
-
-            members = (
-                cf.join(
-                    cb.select(F.col("id").alias("bid"), F.col("val").alias("bval")),
-                    (F.col("id") == F.col("bid")) & (F.col("val") == F.col("bval")),
-                    "inner",
-                )
-                .select("id", F.col("val").alias("root"))
-            )
-
+            n_keep = keep.count()
+            if n_keep == n_rem:
+                break
+            trimmed = remaining.join(keep, "id", "left_anti")
             assigned = assigned.unionByName(
-                members.select("id", F.col("root").alias("scc_id"))
+                trimmed.select("id", F.col("id").alias("scc_id"))
             ).transform(truncate_plan)
-            remaining = remaining.join(members, "id", "left_anti").transform(truncate_plan)
-            state = runner.commit(
-                rnd,
-                {"remaining": remaining, "assigned": assigned},
-                metrics={
-                    "ms": (time.time() - t0) * 1000,
-                    "n_remaining": remaining.count(),
-                },
-            )
-            remaining, assigned = state["remaining"], state["assigned"]
-        else:
-            raise RuntimeError(
-                f"SCC did not converge in {max_rounds} outer rounds "
-                f"({remaining.count()} vertices unassigned)"
-            )
+            remaining, n_rem = keep, n_keep
+        if n_rem == 0:
+            return {"remaining": remaining, "assigned": assigned}
 
+        act = act.transform(truncate_plan)  # edges inside `keep`
+
+        # -- 2. forward max-coloring (pointer-jumped) -----------------
+        # cf(v) = max id with a path TO v. O(log diameter) supersteps.
+        cf = _max_coloring(act, remaining, "src", "dst", max_inner)
+
+        # -- 3. backward max-coloring WITHIN color classes ------------
+        # Key fact: every vertex in class r has id ≤ r (its cf is r,
+        # and any vertex reaches itself, so id ≤ cf). Hence for
+        # cb(v) = max id reachable FROM v staying inside the class:
+        # cb(v) ≤ r always, and cb(v) == r ⟺ v reaches the root r
+        # within the class ⟺ (with cf(v) == r: r reaches v) v and r
+        # are mutually reachable ⟺ v ∈ SCC(r). The O(diameter)
+        # backward BFS becomes a second O(log diameter) jumped
+        # coloring — measured 85 s → 26 s on the sf0.1 ordseq graph
+        # (the BFS was ~60 s of depth-bound supersteps).
+        cfs = cf.select(F.col("id").alias("src"), F.col("val").alias("cls"))
+        cfd = cf.select(F.col("id").alias("dst"), F.col("val").alias("cls"))
+        ec = (
+            act.join(cfs, "src")
+            .join(cfd, ["dst", "cls"])
+            .select("src", "dst")
+            .transform(truncate_plan)
+        )
+        cb = _max_coloring(ec, remaining, "dst", "src", max_inner)
+
+        members = (
+            cf.join(
+                cb.select(F.col("id").alias("bid"), F.col("val").alias("bval")),
+                (F.col("id") == F.col("bid")) & (F.col("val") == F.col("bval")),
+                "inner",
+            )
+            .select("id", F.col("val").alias("root"))
+        )
+        return {
+            "remaining": remaining.join(members, "id", "left_anti"),
+            "assigned": assigned.unionByName(
+                members.select("id", F.col("root").alias("scc_id"))
+            ),
+        }
+
+    def converged(new, old, sc):
+        n = new["remaining"].count()
+        return {"remaining": n}, n == 0
+
+    state, sc, done = runner.iterate(
+        init, step, iters=max_rounds, converged=converged, width=width
+    )
     e_fwd.unpersist()
+    if not done:
+        raise RuntimeError(
+            f"SCC did not converge in {max_rounds} outer rounds "
+            f"({sc['remaining']} vertices unassigned)"
+        )
+    assigned = state["assigned"]
     # Normalize root labels (max member id) to the min member id.
     rel = assigned.groupBy("scc_id").agg(F.min("id").alias("m"))
     return (

@@ -12,8 +12,6 @@ distances, count improvements as the convergence scalar.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -39,19 +37,13 @@ def sssp(
         )
         return {"dist": s, "frontier": s}
 
-    state, start_iter, scalars = runner.resume_or_init(init)
-    dist, frontier = state["dist"], state["frontier"]
-    improved_n = int(scalars.get("improved_n", 1))
-
-    for it in range(start_iter, desc.max_niter):
-        if improved_n == 0:
-            break
-        t0 = time.time()
+    def step(s, it, sc):
+        improved_n = sc.get("improved_n", 1)
         push = (
             desc.mxv_mode == MxvMode.PUSHONLY
             or (desc.mxv_mode == MxvMode.PUSHPULL and improved_n / max(g.n, 1) <= desc.switchpoint)
         )
-        f = F.broadcast(frontier) if push else frontier
+        f = F.broadcast(s["frontier"]) if push else s["frontier"]
         # MinPlus relax: candidate(dst) = min over frontier (dist + w)
         cand = (
             g.edges.join(f, on=g.edges["src"] == f["id"], how="inner")
@@ -59,27 +51,19 @@ def sssp(
             .agg(F.min(f["dist"] + g.edges["val"]).alias("cand"))
         )
         # improvement mask (sssp.hpp:72-73 PlusLess): keep strictly-better
-        joined = cand.join(dist, on="id", how="left")
+        joined = cand.join(s["dist"], on="id", how="left")
         new_frontier = joined.filter(
             F.col("dist").isNull() | (F.col("cand") < F.col("dist"))
         ).select("id", F.col("cand").alias("dist")).transform(truncate_plan)
-        improved_n = new_frontier.count()
         # merge: min(dist, cand) over the union of structures
-        dist = (
-            dist.unionByName(new_frontier)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .transform(truncate_plan)  # truncate lineage per superstep
-        )
-        state = runner.commit(
-            it,
-            {"dist": dist, "frontier": new_frontier},
-            scalars={"improved_n": improved_n},
-            metrics={
-                "ms": (time.time() - t0) * 1000.0,
-                "direction": "push" if push else "pull",
-                "improved": improved_n,
-            },
-        )
-        dist, frontier = state["dist"], state["frontier"]
-    return dist
+        return {
+            "dist": s["dist"].unionByName(new_frontier).groupBy("id").agg(F.min("dist").alias("dist")),
+            "frontier": new_frontier,
+        }
+
+    def converged(new, old, sc):
+        n = new["frontier"].count()
+        return {"improved_n": n}, n == 0
+
+    state, _, _ = runner.iterate(init, step, iters=desc.max_niter, converged=converged)
+    return state["dist"]

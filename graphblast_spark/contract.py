@@ -86,10 +86,10 @@ def canon_column(s):
             fv = float(v)
             out.append("nan" if math.isnan(fv) else repr(fv))
         return out, None
-    if kind == "int":
-        return [str(int(v)) for v in s], None
+    if kind == "int":  # pd.NA in a nullable Int64 column → null marker
+        return ["∅" if pd.isna(v) else str(int(v)) for v in s], None
     if kind == "bool":
-        return [str(bool(v)) for v in s], None
+        return ["∅" if pd.isna(v) else str(bool(v)) for v in s], None
     for v in s:  # object/str column: every cell must be a plain string or null
         if v is None or (isinstance(v, float) and math.isnan(v)):
             out.append("∅")

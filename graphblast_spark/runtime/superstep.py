@@ -1,24 +1,35 @@
-"""Superstep runtime: lineage truncation, durable checkpoints, metrics, resume.
+"""Superstep runtime: one loop driver for every iterative algorithm.
 
 The reference's iterative algorithms are driver-side loops with one
 device→host sync per iteration (the scalar convergence reduce,
-reference pr.hpp:50-84, reduce.hpp:43) and per-iteration timing lines
-``iter, error/|V|, unvisited, push|pull, ms`` (pr.hpp:54-62). This
-module reproduces that loop shape on Spark and adds what a 1000-executor
-run needs and a GPU run didn't (north_rule):
+reference pr.hpp:50-84, cc.hpp:102-104) and one timing line per
+iteration (pr.hpp:54-62). :meth:`SuperstepRunner.iterate` is that loop,
+once, for the whole engine. The caller supplies only the algorithm:
 
-- **lineage truncation** every iteration via eager ``localCheckpoint``
-  (without it, the logical plan doubles per superstep and the driver
-  OOMs planning iteration ~30);
-- **durable checkpoints**: every ``checkpoint_every`` iterations the
-  named state DataFrames are written as parquet (per-partition files —
-  the per-partition frontier state) together with an atomically-renamed
-  ``meta.json`` carrying iteration number + scalars + lineage of prior
-  checkpoints;
-- **resume**: a fresh driver points at the same ``run_dir`` and
-  continues from the newest valid checkpoint mid-iteration;
-- **metrics**: one JSONL line per superstep (iter, per-state row counts
-  when supplied, direction, wall ms, scalars) in ``run_dir/metrics.jsonl``.
+- ``init()`` → the starting state, a dict of named DataFrames;
+- ``step(state, it, scalars)`` → the next state, lazily (or ``None``
+  when the step finds nothing left to do — an empty frontier);
+- either a fixed superstep count, or ``converged(new, old, scalars)``
+  → ``(scalars, done)``, evaluated on the already-truncated new state.
+
+The driver owns everything else, identically for every loop:
+
+- **resume**: a fresh driver pointed at the same ``run_dir`` continues
+  from the newest valid checkpoint, with the scalars saved beside it
+  (so a convergence test's "previous value" survives the restart);
+- **loop width**: ``spark.sql.shuffle.partitions`` pinned to one value
+  for the whole loop (see :func:`loop_width`) and AQE partition
+  coalescing off, restored on exit;
+- **lineage truncation**: every state frame is truncated once per
+  superstep with :func:`truncate_plan` (without it the logical plan
+  doubles per superstep and the driver OOMs planning iteration ~30);
+- **durable checkpoints**: every ``checkpoint_every`` supersteps the
+  state is written as parquet with an atomically-renamed
+  ``meta.json`` carrying the iteration number and scalars;
+- **metrics**: one JSON line per superstep in ``run_dir/metrics.jsonl``
+  with ``iter``, wall ``ms`` and the scalars;
+- **the stop test**, and its outcome, returned to the caller — what to
+  do when the cap is hit (raise or return) stays the algorithm's call.
 """
 
 from __future__ import annotations
@@ -27,10 +38,12 @@ import json
 import os
 import time
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+State = dict[str, DataFrame]
 
 
 def truncate_plan(df: DataFrame) -> DataFrame:
@@ -79,77 +92,66 @@ def truncate_plan(df: DataFrame) -> DataFrame:
         return ck
 
 
-@contextmanager
-def scaled_shuffle(spark: SparkSession, n_rows: int, rows_per_partition: int = 150_000):
-    """Clamp ``spark.sql.shuffle.partitions`` to the superstep state's
-    actual size for the duration of an iterative loop, then restore.
-
-    Superstep loops inherit the session's shuffle width, which is sized
-    for the BATCH queries' data volume. When the loop state is small
-    (a trimmed web-graph remainder, a converging frontier), a 5-stage
-    superstep at the session default of 32+ partitions schedules
-    hundreds of near-empty tasks whose fixed cost (launch + codegen
-    init, ~50-100 ms each) dwarfs the actual work — measured 31 s of
-    executorRunTime per superstep for a 37k-edge input, collapsing to
-    ~2 s at 4 partitions. At scale the clamp is a no-op: one partition
-    per ``rows_per_partition`` rows reaches the session default long
-    before real cluster inputs (10^9+ rows), so batch-sized widths are
-    preserved exactly when they matter. Keeps every downstream join
-    co-partitioned because the loop's persisted inputs are built under
-    the same width."""
-    key = "spark.sql.shuffle.partitions"
-    old = int(spark.conf.get(key))
-    target = max(4, min(old, -(-int(n_rows) // rows_per_partition)))
-    spark.conf.set(key, str(target))
+def _has_lineage(df: DataFrame) -> bool:
+    """False for frames that are already a plan leaf — a truncated
+    checkpoint, a parquet read, a local relation — which a truncation
+    would only copy."""
     try:
-        yield target
-    finally:
-        spark.conf.set(key, str(old))
+        return not df._jdf.queryExecution().logical().children().isEmpty()
+    except AttributeError:  # no JVM handle (e.g. Spark Connect)
+        return True
 
 
-def scaled_partition_count(
-    spark: SparkSession, n_rows: int, rows_per_partition: int = 150_000
-) -> int:
-    """Partition width for a superstep loop over ``n_rows`` rows of
-    state/edges: one partition per ``rows_per_partition`` rows, clamped
-    to [4, session default] — see :func:`scaled_shuffle` for why."""
-    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(4, min(default, -(-int(n_rows) // rows_per_partition)))
+def loop_width(spark: SparkSession, n_rows: int | None = None) -> int:
+    """THE shuffle width of one superstep loop, decided once before it:
+    the session width, or — given the loop's state/edge row count — one
+    partition per 150k rows clamped to [4, session width]. Feed the
+    same value to the loop's prep ``repartition`` and to
+    :meth:`SuperstepRunner.iterate` so persisted inputs stay
+    co-partitioned with the state.
+
+    Why clamp: a loop inherits the session width, sized for the batch
+    queries. On a small state (a trimmed remainder, a converging
+    frontier) a multi-shuffle superstep at 32+ partitions schedules
+    hundreds of near-empty tasks whose fixed cost dominates — measured
+    31 s of executor time per superstep on a 37k-edge input, ~2 s at 4
+    partitions. At real volumes the clamp reaches the session width and
+    is a no-op."""
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if n_rows is None:
+        return width
+    return max(4, min(width, -(-int(n_rows) // 150_000)))
 
 
 @contextmanager
-def stable_partitions(spark: SparkSession, shuffle_partitions: int | None = None):
-    """Disable AQE partition coalescing for the duration of a superstep
-    loop. Coalescing re-plans every iteration's small shuffles down to a
-    handful of partitions, then the next join must redistribute again —
-    measured 1.7× slower on a 16M-edge PageRank loop at local[32]. The
-    batch (non-iterative) queries keep coalescing on.
-
-    ``shuffle_partitions`` (usually from :func:`scaled_partition_count`)
-    additionally pins the loop's shuffle width for the block — the
-    static analog of the disabled coalescing, sized once from the
-    loop's actual data instead of re-planned every superstep."""
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    pkey = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key, "true")
-    old_p = spark.conf.get(pkey)
-    spark.conf.set(key, "false")
-    if shuffle_partitions is not None:
-        spark.conf.set(pkey, str(shuffle_partitions))
+def _pinned(spark: SparkSession, width: int | None):
+    """Pin the shuffle width and turn AQE partition coalescing off for
+    one loop. Coalescing re-plans every iteration's small shuffles down
+    to a handful of partitions and the next join must redistribute
+    again — measured 1.7× slower on a 16M-edge PageRank loop at
+    local[32]. Batch queries outside loops keep coalescing on."""
+    conf = {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    if width is not None:
+        conf["spark.sql.shuffle.partitions"] = str(width)
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set(key, old)
-        spark.conf.set(pkey, old_p)
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def child_runner(runner: "SuperstepRunner | None", spark: SparkSession, tag: str) -> "SuperstepRunner":
-    """A sub-runner for one batch of a root-batched sweep (BC / MSBFS):
-    inherits the parent's checkpoint cadence but writes under its own
-    ``run_dir/tag`` so per-batch resume stays well-defined — a restart
-    replays finished batches from their newest checkpoints and picks the
-    interrupted batch up mid-iteration, instead of mixing batch states
-    in one checkpoint namespace."""
+    """A sub-runner for one of several loops run under one public call
+    (root batches, sweep phases, levels): inherits the parent's
+    checkpoint cadence but writes under its own ``run_dir/tag`` so each
+    loop resumes from its own newest checkpoint instead of mixing
+    states in one checkpoint namespace."""
     if runner is None:
         return SuperstepRunner(spark)
     return SuperstepRunner(
@@ -166,7 +168,44 @@ class SuperstepRunner:
     run_dir: str | None = None      # None → in-memory only (no durable ckpt)
     checkpoint_every: int = 0       # 0 → never write durable checkpoints
     name: str = "run"
-    _metrics_fh: object = field(default=None, repr=False)
+
+    def iterate(
+        self,
+        init: Callable[[], State],
+        step: Callable[[State, int, dict], State | None],
+        iters: int,
+        converged: Callable[[State, State, dict], tuple[dict, bool]] | None = None,
+        width: int | None = None,
+    ) -> tuple[State, dict, bool]:
+        """Run supersteps ``0 .. iters-1`` (resuming after the newest
+        checkpoint) and return ``(state, scalars, converged)``.
+
+        ``step(state, it, scalars)`` returns the next state lazily; the
+        driver truncates every frame that still carries lineage, so a
+        step may truncate an intermediate it reuses itself. Returning
+        ``None`` stops the loop as converged without a superstep.
+        ``converged(new, old, scalars)`` sees the truncated new state,
+        the previous state and the previous scalars (``{}`` on a fresh
+        start, the checkpointed ones after a resume) and returns the new
+        scalars and whether to stop. Without it the loop runs exactly
+        ``iters`` supersteps. The returned flag is True only when a stop
+        test ended the loop; ``width`` pins the loop's shuffle width
+        (default: the session's, see :func:`loop_width`)."""
+        with _pinned(self.spark, width):
+            state, start, scalars = self._resume_or_init(init)
+            for it in range(start, iters):
+                t0 = time.time()
+                new = step(state, it, scalars)
+                if new is None:
+                    return state, scalars, True
+                new = self._truncate(new)
+                done = False
+                if converged is not None:
+                    scalars, done = converged(new, state, scalars)
+                state = self._commit(it, new, scalars, (time.time() - t0) * 1000.0)
+                if done:
+                    return state, scalars, True
+        return state, scalars, False
 
     # -- paths ---------------------------------------------------------
     def _ckpt_dir(self, it: int) -> str:
@@ -190,14 +229,11 @@ class SuperstepRunner:
                         best = json.load(fh)
         return best
 
-    def resume_or_init(
-        self, init_fn: Callable[[], dict[str, DataFrame]]
-    ) -> tuple[dict[str, DataFrame], int, dict]:
-        """Returns (state, next_iter, scalars). next_iter==0 means fresh."""
+    def _resume_or_init(self, init: Callable[[], State]) -> tuple[State, int, dict]:
+        """(state, next_iter, scalars); next_iter == 0 means fresh."""
         meta = self.latest_checkpoint()
         if meta is None:
-            state = {k: truncate_plan(df) for k, df in init_fn().items()}
-            return state, 0, {}
+            return self._truncate(init()), 0, {}
         it = meta["iter"]
         state = {
             k: self.spark.read.parquet(os.path.join(self._ckpt_dir(it), k))
@@ -206,27 +242,17 @@ class SuperstepRunner:
         return state, it + 1, meta.get("scalars", {})
 
     # -- per-iteration bookkeeping ---------------------------------------
-    def truncate(self, state: dict[str, DataFrame]) -> dict[str, DataFrame]:
-        """Eager localCheckpoint + stat reset — forces materialization
-        AND truncates lineage (the superstep 'action'); see
-        :func:`truncate_plan` for why the stat reset is load-bearing."""
-        return {k: truncate_plan(df) for k, df in state.items()}
+    @staticmethod
+    def _truncate(state: State) -> State:
+        """The superstep action: materialize and cut the lineage of
+        every frame that has any (see :func:`truncate_plan` for why the
+        stat reset is load-bearing)."""
+        return {k: truncate_plan(df) if _has_lineage(df) else df for k, df in state.items()}
 
-    def commit(
-        self,
-        it: int,
-        state: dict[str, DataFrame],
-        scalars: dict | None = None,
-        metrics: dict | None = None,
-    ) -> dict[str, DataFrame]:
-        """Log metrics; write a durable checkpoint when the cadence says
-        so. Returns the (possibly checkpoint-backed) state.
-
-        An empty ``state`` is metrics-only: it is never checkpointed
-        (a convergence-break commit with ``{}`` must not become the
-        newest checkpoint, or resume would restore an empty state dict
-        and lose everything previously checkpointed)."""
-        self._log({"iter": it, **(metrics or {}), **({"scalars": scalars} if scalars else {})})
+    def _commit(self, it: int, state: State, scalars: dict, ms: float) -> State:
+        """Log the superstep; write a durable checkpoint when the cadence
+        says so. Returns the (possibly checkpoint-backed) state."""
+        self._log({"iter": it, "ms": ms, **({"scalars": scalars} if scalars else {})})
         if state and self.checkpoint_every and self.run_dir and (it + 1) % self.checkpoint_every == 0:
             cdir = self._ckpt_dir(it)
             for k, df in state.items():
@@ -235,7 +261,7 @@ class SuperstepRunner:
                 "iter": it,
                 "name": self.name,
                 "states": sorted(state.keys()),
-                "scalars": scalars or {},
+                "scalars": scalars,
                 "wall_ts": time.time(),
             }
             tmp = self._meta_path(it) + ".tmp"

@@ -102,3 +102,12 @@ def test_null_handling_consistent_across_kinds():
     obj = pd.Series([None, "a"], dtype="object")
     strs, bad = canon_column(obj)
     assert bad is None and strs == ["∅", "a"]
+
+
+def test_nullable_int_and_bool_na_canon_as_null_marker():
+    # pandas nullable Int64 / boolean columns carry pd.NA, on which
+    # int()/bool() raise — the canon must emit the null marker instead
+    strs, bad = canon_column(pd.Series([1, pd.NA], dtype="Int64"))
+    assert bad is None and strs == ["1", "∅"]
+    strs, bad = canon_column(pd.Series([True, pd.NA], dtype="boolean"))
+    assert bad is None and strs == ["True", "∅"]

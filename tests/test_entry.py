@@ -68,3 +68,23 @@ def test_oracle_coverage():
     assert missing == [], f"queries without oracle_sql: {missing}"
     extra = sorted(set(oracles) - set(qs))
     assert extra == [], f"oracles without queries entry: {extra}"
+
+
+def test_stale_first_orders_fail_then_oldest_pass(tmp_path):
+    """Failing and never-attested queries lead; passes follow by their
+    last attested round; registry order breaks ties."""
+    import json
+
+    ok = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+    bad_hash = {**ok, "hash_match": False}
+    errored = {**ok, "err": "boom"}
+    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps(
+        {"a": ok, "b": ok, "c": bad_hash, "d": ok, "e": ok}))
+    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps(
+        {"queries": {"a": ok, "c": ok, "d": errored}}))
+    reg = {k: k for k in ["a", "b", "c", "d", "e", "never"]}
+    order = list(entrymod._stale_first(reg, root=str(tmp_path)))
+    # d failed in r02 (its latest round) and "never" has no row: both
+    # first; then passes oldest-first: b, e (r01) before a, c (r02) —
+    # c's r01 hash failure is superseded by its r02 pass
+    assert order == ["never", "d", "b", "e", "a", "c"]

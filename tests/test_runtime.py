@@ -12,7 +12,14 @@ import os
 
 import pytest
 
-from graphblast_spark.algorithms import connected_components, pagerank
+from graphblast_spark.algorithms import (
+    connected_components,
+    incremental_connected_components,
+    label_propagation_majority,
+    pagerank,
+    personalized_pagerank,
+    strongly_connected_components,
+)
 from graphblast_spark.descriptor import DEFAULT_DESC
 from graphblast_spark.runtime.superstep import SuperstepRunner
 from graphblast_spark.sources.mtx import fixture_graph
@@ -47,14 +54,57 @@ def test_pagerank_checkpoint_resume_equivalence(spark, tmp_path):
     g.unpersist()
 
 
-def test_metrics_jsonl_shape(spark, tmp_path):
-    g = fixture_graph(spark, "test_pr")
+def test_personalized_pagerank_checkpoint_resume_equivalence(spark, tmp_path):
+    """PPR runs pagerank's loop, so it checkpoints and resumes like it."""
+    g = fixture_graph(spark, "chesapeake")
+    run_dir = str(tmp_path / "ppr_run")
+    seeds = [0, 3]
+
+    full = _ranks(personalized_pagerank(g, seeds, fixed_iters=10))
+
+    r1 = SuperstepRunner(spark, run_dir=run_dir, checkpoint_every=2, name="ppr")
+    _ranks(personalized_pagerank(g, seeds, fixed_iters=6, runner=r1))
+    assert any(d.startswith("ckpt_") for d in os.listdir(run_dir))
+
+    r2 = SuperstepRunner(spark, run_dir=run_dir, checkpoint_every=2, name="ppr")
+    assert r2.latest_checkpoint()["iter"] == 5
+    resumed = _ranks(personalized_pagerank(g, seeds, fixed_iters=10, runner=r2))
+
+    assert set(resumed) == set(full)
+    for k in full:
+        assert resumed[k] == pytest.approx(full[k], abs=1e-15)
+    g.unpersist()
+
+
+def _incremental_cc(g, runner):
+    prev = connected_components(g)
+    return incremental_connected_components(g, prev, runner=runner)
+
+
+LOOPS = {
+    "pr_fixed": ("test_pr", lambda g, r: pagerank(g, fixed_iters=3, runner=r)),
+    "pr_eps": ("test_pr", lambda g, r: pagerank(g, eps=1e-6, runner=r)),
+    "cc": ("test_cc", lambda g, r: connected_components(g, runner=r)),
+    "lp_majority": ("test_cc", lambda g, r: label_propagation_majority(g, iters=3, runner=r)),
+    "incremental_cc": ("test_cc", _incremental_cc),
+    "scc": ("test_pr", lambda g, r: strongly_connected_components(g, runner=r)),
+}
+
+
+@pytest.mark.parametrize("loop", sorted(LOOPS))
+def test_metrics_jsonl_shape(spark, tmp_path, loop):
+    """One metrics line per superstep, consecutive ``iter`` from 0, a
+    wall ``ms`` on every line (perfbench reads ``["ms"]`` from each)."""
+    fixture, run = LOOPS[loop]
+    g = fixture_graph(spark, fixture)
     run_dir = str(tmp_path / "m")
-    runner = SuperstepRunner(spark, run_dir=run_dir, checkpoint_every=0)
-    pagerank(g, fixed_iters=3, runner=runner)
+    run(g, SuperstepRunner(spark, run_dir=run_dir, checkpoint_every=0)).collect()
     lines = [json.loads(l) for l in open(os.path.join(run_dir, "metrics.jsonl"))]
-    assert [l["iter"] for l in lines] == [0, 1, 2]
-    assert all("ms" in l for l in lines)
+    assert lines
+    assert [l["iter"] for l in lines] == list(range(len(lines)))
+    assert all(isinstance(l["ms"], float) for l in lines)
+    if loop == "pr_fixed":
+        assert len(lines) == 3
     g.unpersist()
 
 
