@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
 from graphblast_spark.operators.assign import extract_gather
-from graphblast_spark.runtime.superstep import SuperstepRunner, loop_width
+from graphblast_spark.runtime.superstep import SuperstepRunner
 
 
 def _hook_step(e_sym: DataFrame, parent: DataFrame, scatter_hook: bool) -> DataFrame:
@@ -110,19 +110,10 @@ def connected_components(
     THE INITIAL VALUES, so arbitrary inits compute that, not the
     component-min vertex id."""
     spark = g.edges.sparkSession
-
-    # Undirected view: both orientations; duplicates are harmless under
-    # the min aggregate, so skip the dedup shuffle (cf. util.hpp:263-329
-    # which dedups at build — our build already deduped (src,dst)).
-    e = g.edges.select("src", "dst")
-    # pin layout on dst — the hook join's edge-side key — so only the
-    # (small) parent table shuffles each superstep
-    e_sym = (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition(loop_width(spark), "dst")
-        .persist()
-    )
-    e_sym.count()
+    # the graph's undirected view, laid out on dst — the hook join's
+    # edge-side key — so only the (small) parent table shuffles each
+    # superstep
+    e_sym = g.undirected()
 
     if runner is None:
         runner = SuperstepRunner(spark)
@@ -166,7 +157,6 @@ def connected_components(
         return {"label_sum": label_sum}, label_sum == sc.get("label_sum")
 
     state, _, done = runner.iterate(init, step, iters=desc.max_niter, converged=converged)
-    e_sym.unpersist()
     if not done:
         raise RuntimeError(
             f"connected_components did not converge within "

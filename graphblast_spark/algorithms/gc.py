@@ -61,12 +61,7 @@ def graph_coloring(
     if runner is None:
         runner = SuperstepRunner(spark)
 
-    adj = (
-        g.edges.select("src", "dst")
-        .unionByName(g.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .persist()
-    )
+    adj = g.undirected()
 
     def init():
         cand = g.vertices.select("id", lcg_weight(F.col("id")).alias("w"))
@@ -86,11 +81,9 @@ def graph_coloring(
     max_rounds = fixed_rounds if fixed_rounds is not None else desc.max_niter
     colored = runner.iterate(init, step, iters=max_rounds)[0]["colored"]
 
-    out = g.vertices.join(colored, on="id", how="left").select(
+    return g.vertices.join(colored, on="id", how="left").select(
         "id", F.coalesce("color", F.lit(0)).alias("color")
     )
-    adj.unpersist()
-    return out
 
 
 def graph_coloring_mis(
@@ -124,6 +117,7 @@ def graph_coloring_mis(
         sub = Graph(edges=edges, vertices=remaining, n=n_left, nvals=-1)
         in_set = mis(sub, desc=desc).filter(F.col("in_mis") == 1).select("id")
         in_set = in_set.transform(truncate_plan)
+        sub.unpersist()  # the residual graph's undirected view
         colored = colored.unionByName(in_set.withColumn("color", F.lit(k)))
         remaining = remaining.join(in_set, on="id", how="left_anti").transform(truncate_plan)
         n_left = remaining.count()
@@ -134,10 +128,9 @@ def graph_coloring_mis(
             g.edges.join(r_src, on="src", how="left_semi")
             .join(r_dst, on="dst", how="left_semi")
         )
-    out = g.vertices.join(colored, on="id", how="left").select(
+    return g.vertices.join(colored, on="id", how="left").select(
         "id", F.coalesce("color", F.lit(0)).alias("color")
     )
-    return out
 
 
 def graph_coloring_spec(
@@ -174,12 +167,7 @@ def graph_coloring_spec(
     if runner is None:
         runner = SuperstepRunner(spark)
 
-    adj = (
-        g.edges.select("src", "dst")
-        .unionByName(g.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .persist()
-    )
+    adj = g.undirected()
 
     def init():
         w = lcg_weight(F.col("id"))
@@ -237,9 +225,7 @@ def graph_coloring_spec(
     max_rounds = fixed_rounds if fixed_rounds is not None else desc.max_niter
     colors = runner.iterate(init, step, iters=max_rounds)[0]["colors"]
 
-    out = colors.select("id", "color")
-    adj.unpersist()
-    return out
+    return colors.select("id", "color")
 
 
 def graph_coloring_jp(
@@ -268,12 +254,7 @@ def graph_coloring_jp(
     if runner is None:
         runner = SuperstepRunner(spark)
 
-    adj = (
-        g.edges.select("src", "dst")
-        .unionByName(g.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .persist()
-    )
+    adj = g.undirected()
 
     def init():
         cand = g.vertices.select("id", lcg_weight(F.col("id")).alias("w"))
@@ -304,8 +285,6 @@ def graph_coloring_jp(
     max_rounds = fixed_rounds if fixed_rounds is not None else desc.max_niter
     colored = runner.iterate(init, step, iters=max_rounds)[0]["colored"]
 
-    out = g.vertices.join(colored, on="id", how="left").select(
+    return g.vertices.join(colored, on="id", how="left").select(
         "id", F.coalesce("color", F.lit(0)).alias("color")
     )
-    adj.unpersist()
-    return out

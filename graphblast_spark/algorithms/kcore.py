@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, loop_width
+from graphblast_spark.runtime.superstep import SuperstepRunner
 
 
 def k_core(
@@ -34,8 +34,8 @@ def k_core(
     fixed_rounds: int | None = None,
 ) -> DataFrame:
     """Returns (id long, in_core int): 1 iff the vertex survives in the
-    k-core. Treats edges as undirected (both orientations count toward
-    degree; parallel duplicates were removed at build). With
+    k-core. Runs on :meth:`Graph.undirected` (both orientations count
+    toward degree, each neighbour once, self-loops never). With
     ``fixed_rounds`` the deterministic partially-peeled state is
     returned (for unrolled-SQL oracle comparison); convergence is the
     default."""
@@ -43,12 +43,7 @@ def k_core(
     if runner is None:
         runner = SuperstepRunner(spark)
 
-    e = g.edges.select("src", "dst")
-    adj = (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .persist()
-    )
+    adj = g.undirected()
 
     def init():
         return {"remaining": g.vertices.select("id")}
@@ -78,11 +73,9 @@ def k_core(
     max_rounds = fixed_rounds if fixed_rounds is not None else desc.max_niter
     remaining = runner.iterate(init, step, iters=max_rounds, converged=converged)[0]["remaining"]
 
-    out = g.vertices.join(
+    return g.vertices.join(
         remaining.withColumn("in_core", F.lit(1)), on="id", how="left"
     ).select("id", F.coalesce("in_core", F.lit(0)).alias("in_core"))
-    adj.unpersist()
-    return out
 
 
 def core_decomposition(
@@ -123,21 +116,11 @@ def core_decomposition(
     if runner is None:
         runner = SuperstepRunner(spark)
 
-    e = g.edges.select(
-        F.col("src").alias("a"), F.col("dst").alias("b")
-    ).filter(F.col("a") != F.col("b"))
-    # symmetric closure deduped with ONE distinct (mirror-then-dedup —
-    # dedup-then-mirror would evaluate the distinct shuffle twice)
-    adj = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .repartition(loop_width(spark), "b")
-        .persist()
-    )
-    adj.count()
+    # the undirected view, laid out on its dst (here b)
+    adj = g.undirected().toDF("a", "b")
 
     def init():
-        deg = adj.groupBy(F.col("a").alias("id")).agg(
+        deg = adj.groupBy(F.col("b").alias("id")).agg(
             F.count(F.lit(1)).cast("long").alias("c")
         )
         return {
@@ -185,7 +168,4 @@ def core_decomposition(
             f"desc.max_niter (rounds needed is graph-dependent, "
             f"typically O(peel depth))"
         )
-    core = state["core"]
-
-    adj.unpersist()
-    return core.select("id", F.col("c").alias("coreness"))
+    return state["core"].select("id", F.col("c").alias("coreness"))

@@ -55,11 +55,7 @@ def edge_triangle_support(g: Graph) -> DataFrame:
     (a, b, support) with a < b — the single-pass building block of the
     truss peel (and a useful signal on its own: support-0 edges are
     bridges/noise, high-support edges are community cores)."""
-    e = g.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    und = e.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct()
-    return _support(und)
+    return _support(g.undirected().filter(F.col("src") < F.col("dst")).toDF("a", "b"))
 
 
 def k_truss(
@@ -79,10 +75,7 @@ def k_truss(
     if runner is None:
         runner = SuperstepRunner(spark)
 
-    e = g.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    und = e.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct()
+    und = g.undirected().filter(F.col("src") < F.col("dst")).toDF("a", "b")
 
     def step(s, it, sc):
         sup = _support(s["edges"].select("a", "b"))
@@ -150,16 +143,11 @@ def truss_decomposition(
     if runner is None:
         runner = SuperstepRunner(spark)
 
-    e = g.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    und = e.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct().persist()
+    nbrs = g.undirected().toDF("n", "id")
+    und = nbrs.filter(F.col("n") < F.col("id")).toDF("a", "b")
 
     # Triangle-edge incidence: for edge (a,b) and each common neighbor
     # w, the two partner edges of triangle {a,b,w} in canonical form.
-    nbrs = und.select(F.col("a").alias("id"), F.col("b").alias("n")).unionByName(
-        und.select(F.col("b").alias("id"), F.col("a").alias("n"))
-    )
     adj = nbrs.groupBy("id").agg(F.sort_array(F.collect_list("n")).alias("nbrs"))
     aa = adj.select(F.col("id").alias("a"), F.col("nbrs").alias("na"))
     ab = adj.select(F.col("id").alias("b"), F.col("nbrs").alias("nb"))
@@ -230,5 +218,4 @@ def truss_decomposition(
     t = state["t"]
 
     tri.unpersist()
-    und.unpersist()
     return t.select("a", "b", (F.col("t") + F.lit(2)).cast("long").alias("trussness"))

@@ -38,15 +38,10 @@ def link_prediction_scores(g: Graph, pairs: DataFrame | None = None) -> DataFram
     self-loops dropped). A common neighbor always has deg ≥ 2, so
     ln(deg) > 0.
     """
-    e = g.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    und = e.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct()
-    # adjacency in both orientations; one groupBy gives undirected degree
-    adj = und.select("a", "b").unionByName(
-        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    deg = adj.groupBy(F.col("a").alias("id")).agg(F.count(F.lit(1)).alias("d"))
+    # the undirected view: adjacency in both orientations, and grouped
+    # on its dst (here b) the undirected degree with no shuffle
+    adj = g.undirected().toDF("a", "b")
+    deg = adj.groupBy(F.col("b").alias("id")).agg(F.count(F.lit(1)).alias("d"))
     # neighbor lists annotated with the NEIGHBOR's degree (for AA)
     adjd = adj.join(deg, on=adj["b"] == deg["id"]).select(
         F.col("a"), F.col("b").alias("w"), F.col("d").alias("dw")
@@ -58,7 +53,7 @@ def link_prediction_scores(g: Graph, pairs: DataFrame | None = None) -> DataFram
             F.greatest(pairs.columns[0], pairs.columns[1]).alias("b"),
         ).distinct()
         if pairs is not None
-        else und
+        else adj.filter(F.col("a") < F.col("b"))
     )
 
     n1 = adjd.select(F.col("a").alias("src"), "w", "dw")

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from graphblast_spark.algorithms.cc import connected_components
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, loop_width
+from graphblast_spark.runtime.superstep import SuperstepRunner
 
 
 def label_propagation_min(
@@ -55,16 +55,10 @@ def label_propagation_majority(
     """Majority LP for exactly ``iters`` synchronous supersteps.
     Returns (id, label)."""
     spark = g.edges.sparkSession
-    # Deduped symmetrized view: when both (a,b) and (b,a) existed in the
-    # directed input, the mirrored union would double them — it would
-    # corrupt the VOTE COUNTS, so dedup here. Layout pinned on dst (the
-    # per-superstep join key) so only the small label table shuffles
-    # each iteration.
-    e = g.edges.select("src", "dst")
-    e_sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().repartition(loop_width(spark), "dst").persist()
-    e_sym.count()
+    # The undirected view is deduped — a reciprocal pair (a,b), (b,a)
+    # votes once, not twice — and laid out on dst (the per-superstep
+    # join key) so only the small label table shuffles each iteration.
+    e_sym = g.undirected()
     if runner is None:
         runner = SuperstepRunner(spark)
 
@@ -94,7 +88,6 @@ def label_propagation_majority(
         lambda: {"labels": g.vertices.select("id", F.col("id").alias("val"))},
         step, iters=iters,
     )
-    e_sym.unpersist()
     return state["labels"].select("id", F.col("val").alias("label"))
 
 

@@ -72,13 +72,7 @@ def maximal_matching(
     if runner is None:
         runner = SuperstepRunner(spark)
 
-    e = g.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    und0 = (
-        e.select(F.least("src", "dst").alias("a"),
-                 F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .persist()
-    )
+    und0 = g.undirected().filter(F.col("src") < F.col("dst")).toDF("a", "b")
     width = loop_width(spark, max(und0.count(), 1))
 
     def init():
@@ -122,17 +116,14 @@ def maximal_matching(
             "matched": matched.unionByName(mutual),
         }
 
-    try:
-        state, _, done = runner.iterate(
-            init, step,
-            iters=fixed_rounds if fixed_rounds is not None else max_rounds,
-            width=width,
+    state, _, done = runner.iterate(
+        init, step,
+        iters=fixed_rounds if fixed_rounds is not None else max_rounds,
+        width=width,
+    )
+    if fixed_rounds is None and not done and state["live"].head(1):
+        raise RuntimeError(
+            f"maximal_matching did not converge within "
+            f"max_rounds={max_rounds}"
         )
-        if fixed_rounds is None and not done and state["live"].head(1):
-            raise RuntimeError(
-                f"maximal_matching did not converge within "
-                f"max_rounds={max_rounds}"
-            )
-    finally:
-        und0.unpersist()
     return state["matched"]

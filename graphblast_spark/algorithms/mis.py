@@ -90,15 +90,10 @@ def mis(
     if runner is None:
         runner = SuperstepRunner(spark)
 
-    # Undirected neighbor view: ensure both orientations exist so
-    # "neighbor max" is symmetric even on a directed edge table (the
-    # reference runs MIS on symmetrized inputs, run script --directed 2).
-    adj = (
-        g.edges.select("src", "dst")
-        .unionByName(g.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .persist()
-    )
+    # Undirected view: "neighbor max" is symmetric even on a directed
+    # edge table (the reference runs MIS on symmetrized inputs, run
+    # script --directed 2).
+    adj = g.undirected()
 
     def init():
         cand = g.vertices.select("id", lcg_weight(F.col("id")).alias("w"))
@@ -125,8 +120,6 @@ def mis(
     max_rounds = fixed_rounds if fixed_rounds is not None else desc.max_niter
     members = runner.iterate(init, step, iters=max_rounds)[0]["members"]
 
-    out = g.vertices.join(
+    return g.vertices.join(
         members.withColumn("in_mis", F.lit(1)), on="id", how="left"
     ).select("id", F.coalesce("in_mis", F.lit(0)).alias("in_mis"))
-    adj.unpersist()
-    return out

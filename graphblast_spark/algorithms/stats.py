@@ -30,15 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphblast_spark.algorithms.tc import degree_oriented, triangle_count
 from graphblast_spark.matrix import Graph
-
-
-def _und(g: Graph) -> DataFrame:
-    """Canonical undirected edge set (a < b), deduped, self-loops out."""
-    e = g.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    return e.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct()
 
 
 def degree_histogram(g: Graph, direction: str = "out") -> DataFrame:
@@ -52,10 +45,7 @@ def degree_histogram(g: Graph, direction: str = "out") -> DataFrame:
     elif direction == "in":
         deg_edges = g.edges.select(F.col("dst").alias("id"))
     elif direction == "und":
-        u = _und(g)
-        deg_edges = u.select(F.col("a").alias("id")).unionByName(
-            u.select(F.col("b").alias("id"))
-        )
+        deg_edges = g.undirected().select(F.col("dst").alias("id"))
     else:
         raise ValueError(f"direction must be 'out', 'in', or 'und'; got {direction!r}")
     deg = deg_edges.groupBy("id").agg(F.count(F.lit(1)).alias("degree"))
@@ -97,11 +87,8 @@ def degree_assortativity(g: Graph) -> DataFrame:
     undirected degrees at the two endpoints of every undirected edge,
     both orientations counted (Newman 2002's r). Negative on web-like
     graphs (hubs link to leaves)."""
-    u = _und(g)
-    both = u.unionByName(
-        u.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    deg = both.groupBy(F.col("a").alias("id")).agg(F.count(F.lit(1)).alias("d"))
+    both = g.undirected().toDF("a", "b")
+    deg = both.groupBy(F.col("b").alias("id")).agg(F.count(F.lit(1)).alias("d"))
     da = deg.select(F.col("id").alias("a"), F.col("d").alias("dx"))
     db = deg.select(F.col("id").alias("b"), F.col("d").alias("dy"))
     return (
@@ -118,15 +105,8 @@ def global_transitivity(g: Graph) -> DataFrame:
     ``local_clustering_coefficient``). One triangle count (tc.py's
     degree-oriented intersection) + one two-level degree aggregate —
     no new join shapes; 0.0 on a wedge-free graph."""
-    from graphblast_spark.algorithms.tc import triangle_count
-
     tri = triangle_count(g, orient="degree")
-    und = _und(g)
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionByName(und.select(F.col("b").alias("id")))
-        .groupBy("id").agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = g.undirected().groupBy("dst").agg(F.count(F.lit(1)).alias("d"))
     # Σ d(d−1) summed exactly as decimal(38,0) (a 10^8-degree hub's
     # d² overflows float64's 2^53 integer range), halved driver-side
     wedges = int(
@@ -157,22 +137,10 @@ def local_clustering_coefficient(g: Graph) -> DataFrame:
     degree < 2 (Watts-Strogatz). Uses tc.py's degree-oriented
     sorted-adjacency intersection, crediting each triangle to all
     three corners."""
-    und = _und(g)
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionByName(und.select(F.col("b").alias("id")))
-        .groupBy("id").agg(F.count(F.lit(1)).alias("d"))
+    deg = g.undirected().groupBy(F.col("dst").alias("id")).agg(
+        F.count(F.lit(1)).alias("d")
     )
-    da = deg.select(F.col("id").alias("a"), F.col("d").alias("deg_a"))
-    db = deg.select(F.col("id").alias("b"), F.col("d").alias("deg_b"))
-    ed = und.join(da, "a").join(db, "b")
-    a_first = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-    )
-    oriented = ed.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-    ).persist()
+    oriented = degree_oriented(g).persist()
     adj = oriented.groupBy("u").agg(
         F.sort_array(F.collect_list("v")).alias("nbrs")
     )
@@ -212,6 +180,9 @@ def local_clustering_coefficient(g: Graph) -> DataFrame:
             .alias("lcc"),
         )
     )
-    # materialization happens at the caller's action; persists released
-    # lazily by the context cleaner (tri_e/oriented are superseded)
+    # materialize before releasing the persists: the cache manager
+    # holds them until unpersist, the context cleaner never frees them
+    out = out.localCheckpoint(eager=True)
+    tri_e.unpersist()
+    oriented.unpersist()
     return out

@@ -23,9 +23,27 @@ Orientation choice matters enormously at scale (power-law web graphs):
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.matrix import Graph
+
+
+def degree_oriented(g: Graph) -> DataFrame:
+    """(u, v): every undirected edge once, oriented from the smaller
+    (degree, id) endpoint to the larger — out-lists are O(√|E|)."""
+    und = g.undirected()
+    deg = und.groupBy("dst").agg(F.count(F.lit(1)).alias("deg"))
+    da = deg.select(F.col("dst").alias("a"), F.col("deg").alias("deg_a"))
+    db = deg.select(F.col("dst").alias("b"), F.col("deg").alias("deg_b"))
+    a_first = (F.col("deg_a") < F.col("deg_b")) | (
+        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
+    )
+    canon = und.filter(F.col("src") < F.col("dst")).toDF("a", "b")
+    return canon.join(da, "a").join(db, "b").select(
+        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
+    )
 
 
 def triangle_count(g: Graph, orient: str = "degree", method: str = "arrays") -> int:
@@ -40,31 +58,10 @@ def triangle_count(g: Graph, orient: str = "degree", method: str = "arrays") -> 
     O(|E|·√|E|) worst-case vs the wedge set's same bound with a larger
     constant). ``method="wedge"``: the explicit wedge join + closing
     semi-join (the masked-SpGEMM shape, kernels/spgemm.hpp:30-78)."""
-    # Undirected canonical edge set: (lo, hi), deduped.
-    e = g.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    und = e.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct()
-
     if orient == "degree":
-        # degree in the undirected graph
-        deg = (
-            und.select(F.col("a").alias("id")).unionByName(und.select(F.col("b").alias("id")))
-            .groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
-        )
-        da = deg.select(F.col("id").alias("a"), F.col("deg").alias("deg_a"))
-        db = deg.select(F.col("id").alias("b"), F.col("deg").alias("deg_b"))
-        ed = und.join(da, "a").join(db, "b")
-        # orient from the smaller (deg, id) endpoint to the larger
-        a_first = (F.col("deg_a") < F.col("deg_b")) | (
-            (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-        )
-        oriented = ed.select(
-            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        )
+        oriented = degree_oriented(g)
     else:  # "id": reference tril semantics (operations.hpp:867-886)
-        oriented = und.select(F.col("a").alias("u"), F.col("b").alias("v"))
+        oriented = g.undirected().filter(F.col("src") < F.col("dst")).toDF("u", "v")
 
     oriented = oriented.persist()
     if method == "arrays":
@@ -135,10 +132,7 @@ def triangle_count_approx(
         raise ValueError(f"sampling factor k must be >= 1; got {k!r}")
     if k == 1:
         return triangle_count(g, orient=orient, method=method)
-    e = g.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    und = e.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct()
+    und = g.undirected().filter(F.col("src") < F.col("dst")).toDF("a", "b")
     edge_hash = F.conv(
         F.substring(
             F.md5(
@@ -171,18 +165,11 @@ def common_neighbors_per_edge(g: Graph):
     count (the masked SpGEMM output before the final reduce,
     tc.hpp:38-41). Returns (src, dst, common) for canonical (src<dst)
     undirected edges with ≥1 common neighbor."""
-    e = g.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    und = e.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct()
-    # adjacency in both directions for neighbor sets
-    adj = und.select("a", "b").unionByName(
-        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    n1 = adj.select(F.col("a").alias("src"), F.col("b").alias("n1"))
-    n2 = adj.select(F.col("a").alias("dst"), F.col("b").alias("n2"))
+    adj = g.undirected()
+    n1 = adj.select("src", F.col("dst").alias("n1"))
+    n2 = adj.select(F.col("src").alias("dst"), F.col("dst").alias("n2"))
     return (
-        und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        adj.filter(F.col("src") < F.col("dst"))
         .join(n1, "src")
         .join(n2, "dst")
         .filter(F.col("n1") == F.col("n2"))

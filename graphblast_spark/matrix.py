@@ -25,6 +25,16 @@ for free). Range layout only wins for src-interval predicates, which
 no operator here issues. Skew on the *reduce* side is handled
 separately: vecmat auto-salts from the cached degree stats below.
 
+``Graph.undirected()`` is the one undirected view every unweighted
+undirected algorithm reads (CC, LP, k-core, k-truss, TC, the
+colorings, MIS, matching, link prediction, the shape statistics): both
+orientations of every edge, self-loops dropped, (src, dst) deduped —
+the reference's symmetrised build (util.hpp:263-329, whose CSC side
+then aliases the CSR side, sparse_matrix.hpp:140-163). It is built on
+first use, persisted and released by ``unpersist()``. Self-loops are
+always dropped from it, also on a graph built with
+``drop_self_loops=False``, so no undirected algorithm sees them.
+
 At 100 TB scale: ``num_partitions`` should be sized so each partition
 holds ~100-500 MB of edges; the build is one shuffle, paid once and
 persisted (the analog of the reference's binary ``.dat`` parse cache,
@@ -37,6 +47,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from graphblast_spark.runtime.superstep import loop_width
 
 EDGE_SCHEMA = "src long, dst long, val double"
 
@@ -70,7 +82,7 @@ class Graph:
     n: int                    # |V|
     nvals: int                # |E| after cleaning
     _cached: list[DataFrame] = field(default_factory=list)
-    _stats: dict = field(default_factory=dict)
+    _stats: dict = field(default_factory=dict)  # hub degrees, the undirected view
 
     def hub_degree(self, key: str = "dst") -> int:
         """Max per-vertex edge count in the given orientation — the
@@ -87,6 +99,31 @@ class Graph:
             )
             self._stats[key] = int(row[0] or 0)
         return self._stats[key]
+
+    def undirected(self) -> DataFrame:
+        """The undirected view ``(src, dst)``: both orientations of every
+        edge, self-loops dropped, (src, dst) deduped — built once,
+        persisted, and released by :meth:`unpersist`.
+
+        Hash-partitioned on ``dst`` at the session's loop width (the
+        join key of the neighbour gathers in CC, LP and MIS), so the
+        build is ONE exchange: duplicates of (src, dst) share dst, so
+        the dedup runs as a local aggregate, as in :meth:`build`. On
+        top of it ``groupBy("dst")`` is the undirected degree with no
+        further exchange, and ``filter(src < dst)`` is the canonical
+        (lo, hi) edge set."""
+        if "undirected" not in self._stats:
+            e = self.edges.select("src", "dst")
+            view = (
+                e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+                .filter(F.col("src") != F.col("dst"))
+                .repartition(loop_width(self.edges.sparkSession), "dst")
+                .dropDuplicates(["src", "dst"])
+                .persist()
+            )
+            self._cached.append(view)
+            self._stats["undirected"] = view
+        return self._stats["undirected"]
 
     # -- construction -------------------------------------------------
     @staticmethod
@@ -162,11 +199,6 @@ class Graph:
         used for PR outdegree prep, example/gpr.cu:82-83).
         Returns (id, val=outdeg) for vertices with ≥1 out-edge."""
         return self.edges.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).cast("double").alias("val")
-        )
-
-    def in_degrees(self) -> DataFrame:
-        return self.edges.groupBy(F.col("dst").alias("id")).agg(
             F.count(F.lit(1)).cast("double").alias("val")
         )
 

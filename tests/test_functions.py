@@ -379,6 +379,27 @@ def test_multimodal_plumbing(spark):
         decode_stats(assets, strict=True).collect()
 
 
+def test_extract_features_matches_numpy(spark):
+    """Each embedding equals the numpy reference bit for bit: the
+    L2-normalised histogram of the payload bytes mod FEATURE_DIM, cast
+    to float32; a null or empty payload counts as the single byte 0x00."""
+    payloads = [
+        None, b"", b"\x00", b"abc", bytes(range(256)),
+        bytes([7]) * 100, b"\xff\x80" * 33, b"\x10\x20\x30\x11",
+    ]
+    assets = spark.createDataFrame(
+        [(i, "image", p, 8, 8, 0) for i, p in enumerate(payloads)],
+        "asset_id long, kind string, payload binary, width int, height int, sample_rate int",
+    )
+    got = {r.asset_id: r.embedding for r in extract_features(assets).collect()}
+    assert sorted(got) == list(range(len(payloads)))
+    for i, p in enumerate(payloads):
+        b = np.frombuffer(p or b"\x00", dtype=np.uint8)
+        h = np.bincount(b % FEATURE_DIM, minlength=FEATURE_DIM).astype(np.float64)
+        want = (h / np.linalg.norm(h)).astype(np.float32)
+        np.testing.assert_array_equal(np.array(got[i], dtype=np.float32), want, err_msg=repr(p))
+
+
 # ---------------------------------------------------------------------------
 # Span-level exact dedup (Lee et al. 2022 verbatim-span tier)
 # ---------------------------------------------------------------------------
