@@ -40,7 +40,7 @@ from graphblast_spark.operators.assign import extract_gather
 from graphblast_spark.runtime.superstep import SuperstepRunner
 
 
-def _hook_step(e_sym: DataFrame, parent: DataFrame, scatter_hook: bool) -> DataFrame:
+def _hook_step(e_sym: DataFrame, parent: DataFrame) -> DataFrame:
     """One FastSV hook superstep over the persisted symmetric edges.
 
     (1a) min neighbor parent (cc.hpp:78 MinimumSelectSecond vxm);
@@ -63,10 +63,6 @@ def _hook_step(e_sym: DataFrame, parent: DataFrame, scatter_hook: bool) -> DataF
     Catalyst evaluate the |E|-row hook join TWICE per superstep
     (measured 9.9 s vs 6.9 s on the sf0.1 cc slot; plan-pinned in
     tests/test_plans.py test_cc_hook_step_single_edge_scan).
-    ``scatter_hook=False`` is the pre-FastSV hash-min shape: one fewer
-    agg per superstep, but O(diameter) on flattened-star merges — the
-    caller's convergence guard turns that into an error, never a
-    silent wrong answer.
     """
     p = parent.hint("shuffle_hash")
     nbr_min = (
@@ -76,8 +72,6 @@ def _hook_step(e_sym: DataFrame, parent: DataFrame, scatter_hook: bool) -> DataF
     )
     j = parent.join(nbr_min, on="id", how="left")
     hv = F.least(F.col("val"), F.coalesce(F.col("nmin"), F.col("val")))
-    if not scatter_hook:
-        return j.select("id", hv.alias("val"))
     return (
         j.select(
             F.explode(
@@ -97,9 +91,7 @@ def connected_components(
     g: Graph,
     desc: Descriptor = DEFAULT_DESC,
     runner: SuperstepRunner | None = None,
-    pointer_jump: bool = True,
     init_labels: DataFrame | None = None,
-    scatter_hook: bool = True,
 ) -> DataFrame:
     """Returns (id long, component long) with component = min id of the
     connected component (treating edges as undirected).
@@ -135,9 +127,9 @@ def connected_components(
         return {"parent": warm}
 
     def step(s, it, sc):
-        hooked = _hook_step(e_sym, s["parent"], scatter_hook)
+        hooked = _hook_step(e_sym, s["parent"])
         # (2) shortcut/jump: f[u] = f[f[u]] (cc.hpp:98-99 extractGather)
-        return {"parent": extract_gather(hooked, hooked) if pointer_jump else hooked}
+        return {"parent": extract_gather(hooked, hooked)}
 
     def converged(new, old, sc):
         # (3) convergence (cc.hpp:102-104 MinimumNotEqualTo reduce).

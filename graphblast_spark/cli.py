@@ -232,34 +232,20 @@ def main(argv=None) -> int:
 
         from graphblast_spark.functions.urls import domain_edges
         from graphblast_spark.matrix import Graph
-        from graphblast_spark.sources.distill import assign_dense_ids
+        from graphblast_spark.sources.distill import dense_edges, extract_columns, outlink_pairs
 
         t0 = time.time()
         if args.url_edges:
             pairs = spark.read.parquet(args.url_edges)
         elif args.pages:
-            from graphblast_spark.sources.distill import extract_columns
             from graphblast_spark.sources.pages import read_pages
 
-            pairs = (
-                extract_columns(read_pages(spark, args.pages))
-                .select(F.col("url").alias("src_url"),
-                        F.explode("outlinks").alias("dst_url"))
-            )
+            pairs = outlink_pairs(extract_columns(read_pages(spark, args.pages)))
         else:
             p.error("domain-pr needs --url-edges or --pages")
         de = domain_edges(pairs, by=args.domain_by).transform(truncate_plan)
-        doms = de.select(F.col("src_domain").alias("url")).unionByName(
-            de.select(F.col("dst_domain").alias("url"))
-        )
-        id_map = assign_dense_ids(doms).persist()
-        src_m = id_map.select(F.col("url").alias("src_domain"), F.col("id").alias("src"))
-        dst_m = id_map.select(F.col("url").alias("dst_domain"), F.col("id").alias("dst"))
-        g = Graph.build(
-            de.join(src_m, "src_domain").join(dst_m, "dst_domain")
-            .select("src", "dst", "val"),
-            vertices=id_map.select("id"),
-        )
+        edges, id_map = dense_edges(de.toDF("src_url", "dst_url", "val"))
+        g = Graph.build(edges, vertices=id_map.select("id"))
         from graphblast_spark import algorithms as A
 
         # weighted: the domain edge val counts aggregated page links —

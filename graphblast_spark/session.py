@@ -4,8 +4,11 @@ The conf here is the engine's analog of the reference Descriptor's
 environment knobs (reference docs/env_var.md): AQE on (runtime
 re-planning, skew-join splitting — the merge-path load-balancing
 analog, reference spmspv_inner.hpp:62-320), Arrow enabled for the
-vectorized pandas-UDF path, and shuffle partitions sized to the
-parallelism level rather than Spark's 200 default.
+Python paths that remain (corpus generation, WARC parsing, the
+multimodal codec kernels, the ``mapInArrow`` SpMV kernel, pandas
+streaming state; distillation needs none), and shuffle
+partitions sized to the parallelism level rather than Spark's 200
+default.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 from graphblast_spark.sources.mtx import fixture_graph, read_mtx, write_mtx
 from graphblast_spark.sources.corpus import generate_pages
-from graphblast_spark.sources.distill import distill_edges, extract_outlinks_udf, extract_text_udf
+from graphblast_spark.sources.distill import distill_edges
 from graphblast_spark.sources.store import drop_graph, load_graph, save_graph
 from graphblast_spark.sources.warc import read_warc, write_warc
 
@@ -10,8 +10,6 @@ __all__ = [
     "write_mtx",
     "generate_pages",
     "distill_edges",
-    "extract_outlinks_udf",
-    "extract_text_udf",
     "save_graph",
     "load_graph",
     "drop_graph",

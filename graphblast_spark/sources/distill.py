@@ -1,6 +1,6 @@
 """Pages → edge-table distillation (the engine's readMtx analog).
 
-Pipeline (north_rule): vectorized Arrow UDFs extract per-url text and
+Pipeline (north_rule): JVM Column expressions extract per-url text and
 outlinks from the html binary, explode to (src_url, dst_url), assign
 dense 0..n-1 vertex ids (matching the reference's contiguous Index,
 types.hpp:18), and clean per the reference build semantics
@@ -8,13 +8,20 @@ types.hpp:18), and clean per the reference build semantics
 to parquet once and reused — the analog of the reference's binary
 ``.dat`` parse cache (util.hpp:331-357, sparse_matrix.hpp:328-345).
 
+This module owns the two steps every pages → graph path runs, and each
+exists once: extraction (:func:`extract_columns` → :func:`outlink_pairs`)
+and the url → dense-id edge join (:func:`dense_edges`). The batch
+:func:`distill_edges`, the streaming ``streaming_distill`` /
+``edge_log_graph`` and the CLI's ``domain-pr`` all call them.
+
 Scale notes:
-- extraction is mapInPandas over the pages scan — embarrassingly
-  parallel, no shuffle, pandas .str vectorized (no per-row Python);
+- extraction is a projection over the pages scan — decode + regex as
+  codegen'd JVM expressions, no Python worker and no Arrow crossing,
+  embarrassingly parallel, no shuffle;
 - id assignment avoids the single-partition global window: urls are
-  range-partitioned and sorted, per-partition counts are collected
-  (P integers, not rows), and ids = partition offset + local position —
-  a two-pass dense rank that scales to any |V|;
+  range-partitioned, deduped and sorted in place, per-partition counts
+  are collected (P integers, not rows), and ids = partition offset +
+  local position — a two-pass dense rank that scales to any |V|;
 - the url→id join for edge endpoints is a plain shuffle join on url;
   at web scale both sides are huge, so it stays a sort-merge join —
   done ONCE at build, then persisted.
@@ -22,160 +29,133 @@ Scale notes:
 
 from __future__ import annotations
 
-import re
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
 from graphblast_spark.runtime.superstep import truncate_plan
 
 _TEXT_RE = "<p>(.*?)</p>"
 _HREF_RE = 'href="([^"]*)"'
 
 
-def _decode(html: pd.Series) -> pd.Series:
-    """Vectorized bytes→str (pandas .str.decode, no per-row Python)."""
-    return html.str.decode("utf-8", errors="replace").fillna("")
-
-
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """html binary → text string (byte-identical per url invariant).
-    Vectorized: bytes decode + regex extract via pandas .str."""
-    return _decode(html).str.extract(_TEXT_RE, expand=False).fillna("")
-
-
-def extract_outlinks_udf(html: pd.Series) -> pd.Series:
-    """html binary → list<string> of outlink urls. Vectorized findall."""
-    return _decode(html).str.findall(_HREF_RE)
+def _html_text() -> Column:
+    """The html binary as text. The cast keeps the raw bytes;
+    ``make_valid_utf8`` then replaces each invalid UTF-8 sequence with
+    U+FFFD, as Python's ``decode("utf-8", errors="replace")`` does."""
+    return F.make_valid_utf8(F.col("html").cast("string"))
 
 
 def extract_columns(pages: DataFrame) -> DataFrame:
     """pages → (url, text_extracted, outlinks array<string>, lang).
-    One decode pass feeds both regexes (decoding dominates for short
-    pages; doing it once per extractor measured ~15% slower)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            decoded = _decode(b["html"])
-            yield pd.DataFrame(
-                {
-                    "url": b["url"],
-                    "text_extracted": decoded.str.extract(_TEXT_RE, expand=False).fillna(""),
-                    "outlinks": decoded.str.findall(_HREF_RE),
-                    "lang": b["lang"],
-                }
-            )
 
-    return pages.select("url", "html", "lang").mapInPandas(
-        run, schema="url string, text_extracted string, outlinks array<string>, lang string"
+    ``text_extracted`` is the first ``<p>`` body ("" when there is none
+    or html is null); ``outlinks`` every ``href`` value in page order,
+    empty and repeated ones included ([] for null html). The ``(?d)``
+    flag makes ``.`` stop only at ``\\n``, as in Python's ``re`` — Java's
+    default also stops at ``\\r`` and the Unicode line separators."""
+    h = _html_text()
+    return pages.select(
+        "url",
+        F.coalesce(F.regexp_extract(h, "(?d)" + _TEXT_RE, 1), F.lit("")).alias("text_extracted"),
+        F.coalesce(
+            F.regexp_extract_all(h, F.lit(_HREF_RE), 1), F.array().cast("array<string>")
+        ).alias("outlinks"),
+        "lang",
+    )
+
+
+def outlink_pairs(cols: DataFrame) -> DataFrame:
+    """(url, outlinks) → cleaned (src_url, dst_url) link pairs.
+
+    Self-loop filter + dedup run at the URL level, BEFORE the id joins:
+    the url↔id map is bijective so the semantics are identical, the
+    post-join dedup shuffle disappears, and the (usually duplicate-
+    heavy) outlink stream shrinks before the two expensive string joins
+    (measured at 20k pages, local[32]: 7.9 s → 3.6-3.9 s warm,
+    identical 71,803 edges out)."""
+    return (
+        cols.select(F.col("url").alias("src_url"), F.explode("outlinks").alias("dst_url"))
+        .filter(F.col("src_url") != F.col("dst_url"))
+        .dropDuplicates(["src_url", "dst_url"])
     )
 
 
 def assign_dense_ids(urls: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """(url) → (url, id) with ids dense 0..n-1 in global url sort order.
 
-    Two-pass scalable dense rank: range-partition + in-partition sort,
-    collect per-partition DISTINCT counts (tiny), then offset + local
-    dense position. Dedup rides the range shuffle: equal urls land in
-    the same range partition, adjacent after the sort, so duplicates are
-    skipped while assigning ids — no separate ``distinct`` exchange of
-    the full URL table (one full shuffle saved at any scale).
+    Two-pass scalable dense rank over ONE range shuffle: equal urls land
+    in the same range partition, so ``dropDuplicates`` is a local
+    aggregate there (no separate ``distinct`` exchange of the full URL
+    table), and the in-partition sort orders them. Each row's partition
+    id and ``monotonically_increasing_id`` (partition id << 33 | local
+    position) are frozen by an eager checkpoint — the offsets pass and
+    the id pass must see identical partitions — then the per-partition
+    counts are collected (P integers) and id = partition offset + local
+    position.
     """
     spark = urls.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # eager localCheckpoint (not persist): freezes the partition layout
-    # between the offsets pass and the id-assignment pass (the two-pass
-    # dense rank depends on identical partitioning), and the blocks
-    # release with the result instead of leaking a cache entry per call
-    sorted_urls = (
+    ranked = (
         urls.select("url")
         .repartitionByRange(num_partitions, "url")
+        .dropDuplicates(["url"])
         .sortWithinPartitions("url")
-        .withColumn("__pid", F.spark_partition_id())
+        .select(
+            "url",
+            F.spark_partition_id().alias("pid"),
+            F.monotonically_increasing_id().alias("mid"),
+        )
         .transform(truncate_plan)
     )
-    counts = dict(
-        sorted_urls.groupBy("__pid").agg(F.count_distinct("url").alias("c")).collect()
-    )
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    boff = spark.sparkContext.broadcast(offsets)
-
-    def add_ids(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pos = None
-        prev = None  # last url of the previous batch (same partition)
-        for b in batches:
-            if len(b) == 0:
-                continue
-            pid = int(b["__pid"].iloc[0])
-            if pos is None:
-                pos = boff.value[pid]
-            u = b["url"]
-            keep = u.ne(u.shift())  # first occurrence in sorted order
-            if prev is not None:
-                keep.iloc[0] = u.iloc[0] != prev
-            kept = u[keep].to_numpy()
-            ids = range(pos, pos + len(kept))
-            pos += len(kept)
-            prev = u.iloc[-1]
-            yield pd.DataFrame({"url": kept, "id": pd.Series(ids, dtype="int64")})
-
-    return sorted_urls.mapInPandas(add_ids, schema="url string, id long")
+    counts = dict(ranked.groupBy("pid").count().collect())
+    offsets, acc = [], 0
+    for pid in range(max(counts, default=0) + 1):
+        offsets.append(acc)
+        acc += counts.get(pid, 0)
+    offset = F.lit(offsets).cast("array<bigint>")[F.col("pid")]
+    local = F.col("mid") - F.shiftleft(F.col("pid").cast("bigint"), 33)
+    return ranked.select("url", (offset + local).alias("id"))
 
 
-def distill_edges(
-    pages: DataFrame,
-    drop_dangling_targets: bool = True,
-    num_partitions: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
+def dense_edges(pairs: DataFrame, urls: DataFrame | None = None) -> tuple[DataFrame, DataFrame]:
+    """(src_url, dst_url[, val]) pairs → (edges(src,dst,val), url_map(url,id)).
+
+    The vertex universe is ``urls`` (one ``url`` column) when given,
+    else every endpoint of ``pairs``. Both endpoints join the persisted
+    id map (inner), so pairs with an endpoint outside the universe drop.
+    ``val`` carries through when ``pairs`` has one, else it is 1.0
+    (pattern semantics)."""
+    if urls is None:
+        urls = pairs.select(F.col("src_url").alias("url")).unionByName(
+            pairs.select(F.col("dst_url").alias("url"))
+        )
+    url_map = assign_dense_ids(urls).persist()
+    src_m = url_map.select(F.col("url").alias("src_url"), F.col("id").alias("src"))
+    dst_m = url_map.select(F.col("url").alias("dst_url"), F.col("id").alias("dst"))
+    val = F.col("val") if "val" in pairs.columns else F.lit(1.0).alias("val")
+    edges = pairs.join(src_m, "src_url").join(dst_m, "dst_url").select("src", "dst", val)
+    return edges, url_map
+
+
+def distill_edges(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
     """pages → (edges(src,dst,val), url_map(url,id)).
 
     Cleaning matches reference util.hpp:263-329: self-loops dropped,
     duplicate (src,dst) dropped, values 1.0 (pattern semantics).
-    ``drop_dangling_targets``: outlinks pointing outside the corpus are
-    dropped (inner join); the vertex universe is ALL pages (dangling
-    pages keep ids — PR teleport semantics need them, SURVEY §7.3.5).
+    Outlinks pointing outside the corpus are dropped; the vertex
+    universe is ALL pages (dangling pages keep ids — PR teleport
+    semantics need them, SURVEY §7.3.5).
     """
-    # The extraction feeds BOTH the id map and the edge pairs; without
-    # materialization the full pages scan + Arrow decode + regex
-    # extraction runs once per consumer (measured 2.3× end-to-end at 1M
-    # pages). Eager localCheckpoint (not persist) so the blocks are
-    # released when the result goes out of scope. At real web scale
-    # this materialization is the parquet/Iceberg staging table the
+    # (url, outlinks) feeds BOTH the id map and the edge pairs; without
+    # materialization the full pages scan + decode + regex extraction
+    # runs once per consumer (measured 2.3× end-to-end at 1M pages).
+    # Eager localCheckpoint (not persist) so the blocks are released
+    # when the result goes out of scope. At real web scale this
+    # materialization is the parquet/Iceberg staging table the
     # binary-cache analog describes (util.hpp:331-357).
-    cols = extract_columns(pages).transform(truncate_plan)
-    url_map = assign_dense_ids(cols.select("url"), num_partitions).persist()
-
-    # self-loop filter + dedup run at the URL level, BEFORE the id joins:
-    # the url↔id map is bijective so the semantics are identical, the
-    # post-join dedup shuffle disappears, and the (usually duplicate-
-    # heavy) outlink stream shrinks before the two expensive string
-    # joins (measured at 20k pages, local[32]: 7.9 s → 3.6-3.9 s warm,
-    # identical 71,803 edges out).
-    pairs = (
-        cols.select(
-            F.col("url").alias("src_url"), F.explode("outlinks").alias("dst_url")
-        )
-        .filter(F.col("src_url") != F.col("dst_url"))
-        .dropDuplicates(["src_url", "dst_url"])
-    )
-    src_m = url_map.select(F.col("url").alias("src_url"), F.col("id").alias("src"))
-    dst_m = url_map.select(F.col("url").alias("dst_url"), F.col("id").alias("dst"))
-    how = "inner" if drop_dangling_targets else "left"
-    edges = (
-        pairs.join(src_m, "src_url")
-        .join(dst_m, "dst_url", how)
-        .select("src", "dst", F.lit(1.0).alias("val"))
-    )
-    if not drop_dangling_targets:
-        # left join maps every out-of-corpus dst_url to null — collapse
-        # the per-src null fan-out the url-level dedup can't see
-        edges = edges.dropDuplicates(["src", "dst"])
-    return edges, url_map
+    cols = extract_columns(pages).select("url", "outlinks").transform(truncate_plan)
+    return dense_edges(outlink_pairs(cols), urls=cols.select("url"))
 
 
 # --- anchor-text extraction & aggregation (link_graph × webtext) --------
@@ -183,9 +163,9 @@ def distill_edges(
 # Anchor text is the classic cross-document relevance signal for the
 # TARGET page (search engines index it since the 1990s; web-corpus
 # pipelines attach aggregated inlink anchors as target-page metadata).
-# Extraction here is pure JVM Column expressions (regexp over the
-# decoded html — no Arrow round-trip needed for a per-tag regex), so
-# the whole path is scan → explode → two vertex-keyed aggregates.
+# Extraction reads the same decoded html as the outlinks (regexp over
+# ``_html_text``), so the whole path is scan → explode → two
+# vertex-keyed aggregates.
 
 _ANCHOR_TAG_RE = '<a href="[^"]*">[^<]*</a>'
 _ANCHOR_TEXT_RE = '>([^<]*)</a>'
@@ -195,7 +175,7 @@ def extract_anchors(pages: DataFrame) -> DataFrame:
     """pages (url, html binary) → (src_url, dst_url, anchor) — one row
     per <a> tag. Codegen-only: decode, findall tags, per-tag href/text
     extracts, explode."""
-    h = F.col("html").cast("string")
+    h = _html_text()
     tags = F.regexp_extract_all(h, F.lit(_ANCHOR_TAG_RE), 0)
     pairs = F.transform(
         tags,

@@ -1,20 +1,23 @@
 """Incremental pages→edges distillation — the streaming build path.
 
 Batch build (sources/distill.py) is a full-table pass; at web scale
-pages arrive continuously, so this runs the SAME vectorized extraction
-per micro-batch via ``foreachBatch`` and appends cleaned (src_url,
-dst_url) pairs to a parquet edge log. Cross-batch dedup is deferred to
-``Graph.build`` (which drops duplicate (src,dst) pairs anyway —
-reference build semantics, util.hpp:263-329), so the streaming writer
-stays append-only and idempotent per batch id — the Iceberg-style
-pattern where the log is cheap to write and compaction is a reader
-concern.
+pages arrive continuously, so this runs the SAME extraction and pair
+cleaning (``extract_columns`` → ``outlink_pairs``) per micro-batch via
+``foreachBatch`` and appends the (src_url, dst_url) pairs to a parquet
+edge log. Cross-batch dedup is deferred to ``Graph.build`` (which drops
+duplicate (src,dst) pairs anyway — reference build semantics,
+util.hpp:263-329), so the streaming writer stays append-only and
+idempotent per batch id — the Iceberg-style pattern where the log is
+cheap to write and compaction is a reader concern. The rebuild
+(``edge_log_graph``) joins the log to dense ids with the batch path's
+``dense_edges``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from graphblast_spark.sources.distill import dense_edges, extract_columns, outlink_pairs
 
 PAGE_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -34,23 +37,13 @@ def streaming_distill(
 ):
     """Start the incremental distillation; returns the StreamingQuery.
 
-    Each micro-batch: html → outlinks (vectorized Arrow UDF, identical
-    to the batch path) → explode → self-loop filter → within-batch
-    dedup → append to ``edges_out``.
+    Each micro-batch: html → outlinks → explode → self-loop filter →
+    within-batch dedup (the batch path's own functions) → append to
+    ``edges_out``.
     """
-    from graphblast_spark.sources.distill import extract_columns
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        extracted = extract_columns(batch_df)
-        (
-            extracted.select(
-                F.col("url").alias("src_url"),
-                F.explode("outlinks").alias("dst_url"),
-            )
-            .filter(F.col("src_url") != F.col("dst_url"))
-            .dropDuplicates(["src_url", "dst_url"])
-            .write.mode("append").parquet(edges_out)
-        )
+        outlink_pairs(extract_columns(batch_df)).write.mode("append").parquet(edges_out)
 
     writer = (
         pages_stream.writeStream.foreachBatch(handle_batch)
@@ -62,7 +55,7 @@ def streaming_distill(
     return writer.start()
 
 
-def edge_log_graph(spark: SparkSession, edges_log: str, num_partitions: int | None = None):
+def edge_log_graph(spark: SparkSession, edges_log: str):
     """Close the streaming loop: (append-only url edge log) → (Graph,
     url_map). The vertex universe is every url OBSERVED in the log
     (sources or targets — dangling targets keep vertices, PR teleport
@@ -73,21 +66,7 @@ def edge_log_graph(spark: SparkSession, edges_log: str, num_partitions: int | No
     Cross-batch duplicate pairs from the idempotent append log are
     dropped inside ``Graph.build`` (they share src, so the dedup rides
     the layout shuffle)."""
-    from pyspark.sql import functions as F
-
     from graphblast_spark.matrix import Graph
-    from graphblast_spark.sources.distill import assign_dense_ids
 
-    log = spark.read.parquet(edges_log)
-    urls = log.select(F.col("src_url").alias("url")).unionByName(
-        log.select(F.col("dst_url").alias("url"))
-    )
-    url_map = assign_dense_ids(urls, num_partitions).persist()
-    src_m = url_map.select(F.col("url").alias("src_url"), F.col("id").alias("src"))
-    dst_m = url_map.select(F.col("url").alias("dst_url"), F.col("id").alias("dst"))
-    edges = (
-        log.join(src_m, "src_url").join(dst_m, "dst_url")
-        .select("src", "dst", F.lit(1.0).alias("val"))
-    )
-    g = Graph.build(edges, vertices=url_map.select("id"), num_partitions=num_partitions)
-    return g, url_map
+    edges, url_map = dense_edges(spark.read.parquet(edges_log))
+    return Graph.build(edges, vertices=url_map.select("id")), url_map

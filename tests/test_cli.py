@@ -123,6 +123,41 @@ def test_cli_domain_pagerank(spark, capsys, tmp_path):
     assert stats["n_domains"] == 4 and stats["rows_out"] == 4
 
 
+def test_cli_domain_pagerank_from_pages(spark, capsys, tmp_path):
+    """``--pages`` distills the pages itself and ranks the same domain
+    graph as ``--url-edges`` over the pages' cleaned links (self-loops
+    and repeated links dropped), computed here in Python."""
+    import re
+
+    from graphblast_spark.sources.corpus import generate_pages
+
+    pages_in = str(tmp_path / "pages_in")
+    generate_pages(spark, 400, seed=11).write.parquet(pages_in)
+    pairs = sorted({
+        (r.url, dst)
+        for r in spark.read.parquet(pages_in).collect()
+        for dst in re.findall(r'href="([^"]*)"', r.html.decode("utf-8", errors="replace"))
+        if dst != r.url
+    })
+    pairs_in = str(tmp_path / "pairs_in")
+    spark.createDataFrame(pairs, "src_url string, dst_url string").write.parquet(pairs_in)
+
+    ranks = {}
+    for flag, path in (("--pages", pages_in), ("--url-edges", pairs_in)):
+        out = str(tmp_path / flag.strip("-"))
+        rc = main(["domain-pr", flag, path, "--niter", "5", "--output", out])
+        assert rc == 0
+        stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        ranks[flag] = (
+            stats["n_domains"], stats["n_domain_edges"],
+            {r.domain: round(r.pagerank, 9) for r in spark.read.parquet(out).collect()},
+        )
+    n_dom, n_edges, pr = ranks["--pages"]
+    assert n_dom > 1 and n_edges > 0 and len(pr) == n_dom
+    assert abs(sum(pr.values()) - 1.0) < 1e-6
+    assert ranks["--pages"] == ranks["--url-edges"]
+
+
 def test_cli_round3_graph_algorithms_smoke(spark, capsys):
     for argv in (
         ["scc", "--fixture", "chesapeake"],

@@ -70,6 +70,53 @@ def test_dense_id_assignment_dedups_in_shuffle(spark):
     out = assign_dense_ids(urls, num_partitions=5).orderBy("id").collect()
     assert [r.id for r in out] == list(range(37))
     assert [r.url for r in out] == sorted({f"u{i % 37:03d}" for i in range(500)})
+    empty = assign_dense_ids(spark.createDataFrame([], "url string"), num_partitions=5)
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == "struct<url:string,id:bigint>"
+
+
+# Extraction edge cases: invalid, truncated and surrogate UTF-8, null
+# and empty html, empty and repeated hrefs, multi-line / CR / U+2028
+# inside <p>, pages without <p>.
+_EDGE_HTML = [
+    b'<p>ok \xff\xfe bad</p><a href="x">',
+    b"<p>trunc \xe2\x82</p>",
+    b"<p>sur \xed\xa0\x80 x</p>",
+    b"\xe2\x82<p>lead</p>\xc0\xaf",
+    None,
+    b"",
+    b'<a href="">e</a><a href="a"></a><a href="a"></a>',
+    b"<p>line1\nline2</p><p>second</p>",
+    b"<p>cr\rlf</p>",
+    "<p>ls\u2028x</p>".encode(),
+    b'no paragraph href="q" here',
+    "<p>\U0001f600 caf\u00e9</p>".encode(),
+]
+
+
+def test_extraction_matches_pandas_reference(spark):
+    """The Column-expression extraction equals the pandas expressions
+    it replaced, kept here as the reference: utf-8 decode with
+    errors="replace", str.extract(<p>…</p>), str.findall(href)."""
+    import pandas as pd
+
+    from graphblast_spark.sources.distill import _HREF_RE, _TEXT_RE
+
+    html = pd.Series(_EDGE_HTML, dtype=object)
+    decoded = html.str.decode("utf-8", errors="replace").fillna("")
+    text = decoded.str.extract(_TEXT_RE, expand=False).fillna("")
+    links = decoded.str.findall(_HREF_RE)
+    expect = {f"u{i}": (text[i], list(links[i])) for i in range(len(html))}
+
+    pages = spark.createDataFrame(
+        [(f"u{i}", h, "en") for i, h in enumerate(_EDGE_HTML)],
+        "url string, html binary, lang string",
+    )
+    got = {
+        r.url: (r.text_extracted, list(r.outlinks))
+        for r in extract_columns(pages).collect()
+    }
+    assert got == expect
 
 
 def test_distill_clean_invariants(spark, pages):

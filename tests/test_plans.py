@@ -19,6 +19,11 @@ from graphblast_spark.sources.mtx import fixture_graph
 
 SF = "/root/testdata/sf0.001"
 
+# Physical operators that evaluate Python on an executor (row UDF,
+# pandas/Arrow UDF, mapInPandas/mapInArrow, grouped pandas map).
+PYTHON_EVAL_OPS = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                   "FlatMapGroupsInPandas", "PythonMapInArrow")
+
 
 def test_push_vxm_broadcasts_frontier(spark):
     """Sparse frontier → broadcast hash join (the SpMSpV push path,
@@ -194,9 +199,78 @@ def test_multimodal_stats_plans_no_python_worker(spark):
     for df in (decode_stats(assets), byte_histogram(assets), extract_features(assets)):
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
-        for bad in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-                    "FlatMapGroupsInPandas", "PythonMapInArrow"):
+        for bad in PYTHON_EVAL_OPS:
             assert bad not in plan, f"{bad} in plan:\n{plan}"
+
+
+def _executed_plans(spark, body) -> list[str]:
+    """Physical plans of every SQL execution ``body()`` ran, read from
+    the status store — the checkpoint jobs included, whose upstream
+    plans a returned frame's own plan (a checkpoint scan) hides."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    seen = max((e.executionId() for e in executions()), default=-1)
+    body()
+    return [e.physicalPlanDescription() for e in executions() if e.executionId() > seen]
+
+
+def test_distill_and_ingest_plans_no_python_worker(spark, tmp_path):
+    """Pages → edges runs as JVM Column expressions end to end: no plan
+    that distill_edges, assign_dense_ids, the streaming per-batch pairs
+    or edge_log_graph executes holds a Python-eval operator."""
+    from graphblast_spark.sources.corpus import generate_pages
+    from graphblast_spark.sources.distill import assign_dense_ids, distill_edges
+    from graphblast_spark.streaming.ingest import (
+        edge_log_graph,
+        stream_pages,
+        streaming_distill,
+    )
+
+    pages_dir, log_dir = str(tmp_path / "pages"), str(tmp_path / "log")
+    generate_pages(spark, 200, seed=5).write.parquet(pages_dir)
+    pages = spark.read.parquet(pages_dir)
+    graphs = []
+
+    def distill():
+        edges, url_map = distill_edges(pages)
+        edges.collect()
+        url_map.collect()
+        url_map.unpersist()
+
+    def ingest():
+        streaming_distill(
+            stream_pages(spark, pages_dir), log_dir, str(tmp_path / "ck")
+        ).awaitTermination(180)
+        g, url_map = edge_log_graph(spark, log_dir)
+        g.edges.collect()
+        url_map.unpersist()
+        graphs.append(g)
+
+    runs = {
+        "distill_edges": _executed_plans(spark, distill),
+        "assign_dense_ids": _executed_plans(
+            spark, lambda: assign_dense_ids(pages.select("url")).collect()
+        ),
+        "streaming_distill + edge_log_graph": _executed_plans(spark, ingest),
+    }
+    for g in graphs:
+        g.unpersist()
+    for name, plans in runs.items():
+        assert plans, f"{name}: no SQL execution recorded"
+        for plan in plans:
+            for bad in PYTHON_EVAL_OPS:
+                assert bad not in plan, f"{bad} in a {name} plan:\n{plan}"
+    # the extraction and the range-shuffle rank were among the plans seen
+    for name in ("distill_edges", "streaming_distill + edge_log_graph"):
+        assert any("regexp_extract_all" in p for p in runs[name]), name
+    for name in ("distill_edges", "assign_dense_ids", "streaming_distill + edge_log_graph"):
+        assert any("rangepartitioning" in p for p in runs[name]), name
 
 
 def test_truncate_plan_bounds_catalyst_size_stat(spark):
@@ -246,7 +320,7 @@ def test_cc_hook_step_single_edge_scan(spark):
     ).persist()
     e.count()
     parent = spark.range(4).select("id", F.col("id").alias("val"))
-    hooked = _hook_step(e, parent, scatter_hook=True)
+    hooked = _hook_step(e, parent)
     plan = _physical(hooked)
     scans = len(re.findall(r"InMemoryTableScan", plan))
     assert scans == 1, f"edge table scanned {scans}x per superstep:\n{plan}"
