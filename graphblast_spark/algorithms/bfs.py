@@ -52,10 +52,11 @@ def bfs(
         f = F.broadcast(s["frontier"]) if push else s["frontier"]
         nxt = (
             g.edges.join(f, on=g.edges["src"] == f["id"], how="inner")
-            .select(g.edges["dst"].alias("id"))
+            # depth from the frontier's, not a per-superstep literal
+            # (one compiled class per value)
+            .select(g.edges["dst"].alias("id"), (f["depth"] + 1).alias("depth"))
             .distinct()
             .join(s["depths"], on="id", how="left_anti")  # complemented visited mask
-            .withColumn("depth", F.lit(it + 1).cast("long"))
             .transform(truncate_plan)
         )
         return {"depths": s["depths"].unionByName(nxt), "frontier": nxt}

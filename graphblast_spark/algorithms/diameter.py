@@ -112,10 +112,9 @@ def _msbfs_one_batch(
         fr = F.broadcast(s["frontier"]) if frontier_n <= 1_000_000 else s["frontier"]
         nxt = (
             g.edges.join(fr, on=g.edges["src"] == fr["id"], how="inner")
-            .select("root", F.col("dst").alias("id"))
+            .select("root", F.col("dst").alias("id"), (fr["depth"] + 1).alias("depth"))
             .distinct()
             .join(s["visited"], on=["root", "id"], how="left_anti")
-            .withColumn("depth", F.lit(it + 1).cast("long"))
             .transform(truncate_plan)
         )
         return {"visited": s["visited"].unionByName(nxt), "frontier": nxt}

@@ -21,8 +21,10 @@ Physical plan per superstep (scale notes):
 - contributions = edges ⋈ ranks on src: ranks come out of the previous
   iteration's groupBy(id) hash-partitioned on id == src key, and edges
   are persisted pre-partitioned on src, so AQE elides both exchanges;
-- density is restored by unioning a zero per vertex *before* the
-  aggregate (one shuffle) instead of a second outer join (two);
+- density is restored by unioning each vertex's teleport term *before*
+  the aggregate (one shuffle) instead of a second outer join (two);
+  the uniform (1-α)/n is data in that frame, not a literal, so every
+  graph size runs the same generated code;
 - lineage is truncated every iteration (eager localCheckpoint) and the
   convergence check is the single scalar action per superstep.
 """
@@ -94,8 +96,10 @@ def pagerank(
     The iteration map is an affine contraction with a unique fixed
     point, so any start converges to the same scores; a near-fixpoint
     start converges in a few supersteps instead of tens (the
-    incremental-analytics path). Ignored when a checkpoint resume is
-    in progress (the checkpointed state wins).
+    incremental-analytics path). With the uniform teleport, vertices it
+    lacks start at 1/n and ids outside the graph are dropped. Ignored
+    when a checkpoint resume is in progress (the checkpointed state
+    wins).
 
     ``teleport`` (id, c) replaces the uniform (1-α)/n teleport with a
     per-vertex one; it must carry a row for every vertex (zeros
@@ -108,20 +112,35 @@ def pagerank(
     if w_edges is None:
         w_edges = pagerank_prep(g, alpha, weighted=weighted)
 
-    if teleport is None:
-        base, const = g.vertices.select("id", F.lit(0.0).alias("c")), (1.0 - alpha) / n
-    else:
-        base, const = teleport, 0.0
-
     if runner is None:
         runner = SuperstepRunner(spark)
 
+    # The teleport term each superstep adds, (id, c): the caller's, or
+    # the uniform (1-α)/n carried as data in the init frame, so that no
+    # superstep's generated code depends on n (a literal would compile
+    # afresh for every graph size).
+    base = teleport
+
     def init():
-        if init_ranks is not None:
-            return {"ranks": init_ranks.select("id", F.col("val").cast("double"))}
-        return {"ranks": g.vertices.select("id", F.lit(1.0 / n).alias("val"))}
+        nonlocal base
+        if init_ranks is None:
+            ranks = g.vertices.select("id", F.lit(1.0 / n).alias("val"))
+        elif teleport is None:
+            # dense, so the teleport column covers every vertex
+            ranks = g.vertices.join(init_ranks.select("id", "val"), "id", "left").select(
+                "id", F.coalesce(F.col("val").cast("double"), F.lit(1.0 / n)).alias("val")
+            )
+        else:
+            ranks = init_ranks.select("id", F.col("val").cast("double"))
+        if teleport is None:
+            ranks = ranks.withColumn("c", F.lit((1.0 - alpha) / n)).transform(truncate_plan)
+            base = ranks.select("id", "c")
+        return {"ranks": ranks}
 
     def step(s, it, sc):
+        nonlocal base
+        if base is None:  # resumed from a checkpoint: init did not run
+            base = g.vertices.select("id", F.lit((1.0 - alpha) / n).alias("c"))
         # shuffle-hash hint: probe the persisted src-partitioned edge
         # table, build the hash table from ranks — avoids re-sorting |E|
         # rows per superstep (sort-merge), measured 1.6× faster at 16M
@@ -134,7 +153,7 @@ def pagerank(
         return {"ranks": (
             contribs.unionByName(base)
             .groupBy("id")
-            .agg((F.lit(const) + F.sum("c")).alias("val"))
+            .agg(F.sum("c").alias("val"))
         )}
 
     def converged(new, old, sc):
@@ -153,7 +172,7 @@ def pagerank(
 
     if not caller_prep:
         w_edges.unpersist()
-    return state["ranks"]
+    return state["ranks"].select("id", "val")
 
 
 def personalized_pagerank(
@@ -244,13 +263,9 @@ def incremental_pagerank(
     tens when the append perturbed the graph locally (measured in
     BENCH.md: the incremental-analytics path of the streaming gate,
     streaming/ingest.py edge_log_graph → this)."""
-    init = (
-        g.vertices.join(prev_ranks.select("id", "val"), on="id", how="left")
-        .select("id", F.coalesce("val", F.lit(1.0 / g.n)).alias("val"))
-    )
     return pagerank(
         g, alpha=alpha, eps=eps, desc=desc, runner=runner,
-        w_edges=w_edges, init_ranks=init,
+        w_edges=w_edges, init_ranks=prev_ranks,
     )
 
 

@@ -227,14 +227,3 @@ class Graph:
         from graphblast_spark.sources.store import load_graph
 
         return load_graph(spark, name)
-
-
-def dense_vector(g: Graph, value=0.0, colname: str = "val") -> DataFrame:
-    """Vector fill (reference vector.hpp:174-182): one row per vertex."""
-    return g.vertices.select("id", F.lit(value).alias(colname))
-
-
-def iota_vector(g: Graph, colname: str = "val") -> DataFrame:
-    """fillAscending (reference backend/cuda/vector.hpp:240-253):
-    v(i)=i — the CC parent init (cc.hpp:44)."""
-    return g.vertices.select("id", F.col("id").alias(colname))

@@ -27,7 +27,8 @@ The driver owns everything else, identically for every loop:
   state is written as parquet with an atomically-renamed
   ``meta.json`` carrying the iteration number and scalars;
 - **metrics**: one JSON line per superstep in ``run_dir/metrics.jsonl``
-  with ``iter``, wall ``ms`` and the scalars;
+  with ``iter``, wall ``ms``, the Janino ``classes`` it compiled (see
+  :func:`compiled_classes`) and the scalars;
 - **the stop test**, and its outcome, returned to the caller — what to
   do when the cap is hit (raise or return) stays the algorithm's call.
 """
@@ -38,7 +39,7 @@ import json
 import os
 import time
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -90,6 +91,23 @@ def truncate_plan(df: DataFrame) -> DataFrame:
         return DataFrame(fresh, df.sparkSession)
     except Exception:
         return ck
+
+
+def compiled_classes(spark: SparkSession) -> int:
+    """Janino classes this JVM has compiled so far (Spark's
+    ``CodegenMetrics``), one py4j read. A superstep whose plan matches
+    one already compiled this session compiles none; a count that stays
+    above zero superstep after superstep means its generated code
+    depends on a per-superstep value (a literal that should be data).
+    In local mode driver and task threads compile each new pipeline
+    once each. 0 without a JVM handle (e.g. Spark Connect)."""
+    try:
+        return int(
+            spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount()
+        )
+    except AttributeError:
+        return 0
 
 
 def _has_lineage(df: DataFrame) -> bool:
@@ -168,6 +186,7 @@ class SuperstepRunner:
     run_dir: str | None = None      # None → in-memory only (no durable ckpt)
     checkpoint_every: int = 0       # 0 → never write durable checkpoints
     name: str = "run"
+    _classes: int = field(default=0, init=False, repr=False)  # compile count at the last line
 
     def iterate(
         self,
@@ -193,6 +212,8 @@ class SuperstepRunner:
         (default: the session's, see :func:`loop_width`)."""
         with _pinned(self.spark, width):
             state, start, scalars = self._resume_or_init(init)
+            if self.run_dir:
+                self._classes = compiled_classes(self.spark)
             for it in range(start, iters):
                 t0 = time.time()
                 new = step(state, it, scalars)
@@ -250,9 +271,8 @@ class SuperstepRunner:
         return {k: truncate_plan(df) if _has_lineage(df) else df for k, df in state.items()}
 
     def _commit(self, it: int, state: State, scalars: dict, ms: float) -> State:
-        """Log the superstep; write a durable checkpoint when the cadence
-        says so. Returns the (possibly checkpoint-backed) state."""
-        self._log({"iter": it, "ms": ms, **({"scalars": scalars} if scalars else {})})
+        """Write a durable checkpoint when the cadence says so, then log
+        the superstep. Returns the (possibly checkpoint-backed) state."""
         if state and self.checkpoint_every and self.run_dir and (it + 1) % self.checkpoint_every == 0:
             cdir = self._ckpt_dir(it)
             for k, df in state.items():
@@ -272,11 +292,17 @@ class SuperstepRunner:
             state = {
                 k: self.spark.read.parquet(os.path.join(cdir, k)) for k in state
             }
+        self._log({"iter": it, "ms": ms, **({"scalars": scalars} if scalars else {})})
         return state
 
     def _log(self, rec: dict) -> None:
+        """Append one metrics line; ``classes`` counts the Janino
+        compiles since the previous line (or since init), the
+        superstep's checkpoint write included. No-op without a run_dir."""
         if not self.run_dir:
             return
+        seen, self._classes = self._classes, compiled_classes(self.spark)
+        rec["classes"] = self._classes - seen
         os.makedirs(self.run_dir, exist_ok=True)
         with open(os.path.join(self.run_dir, "metrics.jsonl"), "a") as fh:
             fh.write(json.dumps(rec) + "\n")

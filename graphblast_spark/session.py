@@ -9,6 +9,25 @@ multimodal codec kernels, the ``mapInArrow`` SpMV kernel, pandas
 streaming state; distillation needs none), and shuffle
 partitions sized to the parallelism level rather than Spark's 200
 default.
+
+Two confs make a plan compile once per session. At benchmark sizes an
+op's CPU goes mostly to compiling its whole-stage classes (and to the
+JIT compiling them again), not to its data:
+
+- ``spark.sql.codegen.cache.maxEntries`` = 4096. Spark's default LRU of
+  100 classes is smaller than one web pipeline op (~180 classes), so
+  every op recompiled what the op before it, or the set-up, had
+  already compiled. It is a static conf, read once when the JVM first
+  generates code, so it must be on the builder before the session's
+  first query; it cannot be changed on a running session.
+- ``spark.sql.codegen.useIdInClassName`` = false. The stage id is then
+  left out of the generated class, so an identical pipeline that AQE
+  or another plan puts at a different stage position reuses the
+  compiled class instead of compiling a renamed copy.
+
+The cache only helps plans whose generated code repeats: a value that
+varies per call or per superstep belongs in the data, not in an
+``F.lit`` (see ``algorithms/pagerank.py``'s teleport column).
 """
 
 from __future__ import annotations
@@ -60,6 +79,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.legacy.createHiveTableByDefault", "false")
+        # Compile each plan once per session (module docstring).
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -3,6 +3,9 @@ for scale must stay the plans we designed (SURVEY §4 dispositions)."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -381,3 +384,40 @@ def test_louvain_move_round_plan_no_python_no_window(spark):
                 "Window", "rangepartitioning"):
         assert bad not in plan, f"{bad} in louvain move-round plan:\n{plan}"
     g.unpersist()
+
+
+def _superstep_classes(run_dir) -> list[int]:
+    with open(os.path.join(run_dir, "metrics.jsonl")) as fh:
+        return [json.loads(line)["classes"] for line in fh]
+
+
+def test_supersteps_reuse_compiled_code(spark, tmp_path):
+    """A superstep whose plan this session has already compiled compiles
+    no Janino class (the runner's per-superstep ``classes``, read from
+    Spark's CodegenMetrics). PageRank's generated code must not depend
+    on the vertex count: the uniform teleport (1-α)/n is data, not a
+    literal. BFS stamps depth from its frontier, not with a literal per
+    superstep, so every superstep after the first two reuses their
+    code."""
+    from graphblast_spark.algorithms import bfs, pagerank
+    from graphblast_spark.matrix import Graph
+    from graphblast_spark.runtime.superstep import SuperstepRunner
+
+    g = fixture_graph(spark, "test_pr")
+    wider = Graph.build(g.edges, vertices=g.vertices.unionByName(spark.range(g.n, g.n + 3)))
+    assert wider.n != g.n and wider.nvals == g.nvals
+    for i, gg in enumerate((g, wider)):
+        pagerank(gg, fixed_iters=3,
+                 runner=SuperstepRunner(spark, run_dir=str(tmp_path / f"pr{i}"))).collect()
+    assert _superstep_classes(tmp_path / "pr1") == [0, 0, 0]
+
+    chain = Graph.build(
+        spark.createDataFrame([(i, i + 1) for i in range(15)], "src long, dst long"),
+        vertices=spark.range(16),
+    )
+    depths = bfs(chain, 0, runner=SuperstepRunner(spark, run_dir=str(tmp_path / "bfs")))
+    assert sorted(r["depth"] for r in depths.collect()) == list(range(16))
+    classes = _superstep_classes(tmp_path / "bfs")
+    assert len(classes) == 16 and classes[2:] == [0] * 14
+    for gg in (g, wider, chain):
+        gg.unpersist()

@@ -94,7 +94,8 @@ LOOPS = {
 @pytest.mark.parametrize("loop", sorted(LOOPS))
 def test_metrics_jsonl_shape(spark, tmp_path, loop):
     """One metrics line per superstep, consecutive ``iter`` from 0, a
-    wall ``ms`` on every line (perfbench reads ``["ms"]`` from each)."""
+    wall ``ms`` on every line (perfbench reads ``["ms"]`` from each) and
+    the Janino ``classes`` compiled since the previous line."""
     fixture, run = LOOPS[loop]
     g = fixture_graph(spark, fixture)
     run_dir = str(tmp_path / "m")
@@ -103,6 +104,7 @@ def test_metrics_jsonl_shape(spark, tmp_path, loop):
     assert lines
     assert [l["iter"] for l in lines] == list(range(len(lines)))
     assert all(isinstance(l["ms"], float) for l in lines)
+    assert all(isinstance(l["classes"], int) and l["classes"] >= 0 for l in lines)
     if loop == "pr_fixed":
         assert len(lines) == 3
     g.unpersist()
