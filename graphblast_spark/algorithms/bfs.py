@@ -5,13 +5,13 @@ complemented visited-mask, marking depth via masked assign; CPU oracle
 test_bfs.hpp:11-61 (source default 0, unreachable = -1 analog: the
 oracle leaves them at n, we return no row — callers fill).
 
-Spark per level: next = (frontier ⋈ edges on src → dst, distinct)
-anti-join visited. The anti-join IS the complement mask
-(GrB_SCMP, types.hpp:44-78 → left_anti, SURVEY §2.7) and the
-distinct-instead-of-agg IS the early-exit/sort-elision path
-(kernels/spmv.hpp:33-51). The frontier is broadcast while small
-(push), falling back to shuffle join when it grows past the
-switchpoint (pull) — the reference's --mxvmode 0 direction optimization.
+Spark per level: next = vxm(frontier with val = depth+1, A,
+MinimumFirst) under the complemented visited mask — every frontier
+vertex carries the same depth, so the min is that depth, and the mask
+is vxm's anti-join (GrB_SCMP, types.hpp:44-78 → left_anti, SURVEY
+§2.7). Direction is vxm's: the frontier is broadcast while small
+(push) and shuffle-hash joined once it grows past the descriptor's
+density threshold (pull) — the reference's --mxvmode optimization.
 """
 
 from __future__ import annotations
@@ -19,8 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor, MxvMode
+from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
+from graphblast_spark.operators.vecmat import vxm
 from graphblast_spark.runtime.superstep import SuperstepRunner, truncate_plan
 
 
@@ -43,22 +44,16 @@ def bfs(
         )
         return {"depths": src_df, "frontier": src_df}
 
+    visit = desc.with_(mask_complement=True)  # complemented visited mask
+
     def step(s, it, sc):
-        frontier_n = sc.get("frontier_n", 1)
-        push = (
-            desc.mxv_mode == MxvMode.PUSHONLY
-            or (desc.mxv_mode == MxvMode.PUSHPULL and frontier_n / max(g.n, 1) <= desc.switchpoint)
-        )
-        f = F.broadcast(s["frontier"]) if push else s["frontier"]
-        nxt = (
-            g.edges.join(f, on=g.edges["src"] == f["id"], how="inner")
-            # depth from the frontier's, not a per-superstep literal
-            # (one compiled class per value)
-            .select(g.edges["dst"].alias("id"), (f["depth"] + 1).alias("depth"))
-            .distinct()
-            .join(s["depths"], on="id", how="left_anti")  # complemented visited mask
-            .transform(truncate_plan)
-        )
+        # depth from the frontier's, not a per-superstep literal (one
+        # compiled class per value)
+        f = s["frontier"].select("id", (F.col("depth") + 1).alias("val"))
+        nxt = vxm(
+            f, g, "MinimumFirst", mask=s["depths"], desc=visit,
+            u_nvals=sc.get("frontier_n", 1),
+        ).withColumnRenamed("val", "depth").transform(truncate_plan)
         return {"depths": s["depths"].unionByName(nxt), "frontier": nxt}
 
     def converged(new, old, sc):

@@ -12,7 +12,7 @@ Spark formulation per superstep (undirected: edges are used in both
 orientations, the --directed 2 semantics of run_cc.sh:16):
 
 1. hook:    f'(u) = min(f(u), mngf(u)),  mngf(u) = min_{v∈N(u)} f(v)
-            — join + min-agg
+            — mxv MinimumSelectSecond over the undirected view
 2. scatter: f'[f(u)] = min(f'[f(u)], mngf(u))        — group-by-parent
             + merge join (cc.hpp:83-84 assignScatter, min-resolved)
 3. jump:    f''(u) = f'(f'(u))                       — self-join gather
@@ -37,14 +37,16 @@ from pyspark.sql import functions as F
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
 from graphblast_spark.operators.assign import extract_gather
+from graphblast_spark.operators.vecmat import mxv
 from graphblast_spark.runtime.superstep import SuperstepRunner
 
 
-def _hook_step(e_sym: DataFrame, parent: DataFrame) -> DataFrame:
-    """One FastSV hook superstep over the persisted symmetric edges.
+def _hook_step(und: Graph, parent: DataFrame) -> DataFrame:
+    """One FastSV hook superstep over the persisted symmetric edges
+    ``und`` (the undirected view wrapped as a Graph).
 
-    (1a) min neighbor parent (cc.hpp:78 MinimumSelectSecond vxm);
-    shuffle-hash: probe persisted edges, build from parent.
+    (1a) min neighbor parent (cc.hpp:78 MinimumSelectSecond) — an
+    ``mxv`` on the operator layer, pulling over the view's dst layout.
     (1b) self-hook: f(u) = min(f(u), mngf(u)) (cc.hpp:90-91).
     (1c) scatter-hook onto the PARENT: f[f(u)] = min(f[f(u)], mngf(u))
     (cc.hpp:83-84 assignScatter, min-resolved). The scatter is the step
@@ -64,12 +66,7 @@ def _hook_step(e_sym: DataFrame, parent: DataFrame) -> DataFrame:
     (measured 9.9 s vs 6.9 s on the sf0.1 cc slot; plan-pinned in
     tests/test_plans.py test_cc_hook_step_single_edge_scan).
     """
-    p = parent.hint("shuffle_hash")
-    nbr_min = (
-        e_sym.join(p, on=e_sym["dst"] == p["id"], how="inner")
-        .groupBy(e_sym["src"].alias("id"))
-        .agg(F.min(p["val"]).alias("nmin"))
-    )
+    nbr_min = mxv(parent, und, "MinimumSelectSecond").withColumnRenamed("val", "nmin")
     j = parent.join(nbr_min, on="id", how="left")
     hv = F.least(F.col("val"), F.coalesce(F.col("nmin"), F.col("val")))
     return (
@@ -104,8 +101,9 @@ def connected_components(
     spark = g.edges.sparkSession
     # the graph's undirected view, laid out on dst — the hook join's
     # edge-side key — so only the (small) parent table shuffles each
-    # superstep
-    e_sym = g.undirected()
+    # superstep; both orientations of each edge bound its rows
+    und = Graph(edges=g.undirected().withColumn("val", F.lit(1.0)),
+                vertices=g.vertices, n=g.n, nvals=2 * g.nvals)
 
     if runner is None:
         runner = SuperstepRunner(spark)
@@ -127,7 +125,7 @@ def connected_components(
         return {"parent": warm}
 
     def step(s, it, sc):
-        hooked = _hook_step(e_sym, s["parent"])
+        hooked = _hook_step(und, s["parent"])
         # (2) shortcut/jump: f[u] = f[f[u]] (cc.hpp:98-99 extractGather)
         return {"parent": extract_gather(hooked, hooked)}
 

@@ -64,18 +64,24 @@ def graph_coloring(
     adj = g.undirected()
 
     def init():
-        cand = g.vertices.select("id", lcg_weight(F.col("id")).alias("w"))
+        # every candidate carries this round's colour: data, not a
+        # per-round literal (which would compile afresh each round)
+        cand = g.vertices.select(
+            "id", lcg_weight(F.col("id")).alias("w"), F.lit(1).alias("color")
+        )
         colored = spark.createDataFrame([], "id long, color int")
         return {"cand": cand, "colored": colored}
 
     def step(s, it, sc):
-        # local (weight, id) maxima of the uncolored (see mis.py)
+        # local (weight, id) maxima of the uncolored (see mis.py),
+        # with their colour
         winners = local_maxima(adj, s["cand"]).transform(truncate_plan)
         if winners.isEmpty():
             return None
         return {
-            "cand": s["cand"].join(winners, on="id", how="left_anti"),
-            "colored": s["colored"].unionByName(winners.withColumn("color", F.lit(it + 1))),
+            "cand": s["cand"].join(winners, on="id", how="left_anti")
+            .withColumn("color", F.col("color") + 1),
+            "colored": s["colored"].unionByName(winners),
         }
 
     max_rounds = fixed_rounds if fixed_rounds is not None else desc.max_niter

@@ -4,9 +4,9 @@ Beyond the reference's algorithm set but the third canonical link-
 analysis ranker next to PageRank and HITS (Katz 1953; the alpha-
 attenuated walk-count family PageRank generalizes): it completes the
 engine's web-ranking tier and is a pure composition of existing verbs
-— each iteration is ONE vecmat-shaped join+agg over the persisted
-edge table (the pagerank.py physical plan) plus an affine map that
-Catalyst fuses into the aggregate's projection.
+— each iteration is ONE ``vxm`` over the persisted edge table (the
+pagerank.py physical plan) plus an affine map that Catalyst fuses into
+the aggregate's projection.
 
 Semantics (deterministic, fixed-iteration, oracle-replayable):
 
@@ -21,10 +21,11 @@ standard contract-oracle posture, like hits.py/salsa.py). Vertices
 with no in-links hold exactly beta at every step — the output is
 dense over the full vertex universe.
 
-Scale: identical to one PageRank iteration per step — one shuffle
-(join on src + agg on dst with map-side partial sums absorbing hub
-fan-in); frontier is always the full vertex set so no direction
-switching applies.
+Physical plan per step: one PageRank iteration's —
+``vxm(x, A, PlusFirst, accum="plus", w=zeros)``, the join on src and
+ONE aggregate on dst (map-side partial sums absorb hub fan-in) with
+the zeros folded in, which keeps the output dense. The vector is the
+full vertex set, so vxm takes its shuffle-hash pull path.
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.matrix import Graph
+from graphblast_spark.operators.vecmat import vxm
 from graphblast_spark.runtime.superstep import SuperstepRunner, truncate_plan
 
 
@@ -58,26 +60,15 @@ def katz_centrality(
     if runner is None:
         runner = SuperstepRunner(spark)
 
-    edges = g.edges.select("src", "dst")
-    verts = g.vertices.select("id")
+    zeros = g.vertices.select("id", F.lit(0.0).alias("val"))
 
     def init():
-        return {"x": verts.select("id", F.lit(float(beta)).alias("val"))}
+        return {"x": g.vertices.select("id", F.lit(float(beta)).alias("val"))}
 
     def step(s, it, sc):
-        v = s["x"].hint("shuffle_hash")
-        contribs = edges.join(v, on=edges["src"] == v["id"], how="inner").select(
-            F.col("dst").alias("id"), F.col("val").alias("c")
-        )
-        # Union-before-agg density restore (pagerank.py pattern):
-        # vertices with no in-links surface with c=0 in the same
-        # single shuffle, so the affine map below stays dense.
-        return {"x": (
-            contribs.unionByName(verts.select("id", F.lit(0.0).alias("c")))
-            .groupBy("id")
-            .agg(
-                (F.lit(float(beta)) + F.lit(float(alpha)) * F.sum("c")).alias("val")
-            )
+        y = vxm(s["x"], g, "PlusFirst", u_nvals=g.n, accum="plus", w=zeros)
+        return {"x": y.select(
+            "id", (F.lit(float(beta)) + F.lit(float(alpha)) * F.col("val")).alias("val")
         )}
 
     x = runner.iterate(init, step, iters=fixed_iters)[0]["x"]
@@ -103,37 +94,27 @@ def eigenvector_centrality(
     normalization guard keeps it at exact zeros instead of NaN, which
     is also the fixpoint the infinite series converges to there.
 
-    Scale: per step ONE shuffle — the vecmat join on src + agg on dst
-    with map-side partial sums absorbing hub fan-in (pagerank.py
-    plan), plus a single-row L2-norm aggregate broadcast back onto the
-    result (BroadcastNestedLoopJoin of one row; no second shuffle of
-    the vertex table).
+    Scale: per step ONE shuffle — katz's ``vxm`` (join on src + one
+    aggregate on dst, zeros folded in), plus a single-row L2-norm
+    aggregate broadcast back onto the result (BroadcastNestedLoopJoin
+    of one row; no second shuffle of the vertex table).
     """
     spark = g.edges.sparkSession
     if runner is None:
         runner = SuperstepRunner(spark)
 
-    edges = g.edges.select("src", "dst")
-    verts = g.vertices.select("id")
+    zeros = g.vertices.select("id", F.lit(0.0).alias("val"))
 
     def init():
-        return {"x": verts.select("id", F.lit(1.0).alias("val"))}
+        return {"x": g.vertices.select("id", F.lit(1.0).alias("val"))}
 
     def step(s, it, sc):
-        v = s["x"].hint("shuffle_hash")
-        contribs = edges.join(v, on=edges["src"] == v["id"], how="inner").select(
-            F.col("dst").alias("id"), F.col("val").alias("c")
-        )
         # truncate the un-normalized vector BEFORE the norm: both
         # the 1-row norm aggregate and the normalization read y, and
         # without materialization each would re-execute the |E|-row
         # join+agg (ReuseExchange is best-effort under AQE)
-        y = (
-            contribs.unionByName(verts.select("id", F.lit(0.0).alias("c")))
-            .groupBy("id")
-            .agg(F.sum("c").alias("val"))
-            .transform(truncate_plan)
-        )
+        y = vxm(s["x"], g, "PlusFirst", u_nvals=g.n, accum="plus",
+                w=zeros).transform(truncate_plan)
         nrm = y.agg(F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("nrm"))
         return {"x": y.crossJoin(F.broadcast(nrm)).select(
             "id",

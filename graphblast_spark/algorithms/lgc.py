@@ -91,8 +91,8 @@ def lgc(
 
         # r ⟵ (old r with frontier rows halved) accum(+)= Aᵀ·r2 —
         # the reference's accum-mxv (lgc.hpp:126-128), first-class:
-        # vxm handles push/pull by u_nvals vs switchpoint and merges
-        # into the old vector with accum="plus" (operators/accum.py).
+        # vxm picks push or pull from the frontier size u_nvals and
+        # folds accum="plus" into its one aggregate (no merge join).
         r_kept = r.join(f.select("id"), on="id", how="left_anti")
         r_half = f.select("id", (F.lit((1.0 - alpha) / 2.0) * F.col("r")).alias("r"))
         r_base = r_kept.unionByName(r_half).select("id", F.col("r").alias("val"))

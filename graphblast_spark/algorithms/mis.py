@@ -53,7 +53,8 @@ def lcg_weight(col, round_: int = 0):
 
 
 def local_maxima(adj: DataFrame, cand: DataFrame) -> DataFrame:
-    """(id) of the candidates whose (weight, id) beats every candidate
+    """The candidate rows (``w`` dropped; any other column the candidates
+    carry comes along) whose (weight, id) beats every candidate
     neighbor's — no candidate neighbor → m null → winner. m(v) = max
     (weight, id) among still-candidate neighbors (vxm
     MaximumMultiplies, mis.hpp:64-65); the id component breaks
@@ -72,7 +73,7 @@ def local_maxima(adj: DataFrame, cand: DataFrame) -> DataFrame:
             F.col("m").isNull()
             | (F.struct(F.col("w").alias("w"), F.col("id").alias("i")) > F.col("m"))
         )
-        .select("id")
+        .select(*[c for c in cand.columns if c != "w"])
     )
 
 

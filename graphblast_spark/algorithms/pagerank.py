@@ -17,14 +17,18 @@ in float64 so aggregation-order noise ≪ the 1e-6 comparison tolerance
 
 Physical plan per superstep (scale notes):
 - the weighted edge table (val = α/outdeg(src)) is built ONCE, hash-
-  partitioned on src, persisted (the gpr.cu:81-90 prep);
-- contributions = edges ⋈ ranks on src: ranks come out of the previous
-  iteration's groupBy(id) hash-partitioned on id == src key, and edges
-  are persisted pre-partitioned on src, so AQE elides both exchanges;
-- density is restored by unioning each vertex's teleport term *before*
-  the aggregate (one shuffle) instead of a second outer join (two);
-  the uniform (1-α)/n is data in that frame, not a literal, so every
-  graph size runs the same generated code;
+  partitioned on src, persisted (the gpr.cu:81-90 prep), and wrapped
+  as a :class:`Graph` the loop runs ``vxm`` over;
+- each superstep is ``vxm(ranks, W, PlusMultiplies, accum="plus",
+  w=teleport)``: edges ⋈ ranks on src, where ranks come out of the
+  previous iteration's groupBy(id) hash-partitioned on id == src key
+  and the edges are persisted pre-partitioned on src, so AQE elides
+  both exchanges (the dense ranks take vxm's shuffle-hash pull path);
+- vxm folds the ``plus`` accumulate into its one aggregate: each
+  vertex's teleport term is unioned in *before* the groupBy, which also
+  restores density (one shuffle, not a second outer join); the uniform
+  (1-α)/n is data in that frame, not a literal, so every graph size
+  runs the same generated code;
 - lineage is truncated every iteration (eager localCheckpoint) and the
   convergence check is the single scalar action per superstep.
 """
@@ -36,6 +40,7 @@ from pyspark.sql import functions as F
 
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
+from graphblast_spark.operators.vecmat import vxm
 from graphblast_spark.runtime.superstep import (
     SuperstepRunner,
     child_runner,
@@ -137,23 +142,17 @@ def pagerank(
             base = ranks.select("id", "c")
         return {"ranks": ranks}
 
+    # the transition matrix: one row per edge of g, so g.nvals bounds it
+    W = Graph(edges=w_edges.withColumnRenamed("w", "val"), vertices=g.vertices,
+              n=n, nvals=g.nvals)
+
     def step(s, it, sc):
         nonlocal base
         if base is None:  # resumed from a checkpoint: init did not run
             base = g.vertices.select("id", F.lit((1.0 - alpha) / n).alias("c"))
-        # shuffle-hash hint: probe the persisted src-partitioned edge
-        # table, build the hash table from ranks — avoids re-sorting |E|
-        # rows per superstep (sort-merge), measured 1.6× faster at 16M
-        # edges / local[32].
-        r = s["ranks"].hint("shuffle_hash")
-        contribs = (
-            w_edges.join(r, on=w_edges["src"] == r["id"], how="inner")
-            .select(w_edges["dst"].alias("id"), (F.col("w") * r["val"]).alias("c"))
-        )
-        return {"ranks": (
-            contribs.unionByName(base)
-            .groupBy("id")
-            .agg(F.sum("c").alias("val"))
+        return {"ranks": vxm(
+            s["ranks"], W, "PlusMultiplies", desc=desc, u_nvals=n,
+            accum="plus", w=base.withColumnRenamed("c", "val"),
         )}
 
     def converged(new, old, sc):

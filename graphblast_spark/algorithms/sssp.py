@@ -6,7 +6,8 @@ vertices; CPU oracle is Dijkstra (test_sssp.hpp:15-79) — both reach
 the same fixpoint on non-negative weights.
 
 Spark per round: relax only out of vertices whose distance improved
-last round (the sparse frontier), min-combine against current
+last round (the sparse frontier) with vxm over MinimumPlus — vxm picks
+push or pull from the frontier size — min-combine against current
 distances, count improvements as the convergence scalar.
 """
 
@@ -15,8 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor, MxvMode
+from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
+from graphblast_spark.operators.vecmat import vxm
 from graphblast_spark.runtime.superstep import SuperstepRunner, truncate_plan
 
 
@@ -38,18 +40,11 @@ def sssp(
         return {"dist": s, "frontier": s}
 
     def step(s, it, sc):
-        improved_n = sc.get("improved_n", 1)
-        push = (
-            desc.mxv_mode == MxvMode.PUSHONLY
-            or (desc.mxv_mode == MxvMode.PUSHPULL and improved_n / max(g.n, 1) <= desc.switchpoint)
-        )
-        f = F.broadcast(s["frontier"]) if push else s["frontier"]
         # MinPlus relax: candidate(dst) = min over frontier (dist + w)
-        cand = (
-            g.edges.join(f, on=g.edges["src"] == f["id"], how="inner")
-            .groupBy(g.edges["dst"].alias("id"))
-            .agg(F.min(f["dist"] + g.edges["val"]).alias("cand"))
-        )
+        cand = vxm(
+            s["frontier"].withColumnRenamed("dist", "val"), g, "MinimumPlus",
+            desc=desc, u_nvals=sc.get("improved_n", 1),
+        ).withColumnRenamed("val", "cand")
         # improvement mask (sssp.hpp:72-73 PlusLess): keep strictly-better
         joined = cand.join(s["dist"], on="id", how="left")
         new_frontier = joined.filter(

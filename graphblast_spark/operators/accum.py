@@ -18,7 +18,10 @@ when a mask is present) — nothing iterative, fully codegen'd. The
 operators (vxm/mxv/ewise_*/assign) compute ``T`` with the mask already
 pushed below their aggregation for efficiency; this helper re-applies
 the mask only to rows that can come from the *old* vector, so the
-pushdown stays valid.
+pushdown stays valid. vxm/mxv skip this helper when ``accum`` is their
+semiring's own ⊕ and there is no mask: the old vector's rows are then
+just more terms of the same reduce, unioned in before the aggregate
+(operators/vecmat.py), which saves the full-outer join's shuffle.
 """
 
 from __future__ import annotations

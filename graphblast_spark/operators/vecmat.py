@@ -30,6 +30,13 @@ applied to the *output* keys as a semi-join (or anti-join when
 complemented) — and critically it is applied *before* the aggregation
 where possible, which Catalyst pushes below the shuffle.
 
+**Accumulate** (operations.hpp:14-19, ``w accum= t``): when ``accum`` is
+the semiring's own ⊕ (``plus`` over Plus, ``minimum`` over Minimum, …)
+and there is no mask, ``w``'s rows are unioned into the product rows
+before the one ``groupBy`` — the density restore PageRank, Katz,
+eigenvector, HITS and SALSA run with a zeros or teleport ``w``. Any
+other accum, or a mask, merges through ``accum_merge``.
+
 **Early exit** (reference kernels/spmv.hpp:33-51): for boolean
 semirings (LogicalOrAnd) the aggregation degenerates to existence —
 ``select(out).distinct()`` — matching the reference's sort-elision
@@ -45,6 +52,10 @@ from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor, MxvMode
 from graphblast_spark.matrix import Graph
 from graphblast_spark.operators.accum import accum_merge
 from graphblast_spark.semiring import Semiring, semiring as _resolve
+
+
+# accum ops that are a monoid's own ⊕ — foldable into its reduce
+_FOLDS = {"plus": "Plus", "minimum": "Minimum", "maximum": "Maximum"}
 
 
 def _apply_mask(out: DataFrame, mask: DataFrame | None, complement: bool) -> DataFrame:
@@ -79,9 +90,13 @@ def _vecmat(
         # hottest key's fan-in is its degree in that orientation (one
         # cached scan per Graph). Below the budget Spark's map-side
         # partial agg absorbs the skew for free; above it, pick just
-        # enough salt lanes to bring each lane under budget.
-        hub = g.hub_degree(out_key)
-        salt = None if hub <= desc.salt_budget else min(32, -(-hub // desc.salt_budget))
+        # enough salt lanes to bring each lane under budget. No fan-in
+        # exceeds |E|: a graph of known size within budget skips the scan.
+        salt = None
+        if g.nvals < 0 or g.nvals > desc.salt_budget:
+            hub = g.hub_degree(out_key)
+            if hub > desc.salt_budget:
+                salt = min(32, -(-hub // desc.salt_budget))
 
     # Direction decision (reference backend/cuda/operations.hpp:131-140).
     push = False
@@ -99,7 +114,10 @@ def _vecmat(
     joined = edges.join(frontier, on=edges[in_key] == frontier["id"], how="inner")
 
     out_col = edges[out_key].alias("id")
-    if desc.structure_only and sr.name == "LogicalOrAnd":
+    existence = desc.structure_only and sr.name == "LogicalOrAnd"
+    fold = (w is not None and mask is None and not existence
+            and _FOLDS.get(accum) == sr.add_monoid.name)
+    if existence:
         # struconly + early-exit path: existence only, no values
         # (reference reduce.hpp:71-74, kernels/spmv.hpp:33-51).
         out = joined.select(out_col).distinct().withColumn("val", F.lit(True))
@@ -111,6 +129,8 @@ def _vecmat(
         else:
             prod = sr.mul(edges["val"], frontier["val"]).alias("p")
         rows = joined.select(out_col, prod)
+        if fold:  # w's entries are more terms of the same reduce
+            rows = rows.unionByName(w.select("id", F.col("val").alias("p")))
         if salt and salt > 1:
             # Explicit hub salting (the merge-path load-balance analog,
             # reference spmspv_inner.hpp:62-320 / SURVEY §4.7): a
@@ -129,6 +149,8 @@ def _vecmat(
             out = partial.groupBy("id").agg(sr.add_agg(F.col("p")).alias("val"))
         else:
             out = rows.groupBy("id").agg(sr.add_agg(F.col("p")).alias("val"))
+    if fold:
+        return out
     out = _apply_mask(out, mask, desc.mask_complement)
     # GraphBLAS write-back: C⟨M, replace⟩ accum= T (operations.hpp:14-19).
     return accum_merge(
@@ -151,12 +173,14 @@ def vxm(
     """w(dst)⟨mask⟩ = ⊕_src u(src) ⊗ A(src,dst) — reference operations.hpp:51-87.
     ``salt``: two-phase salted reduce for extreme hub keys; the default
     ``"auto"`` derives it from the graph's cached degree stats vs
-    ``desc.salt_budget`` (None/1 disables, an int forces).
+    ``desc.salt_budget`` (None/1 disables, an int forces) — and skips
+    the degree scan when ``g.nvals`` is known and within the budget.
     ``accum``/``w``: GraphBLAS merge-on-write — pass the old output
     vector as ``w`` and a binary op name/callable as ``accum`` to get
     ``w accum= result`` (reference operations.hpp:14-19; LGC's accum-mxv
-    lgc.hpp:126-128 is the exercising algorithm); ``desc.replace``
-    selects GrB_REPLACE mask semantics (see operators/accum.py)."""
+    lgc.hpp:126-128); ``desc.replace`` selects GrB_REPLACE mask
+    semantics (see operators/accum.py). With no mask and ``accum`` the
+    semiring's own ⊕, ``w`` folds into the one aggregate (no merge join)."""
     return _vecmat(u, g, sr, "src", "dst", mask, desc, u_nvals,
                    vec_first=True, salt=salt, accum=accum, w=w)
 

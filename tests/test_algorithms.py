@@ -18,6 +18,7 @@ from graphblast_spark.algorithms import (
     sssp,
     triangle_count,
 )
+from graphblast_spark.descriptor import Descriptor, MxvMode
 from graphblast_spark.sources.fixtures import FIXTURES
 from graphblast_spark.sources.mtx import fixture_graph
 from tests.oracles import (
@@ -113,11 +114,16 @@ def test_triangle_count_exact(spark, name):
     g.unpersist()
 
 
+MODES = pytest.mark.parametrize("mode", list(MxvMode), ids=lambda m: m.name)
+
+
+@MODES
 @pytest.mark.parametrize("name,source", [("test_bc", 0), ("chesapeake", 3), ("test_cc", 0)])
-def test_bfs_depths(spark, name, source):
+def test_bfs_depths(spark, name, source, mode):
     n, edges = _sym_fixture_edges(name)
     g = fixture_graph(spark, name)
-    got = {r["id"]: r["depth"] for r in bfs(g, source=source).collect()}
+    depths = bfs(g, source=source, desc=Descriptor(mxv_mode=mode))
+    got = {r["id"]: r["depth"] for r in depths.collect()}
     expect = bfs_oracle(n, edges, source)
     for i in range(n):
         if expect[i] >= 0:
@@ -127,10 +133,12 @@ def test_bfs_depths(spark, name, source):
     g.unpersist()
 
 
-def test_sssp_vs_dijkstra(spark):
+@MODES
+def test_sssp_vs_dijkstra(spark, mode):
     n, edges = _sym_fixture_edges("blockmodel_50")
     g = fixture_graph(spark, "blockmodel_50")
-    got = {r["id"]: r["dist"] for r in sssp(g, source=0).collect()}
+    dist = sssp(g, source=0, desc=Descriptor(mxv_mode=mode))
+    got = {r["id"]: r["dist"] for r in dist.collect()}
     expect = sssp_oracle(n, edges, 0)
     for i in range(n):
         if np.isfinite(expect[i]):

@@ -99,6 +99,30 @@ def test_vecmat_single_aggregation_exchange_budget(spark):
     assert count_exchanges(out) <= 3, count_exchanges(out)
 
 
+def test_vxm_accum_plus_folds_into_one_aggregate(spark):
+    """``w accum(+)= u·A`` with no mask unions w into the product rows
+    before the one aggregate: no full-outer merge join after it, and the
+    pull join stays shuffle-hash. With a mask the merge path stays. A
+    graph whose edge count is within the salt budget cannot hold a hub
+    above it, so the default-budget vxm reads no degree stats (one job
+    per graph and orientation saved)."""
+    g = fixture_graph(spark, "chesapeake")
+    u = g.vertices.select("id", F.lit(1.0).alias("val"))
+    w = g.vertices.select("id", F.lit(0.5).alias("val"))
+    out = vxm(u, g, "PlusMultiplies", u_nvals=g.n, accum="plus", w=w)
+    logical = out._jdf.queryExecution().optimizedPlan().toString()
+    assert logical.count("Aggregate [") == 1, logical
+    assert "FullOuter" not in logical, logical
+    assert "SortMergeJoin" not in join_strategies(out)
+    in_sum = {r["dst"]: r["s"] for r in g.edges.groupBy("dst").agg(F.sum("val").alias("s")).collect()}
+    assert {r["id"]: r["val"] for r in out.collect()} == pytest.approx(
+        {v: 0.5 + in_sum.get(v, 0.0) for v in range(g.n)})
+    assert not {"src", "dst"} & set(g._stats), g._stats
+    masked = vxm(u, g, "PlusMultiplies", u_nvals=g.n, accum="plus", w=w, mask=w.limit(3))
+    assert "FullOuter" in masked._jdf.queryExecution().optimizedPlan().toString()
+    g.unpersist()
+
+
 def test_domain_edges_plan_single_aggregate_no_join(spark):
     """The domain rollup must be a pure projection + one hash aggregate
     over the pair table — no join, no window, no cartesian."""
@@ -316,6 +340,7 @@ def test_cc_hook_step_single_edge_scan(spark):
     import re
 
     from graphblast_spark.algorithms.cc import _hook_step
+    from graphblast_spark.matrix import Graph
     from graphblast_spark.plans.audit import _physical
 
     e = spark.createDataFrame(
@@ -323,7 +348,8 @@ def test_cc_hook_step_single_edge_scan(spark):
     ).persist()
     e.count()
     parent = spark.range(4).select("id", F.col("id").alias("val"))
-    hooked = _hook_step(e, parent)
+    hooked = _hook_step(Graph(edges=e.withColumn("val", F.lit(1.0)),
+                              vertices=parent.select("id"), n=4, nvals=3), parent)
     plan = _physical(hooked)
     scans = len(re.findall(r"InMemoryTableScan", plan))
     assert scans == 1, f"edge table scanned {scans}x per superstep:\n{plan}"
@@ -398,8 +424,8 @@ def test_supersteps_reuse_compiled_code(spark, tmp_path):
     on the vertex count: the uniform teleport (1-α)/n is data, not a
     literal. BFS stamps depth from its frontier, not with a literal per
     superstep, so every superstep after the first two reuses their
-    code."""
-    from graphblast_spark.algorithms import bfs, pagerank
+    code; so do HITS's L1 totals and graph coloring's colour."""
+    from graphblast_spark.algorithms import bfs, graph_coloring, hits, pagerank
     from graphblast_spark.matrix import Graph
     from graphblast_spark.runtime.superstep import SuperstepRunner
 
@@ -419,5 +445,18 @@ def test_supersteps_reuse_compiled_code(spark, tmp_path):
     assert sorted(r["depth"] for r in depths.collect()) == list(range(16))
     classes = _superstep_classes(tmp_path / "bfs")
     assert len(classes) == 16 and classes[2:] == [0] * 14
-    for gg in (g, wider, chain):
+
+    # HITS carries its L1 totals as data, graph coloring its colour
+    ring = Graph.build(spark.createDataFrame(
+        [(i, (i * 5 + 2) % 19) for i in range(19)] + [(i, (i + 1) % 19) for i in range(19)],
+        "src long, dst long"), vertices=spark.range(19))
+    hits(ring, fixed_iters=5, runner=SuperstepRunner(spark, run_dir=str(tmp_path / "hits"))).collect()
+    assert _superstep_classes(tmp_path / "hits")[2:] == [0, 0, 0]
+    clique = Graph.build(spark.createDataFrame(
+        [(i, j) for i in range(12) for j in range(i + 1, 12)], "src long, dst long"))
+    colors = graph_coloring(clique, runner=SuperstepRunner(spark, run_dir=str(tmp_path / "gc")))
+    assert sorted(r["color"] for r in colors.collect()) == list(range(1, 13))
+    classes = _superstep_classes(tmp_path / "gc")
+    assert len(classes) == 12 and classes[2:] == [0] * 10
+    for gg in (g, wider, chain, ring, clique):
         gg.unpersist()
