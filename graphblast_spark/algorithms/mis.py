@@ -73,7 +73,7 @@ def local_maxima(adj: DataFrame, cand: DataFrame) -> DataFrame:
             F.col("m").isNull()
             | (F.struct(F.col("w").alias("w"), F.col("id").alias("i")) > F.col("m"))
         )
-        .select(*[c for c in cand.columns if c != "w"])
+        .drop("w", "m")
     )
 
 

@@ -92,11 +92,8 @@ def _vecmat(
         # partial agg absorbs the skew for free; above it, pick just
         # enough salt lanes to bring each lane under budget. No fan-in
         # exceeds |E|: a graph of known size within budget skips the scan.
-        salt = None
-        if g.nvals < 0 or g.nvals > desc.salt_budget:
-            hub = g.hub_degree(out_key)
-            if hub > desc.salt_budget:
-                salt = min(32, -(-hub // desc.salt_budget))
+        hub = g.hub_degree(out_key) if g.nvals < 0 or g.nvals > desc.salt_budget else 0
+        salt = None if hub <= desc.salt_budget else min(32, -(-hub // desc.salt_budget))
 
     # Direction decision (reference backend/cuda/operations.hpp:131-140).
     push = False
