@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
 from graphblast_spark.operators.vecmat import vxm
-from graphblast_spark.runtime.superstep import SuperstepRunner, truncate_plan
+from graphblast_spark.runtime.superstep import Observed, SuperstepRunner, truncate_plan
 
 
 def bfs(
@@ -45,19 +45,20 @@ def bfs(
         return {"depths": src_df, "frontier": src_df}
 
     visit = desc.with_(mask_complement=True)  # complemented visited mask
+    frontier_n = Observed(n=F.count(F.lit(1)))  # counted by the truncation
 
     def step(s, it, sc):
         # depth from the frontier's, not a per-superstep literal (one
         # compiled class per value)
         f = s["frontier"].select("id", (F.col("depth") + 1).alias("val"))
-        nxt = vxm(
+        nxt = frontier_n.on(vxm(
             f, g, "MinimumFirst", mask=s["depths"], desc=visit,
             u_nvals=sc.get("frontier_n", 1),
-        ).withColumnRenamed("val", "depth").transform(truncate_plan)
+        ).withColumnRenamed("val", "depth")).transform(truncate_plan)
         return {"depths": s["depths"].unionByName(nxt), "frontier": nxt}
 
     def converged(new, old, sc):
-        n = new["frontier"].count()
+        n = frontier_n.get()["n"]
         return {"frontier_n": n}, n == 0
 
     state, _, _ = runner.iterate(init, step, iters=desc.max_niter, converged=converged)

@@ -16,7 +16,8 @@ orientations, the --directed 2 semantics of run_cc.sh:16):
 2. scatter: f'[f(u)] = min(f'[f(u)], mngf(u))        — group-by-parent
             + merge join (cc.hpp:83-84 assignScatter, min-resolved)
 3. jump:    f''(u) = f'(f'(u))                       — self-join gather
-4. converged when Σ label stops changing             — the scalar action
+4. converged when Σ label stops changing — observed by the superstep's
+   own action, not a job of its own
 
 All three updates shrink labels monotonically, so the fixpoint is the
 component minimum. The scatter step is load-bearing for the bound:
@@ -38,7 +39,7 @@ from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
 from graphblast_spark.operators.assign import extract_gather
 from graphblast_spark.operators.vecmat import mxv
-from graphblast_spark.runtime.superstep import SuperstepRunner
+from graphblast_spark.runtime.superstep import Observed, SuperstepRunner
 
 
 def _hook_step(und: Graph, parent: DataFrame) -> DataFrame:
@@ -124,26 +125,26 @@ def connected_components(
         )
         return {"parent": warm}
 
+    # (3) convergence (cc.hpp:102-104 MinimumNotEqualTo reduce).
+    # Labels are integers and strictly monotone non-increasing, so
+    # Σ label is an exact fixpoint witness: unchanged sum ⟺ no label
+    # moved. Observed on the superstep's own output — no 1M×1M diff
+    # join and no separate job. Summed as decimal(38,0): at 10^12
+    # vertices × 10^12-sized labels the int64 sum overflows
+    # (~10^24 ≫ 2^63) — ANSI Spark (4.x default) kills the job
+    # mid-superstep, non-ANSI wraps silently and a wrapped collision
+    # could fake convergence; decimal keeps the witness exact at any
+    # scale for the same single-agg cost (tests/test_operators3.py pins
+    # both behaviors).
+    witness = Observed(label_sum=F.sum(F.col("val").cast("decimal(38,0)")))
+
     def step(s, it, sc):
         hooked = _hook_step(und, s["parent"])
         # (2) shortcut/jump: f[u] = f[f[u]] (cc.hpp:98-99 extractGather)
-        return {"parent": extract_gather(hooked, hooked)}
+        return {"parent": witness.on(extract_gather(hooked, hooked))}
 
     def converged(new, old, sc):
-        # (3) convergence (cc.hpp:102-104 MinimumNotEqualTo reduce).
-        # Labels are integers and strictly monotone non-increasing, so
-        # Σ label is an exact fixpoint witness: unchanged sum ⟺ no
-        # label moved. One agg over the just-checkpointed table — no
-        # 1M×1M diff join per superstep. Summed as decimal(38,0):
-        # at 10^12 vertices × 10^12-sized labels the int64 sum
-        # overflows (~10^24 ≫ 2^63) — ANSI Spark (4.x default) kills
-        # the job mid-superstep, non-ANSI wraps silently and a
-        # wrapped collision could fake convergence; decimal keeps
-        # the witness exact at any scale for the same single-agg
-        # cost (tests/test_operators3.py pins both behaviors).
-        label_sum = int(
-            new["parent"].agg(F.sum(F.col("val").cast("decimal(38,0)"))).first()[0]
-        )
+        label_sum = int(witness.get()["label_sum"])
         return {"label_sum": label_sum}, label_sum == sc.get("label_sum")
 
     state, _, done = runner.iterate(init, step, iters=desc.max_niter, converged=converged)

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, child_runner, truncate_plan
+from graphblast_spark.runtime.superstep import Observed, SuperstepRunner, child_runner, truncate_plan
 
 # Frontier-state budget for root-batched sweeps: the multi-source state
 # is O(reached (root, vertex) pairs) ≤ |roots|·|V|; batches are sized so
@@ -107,20 +107,21 @@ def _msbfs_one_batch(
                              F.lit(0).cast("long").alias("depth"))
         return {"visited": seed, "frontier": seed}
 
+    frontier_size = Observed(n=F.count(F.lit(1)))  # counted by the truncation
+
     def step(s, it, sc):
         frontier_n = sc["frontier_n"] if "frontier_n" in sc else src_df.count()
         fr = F.broadcast(s["frontier"]) if frontier_n <= 1_000_000 else s["frontier"]
-        nxt = (
+        nxt = frontier_size.on(
             g.edges.join(fr, on=g.edges["src"] == fr["id"], how="inner")
             .select("root", F.col("dst").alias("id"), (fr["depth"] + 1).alias("depth"))
             .distinct()
             .join(s["visited"], on=["root", "id"], how="left_anti")
-            .transform(truncate_plan)
-        )
+        ).transform(truncate_plan)
         return {"visited": s["visited"].unionByName(nxt), "frontier": nxt}
 
     def converged(new, old, sc):
-        n = new["frontier"].count()
+        n = frontier_size.get()["n"]
         return {"frontier_n": n}, n == 0
 
     state, _, _ = runner.iterate(init, step, iters=desc.max_niter, converged=converged)

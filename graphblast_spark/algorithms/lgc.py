@@ -13,10 +13,12 @@ and frontier f = {v : r(v) > d(v)·ε}:
 until the frontier empties or max_niter. All float64, deterministic.
 
 Spark mapping: p and r are sparse vertex vectors (only touched rows);
-the frontier test is a join against the precomputed d·ε vector
-(lgc.hpp:50-55); the spread is one vecmat join+sum per superstep with
-the frontier broadcast while small (push — exactly the ACL access
-pattern: work proportional to the frontier's edge boundary, not |E|).
+r carries each row's degree d, joined from the precomputed degree
+vector once when the row is made (lgc.hpp:50-55), so the frontier is a
+filter and its size an observed count of the superstep's own action;
+the spread is one vecmat join+sum per superstep with the frontier
+broadcast while small (push — exactly the ACL access pattern: work
+proportional to the frontier's edge boundary, not |E|).
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ from pyspark.sql import functions as F
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
 from graphblast_spark.operators.vecmat import vxm
-from graphblast_spark.runtime.superstep import SuperstepRunner
+from graphblast_spark.runtime.superstep import Observed, SuperstepRunner
 
 
 def lgc(
@@ -49,27 +51,31 @@ def lgc(
 
     deg = g.out_degrees().persist()  # (id, val) — lgc.hpp:24-26 reduce
 
+    def with_d(r: DataFrame) -> DataFrame:
+        # isolated/dangling vertices have no deg row → d = 0, so any
+        # r > 0 is frontier but has no edges to push along; matches the
+        # reference's dense d = 0
+        return r.join(deg, on="id", how="left").select(
+            "id", "r", F.coalesce(F.col("val"), F.lit(0.0)).alias("d")
+        )
+
+    is_frontier = F.col("r") > F.col("d") * F.lit(eps)
+    # frontier size (reduce succ, lgc.hpp:137), counted by the action
+    # that materialises r
+    succ = Observed(succ=F.count_if(is_frontier))
+
     def init():
         r0 = spark.range(1).select(
             F.lit(source).cast("long").alias("id"), F.lit(1.0).alias("r")
         )
         p0 = spark.createDataFrame([], "id long, p double")
-        return {"p": p0, "r": r0}
-
-    def frontier(r: DataFrame) -> DataFrame:
-        # classify r rows: frontier = r > d·eps (isolated/dangling
-        # sources have no deg row → treat d as 0 → any r>0 is frontier
-        # but has no edges to push along; matches reference dense-d=0)
-        rd = r.join(deg, on="id", how="left").select(
-            "id", "r", F.coalesce(F.col("val"), F.lit(0.0)).alias("d")
-        )
-        return rd.filter(F.col("r") > F.col("d") * F.lit(eps))
+        return {"p": p0, "r": with_d(r0)}
 
     def step(s, it, sc):
         p, r = s["p"], s["r"]
-        f = frontier(r)
-        # frontier size = the previous superstep's convergence scalar
-        # (reduce succ, lgc.hpp:137); counted here only on a fresh start
+        f = r.filter(is_frontier)
+        # the previous superstep's observed frontier size; counted here
+        # only on a fresh start
         n_f = sc["succ"] if "succ" in sc else f.count()
         if n_f == 0:
             return None
@@ -95,15 +101,15 @@ def lgc(
         # folds accum="plus" into its one aggregate (no merge join).
         r_kept = r.join(f.select("id"), on="id", how="left_anti")
         r_half = f.select("id", (F.lit((1.0 - alpha) / 2.0) * F.col("r")).alias("r"))
-        r_base = r_kept.unionByName(r_half).select("id", F.col("r").alias("val"))
+        r_base = r_kept.select("id", "r").unionByName(r_half).select("id", F.col("r").alias("val"))
         r = vxm(
             f_push, g, "PlusMultiplies", desc=desc, u_nvals=n_f,
             accum="plus", w=r_base,
         ).select("id", F.col("val").alias("r"))
-        return {"p": p, "r": r}
+        return {"p": p, "r": succ.on(with_d(r))}
 
     def converged(new, old, sc):
-        n_f = frontier(new["r"]).count()
+        n_f = succ.get()["succ"]
         return {"succ": n_f}, n_f == 0
 
     niter = fixed_iters if fixed_iters is not None else desc.max_niter

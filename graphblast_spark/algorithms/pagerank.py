@@ -21,16 +21,18 @@ Physical plan per superstep (scale notes):
   as a :class:`Graph` the loop runs ``vxm`` over;
 - each superstep is ``vxm(ranks, W, PlusMultiplies, accum="plus",
   w=teleport)``: edges ⋈ ranks on src, where ranks come out of the
-  previous iteration's groupBy(id) hash-partitioned on id == src key
-  and the edges are persisted pre-partitioned on src, so AQE elides
-  both exchanges (the dense ranks take vxm's shuffle-hash pull path);
+  previous iteration's groupBy(id) and the edges are persisted
+  pre-partitioned on src, so only the ranks shuffle (the dense ranks
+  take vxm's shuffle-hash pull path);
 - vxm folds the ``plus`` accumulate into its one aggregate: each
   vertex's teleport term is unioned in *before* the groupBy, which also
   restores density (one shuffle, not a second outer join); the uniform
   (1-α)/n is data in that frame, not a literal, so every graph size
   runs the same generated code;
-- lineage is truncated every iteration (eager localCheckpoint) and the
-  convergence check is the single scalar action per superstep.
+- lineage is truncated every iteration (eager localCheckpoint), the
+  single action per superstep; when running to ``eps`` the step also
+  joins the old ranks (one shuffle of the n-row vector) and that
+  action observes Σ(new−old)², so the stop test costs no job.
 """
 
 from __future__ import annotations
@@ -42,6 +44,7 @@ from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
 from graphblast_spark.operators.vecmat import vxm
 from graphblast_spark.runtime.superstep import (
+    Observed,
     SuperstepRunner,
     child_runner,
     loop_width,
@@ -146,22 +149,27 @@ def pagerank(
     W = Graph(edges=w_edges.withColumnRenamed("w", "val"), vertices=g.vertices,
               n=n, nvals=g.nvals)
 
+    # the stop test's Σ(Δp)² (test_pr.hpp:66), observed by the action
+    # that materialises the step's output
+    err = Observed(e=F.sum(F.pow(F.col("val") - F.col("old"), 2)))
+
     def step(s, it, sc):
         nonlocal base
         if base is None:  # resumed from a checkpoint: init did not run
             base = g.vertices.select("id", F.lit((1.0 - alpha) / n).alias("c"))
-        return {"ranks": vxm(
+        ranks = vxm(
             s["ranks"], W, "PlusMultiplies", desc=desc, u_nvals=n,
             accum="plus", w=base.withColumnRenamed("c", "val"),
-        )}
+        )
+        if fixed_iters is not None:
+            return {"ranks": ranks}
+        # left: a sparse caller init must not drop vertices from the state
+        old = s["ranks"].select("id", F.col("val").alias("old")).hint("shuffle_hash")
+        return {"ranks": err.on(ranks.join(old, "id", "left")).select("id", "val")}
 
     def converged(new, old, sc):
-        err = (
-            new["ranks"].join(old["ranks"], on="id")
-            .agg(F.sum(F.pow(new["ranks"]["val"] - old["ranks"]["val"], 2)).alias("e"))
-            .first()["e"]
-        )
-        return {"err": err}, err < eps
+        e = err.get()["e"]
+        return {"err": e}, e < eps
 
     state, _, _ = runner.iterate(
         init, step,

@@ -8,7 +8,8 @@ the same fixpoint on non-negative weights.
 Spark per round: relax only out of vertices whose distance improved
 last round (the sparse frontier) with vxm over MinimumPlus — vxm picks
 push or pull from the frontier size — min-combine against current
-distances, count improvements as the convergence scalar.
+distances, count improvements as the convergence scalar, observed by the
+superstep's own truncation.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from pyspark.sql import functions as F
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
 from graphblast_spark.operators.vecmat import vxm
-from graphblast_spark.runtime.superstep import SuperstepRunner, truncate_plan
+from graphblast_spark.runtime.superstep import Observed, SuperstepRunner, truncate_plan
 
 
 def sssp(
@@ -39,6 +40,8 @@ def sssp(
         )
         return {"dist": s, "frontier": s}
 
+    improved_n = Observed(n=F.count(F.lit(1)))  # counted by the truncation
+
     def step(s, it, sc):
         # MinPlus relax: candidate(dst) = min over frontier (dist + w)
         cand = vxm(
@@ -47,9 +50,9 @@ def sssp(
         ).withColumnRenamed("val", "cand")
         # improvement mask (sssp.hpp:72-73 PlusLess): keep strictly-better
         joined = cand.join(s["dist"], on="id", how="left")
-        new_frontier = joined.filter(
+        new_frontier = improved_n.on(joined.filter(
             F.col("dist").isNull() | (F.col("cand") < F.col("dist"))
-        ).select("id", F.col("cand").alias("dist")).transform(truncate_plan)
+        ).select("id", F.col("cand").alias("dist"))).transform(truncate_plan)
         # merge: min(dist, cand) over the union of structures
         return {
             "dist": s["dist"].unionByName(new_frontier).groupBy("id").agg(F.min("dist").alias("dist")),
@@ -57,7 +60,7 @@ def sssp(
         }
 
     def converged(new, old, sc):
-        n = new["frontier"].count()
+        n = improved_n.get()["n"]
         return {"improved_n": n}, n == 0
 
     state, _, _ = runner.iterate(init, step, iters=desc.max_niter, converged=converged)

@@ -48,7 +48,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphblast_spark.runtime.superstep import loop_width
+from graphblast_spark.runtime.superstep import _pinned, loop_width
 
 EDGE_SCHEMA = "src long, dst long, val double"
 
@@ -111,16 +111,23 @@ class Graph:
         the dedup runs as a local aggregate, as in :meth:`build`. On
         top of it ``groupBy("dst")`` is the undirected degree with no
         further exchange, and ``filter(src < dst)`` is the canonical
-        (lo, hi) edge set."""
+        (lo, hi) edge set.
+
+        Planned with the superstep loops' settings (AQE off, which gives
+        a fixed-width repartition nothing): the loop that first reads
+        the view then builds it as stages of its own superstep job,
+        not as an extra AQE query-stage job."""
         if "undirected" not in self._stats:
+            spark = self.edges.sparkSession
             e = self.edges.select("src", "dst")
-            view = (
-                e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-                .filter(F.col("src") != F.col("dst"))
-                .repartition(loop_width(self.edges.sparkSession), "dst")
-                .dropDuplicates(["src", "dst"])
-                .persist()
-            )
+            with _pinned(spark, None):
+                view = (
+                    e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+                    .filter(F.col("src") != F.col("dst"))
+                    .repartition(loop_width(spark), "dst")
+                    .dropDuplicates(["src", "dst"])
+                    .persist()
+                )
             self._cached.append(view)
             self._stats["undirected"] = view
         return self._stats["undirected"]

@@ -19,9 +19,10 @@ which in DataFrame land is exactly
 backend/cuda/operations.hpp:131-199 + vector.hpp:291-323): when the
 frontier is sparse (count/n below ``desc.switchpoint``) we hint
 ``F.broadcast(u)`` — a broadcast hash join, the SpMSpV "push" gather.
-When dense, a plain shuffle join — the SpMV "pull". AQE's runtime
-broadcast conversion is the safety net; the explicit rule keeps the
-plan stable across supersteps. The caller passes ``u_nvals`` when it
+When dense, a plain shuffle join — the SpMV "pull". The explicit rule
+keeps the plan stable across supersteps, and it is the only rule
+inside superstep loops, which run without AQE (runtime/superstep.py);
+outside loops AQE's runtime broadcast conversion is the safety net. The caller passes ``u_nvals`` when it
 already knows the frontier size (every algorithm loop does), so no
 extra count job is spawned.
 

@@ -10,24 +10,31 @@ once, for the whole engine. The caller supplies only the algorithm:
 - ``step(state, it, scalars)`` → the next state, lazily (or ``None``
   when the step finds nothing left to do — an empty frontier);
 - either a fixed superstep count, or ``converged(new, old, scalars)``
-  → ``(scalars, done)``, evaluated on the already-truncated new state.
+  → ``(scalars, done)``, evaluated on the already-materialised new
+  state. The stop test reads an :class:`Observed` that the step hung
+  on its output, so it runs no Spark job of its own.
 
 The driver owns everything else, identically for every loop:
 
 - **resume**: a fresh driver pointed at the same ``run_dir`` continues
   from the newest valid checkpoint, with the scalars saved beside it
   (so a convergence test's "previous value" survives the restart);
-- **loop width**: ``spark.sql.shuffle.partitions`` pinned to one value
-  for the whole loop (see :func:`loop_width`) and AQE partition
-  coalescing off, restored on exit;
-- **lineage truncation**: every state frame is truncated once per
-  superstep with :func:`truncate_plan` (without it the logical plan
-  doubles per superstep and the driver OOMs planning iteration ~30);
+- **loop settings** (see :func:`_pinned`): ``spark.sql.shuffle.partitions``
+  pinned to one value for the whole loop (see :func:`loop_width`) and
+  AQE off, restored on exit — so a superstep with shuffles is ONE Spark
+  job with several stages, not one job per AQE query stage;
+- **one action per superstep**: every state frame is truncated once
+  per superstep with :func:`truncate_plan` (without it the logical plan
+  doubles per superstep and the driver OOMs planning iteration ~30),
+  and that action also computes the stop test's observed scalars;
 - **durable checkpoints**: every ``checkpoint_every`` supersteps the
-  state is written as parquet with an atomically-renamed
-  ``meta.json`` carrying the iteration number and scalars;
+  state's parquet write IS the superstep's action (no truncation
+  first); the frames are re-read from it, the stop test runs, and only
+  then is ``meta.json`` — iteration number and scalars — renamed into
+  place atomically;
 - **metrics**: one JSON line per superstep in ``run_dir/metrics.jsonl``
-  with ``iter``, wall ``ms``, the Janino ``classes`` it compiled (see
+  with ``iter``, wall ``ms`` (the checkpoint write included), the Spark
+  ``jobs`` it ran and the Janino ``classes`` it compiled (see
   :func:`compiled_classes`) and the scalars;
 - **the stop test**, and its outcome, returned to the caller — what to
   do when the cap is hit (raise or return) stays the algorithm's call.
@@ -42,7 +49,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 State = dict[str, DataFrame]
 
@@ -81,16 +88,21 @@ def truncate_plan(df: DataFrame) -> DataFrame:
     oversized estimate can only suppress an automatic broadcast, never
     produce one that OOMs. Falls back to the plain checkpoint when the
     internal constructor is unavailable (e.g. Spark Connect)."""
-    ck = df.localCheckpoint(eager=True)
+    return _without_stats(df.localCheckpoint(eager=True))
+
+
+def _without_stats(leaf: DataFrame) -> DataFrame:
+    """``leaf`` (a checkpoint or a file read) rebuilt JVM-side from its
+    RDD without running it, so it carries no size statistics (see
+    :func:`truncate_plan`); ``leaf`` itself without a JVM handle."""
     try:
-        jdf = ck._jdf
-        jspark = df.sparkSession._jsparkSession
-        fresh = jspark.internalCreateDataFrame(
+        jdf = leaf._jdf
+        fresh = leaf.sparkSession._jsparkSession.internalCreateDataFrame(
             jdf.queryExecution().toRdd(), jdf.schema(), False
         )
-        return DataFrame(fresh, df.sparkSession)
+        return DataFrame(fresh, leaf.sparkSession)
     except Exception:
-        return ck
+        return leaf
 
 
 def compiled_classes(spark: SparkSession) -> int:
@@ -108,6 +120,53 @@ def compiled_classes(spark: SparkSession) -> int:
         )
     except AttributeError:
         return 0
+
+
+def spark_jobs(spark: SparkSession) -> int:
+    """Id of the newest Spark job this context has started, plus one,
+    read from the status store once its listener queue has drained: the
+    difference across a superstep is the jobs it ran. 0 without a JVM
+    handle (e.g. Spark Connect)."""
+    try:
+        jsc = spark.sparkContext._jsc.sc()
+    except AttributeError:
+        return 0
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)  # newest first
+    return jobs.head().jobId() + 1 if jobs.nonEmpty() else 0
+
+
+class Observed:
+    """Named aggregates that a superstep computes inside its own action
+    (``DataFrame.observe``): the stop test's scalar rides the job that
+    materialises the state, instead of a ``.first()`` or ``.count()``
+    job of its own — the reference's one device→host sync per
+    iteration. ``on(df)`` hangs a fresh observation on the step's
+    output; after the superstep's action, :meth:`get` returns
+    ``{name: value}``.
+
+    Hang it above the step's last exchange, so it is computed in the
+    action's result stage: a result task's metrics are merged once per
+    partition, so a retried task is not counted twice."""
+
+    def __init__(self, **metrics: Column):
+        self._metrics = [c.alias(k) for k, c in metrics.items()]
+        self._ob: Observation | None = None
+
+    def on(self, df: DataFrame) -> DataFrame:
+        self._ob, self._spark = Observation(), df.sparkSession
+        return df.observe(self._ob, *self._metrics)
+
+    def get(self) -> dict:
+        jo = getattr(self._ob, "_jo", None)
+        if jo is not None and not jo.future().isCompleted():
+            # the metrics arrive through the listener bus after the
+            # action returns; Observation.get would block forever on a
+            # frame no action ran
+            self._spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+            if not jo.future().isCompleted():
+                raise RuntimeError("observed frame has not been materialised yet")
+        return self._ob.get
 
 
 def _has_lineage(df: DataFrame) -> bool:
@@ -143,12 +202,28 @@ def loop_width(spark: SparkSession, n_rows: int | None = None) -> int:
 
 @contextmanager
 def _pinned(spark: SparkSession, width: int | None):
-    """Pin the shuffle width and turn AQE partition coalescing off for
-    one loop. Coalescing re-plans every iteration's small shuffles down
-    to a handful of partitions and the next join must redistribute
-    again — measured 1.7× slower on a 16M-edge PageRank loop at
-    local[32]. Batch queries outside loops keep coalescing on."""
-    conf = {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    """Pin the shuffle width and turn AQE off for one loop, restoring
+    both on exit; batch queries outside loops (distill, build, TC,
+    ingest) keep AQE.
+
+    Why: AQE runs every query stage as its own Spark job, so a
+    superstep with three shuffles cost four or more jobs, each with the
+    driver's fixed scheduling cost — on a 36k-edge graph CC ran 53 jobs
+    for 4 supersteps. Without AQE the superstep is one job with several
+    stages. Its partition coalescing also re-planned every iteration's
+    small shuffles down to a handful of partitions, so the next join
+    had to redistribute again (measured 1.7× slower on a 16M-edge
+    PageRank loop at local[32]).
+
+    What is given up inside loops: skew-join splitting and runtime
+    conversion of a shuffle join to a broadcast. The loop joins pin
+    their strategy with explicit hints instead (``broadcast`` push,
+    ``shuffle_hash`` pull, operators/vecmat.py), and ``vxm`` salts a
+    hub's reduce when its fan-in exceeds ``desc.salt_budget``."""
+    conf = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
     if width is not None:
         conf["spark.sql.shuffle.partitions"] = str(width)
     old = {k: spark.conf.get(k, None) for k in conf}
@@ -187,6 +262,7 @@ class SuperstepRunner:
     checkpoint_every: int = 0       # 0 → never write durable checkpoints
     name: str = "run"
     _classes: int = field(default=0, init=False, repr=False)  # compile count at the last line
+    _jobs: int = field(default=0, init=False, repr=False)  # job count at the last line
 
     def iterate(
         self,
@@ -200,30 +276,39 @@ class SuperstepRunner:
         checkpoint) and return ``(state, scalars, converged)``.
 
         ``step(state, it, scalars)`` returns the next state lazily; the
-        driver truncates every frame that still carries lineage, so a
-        step may truncate an intermediate it reuses itself. Returning
-        ``None`` stops the loop as converged without a superstep.
-        ``converged(new, old, scalars)`` sees the truncated new state,
-        the previous state and the previous scalars (``{}`` on a fresh
-        start, the checkpointed ones after a resume) and returns the new
-        scalars and whether to stop. Without it the loop runs exactly
-        ``iters`` supersteps. The returned flag is True only when a stop
-        test ended the loop; ``width`` pins the loop's shuffle width
-        (default: the session's, see :func:`loop_width`)."""
+        driver materialises every frame that still carries lineage —
+        truncated, or written as the durable checkpoint when one is due
+        — so a step may truncate an intermediate it reuses itself.
+        Returning ``None`` stops the loop as converged without a
+        superstep. ``converged(new, old, scalars)`` sees the
+        materialised new state, the previous state and the previous
+        scalars (``{}`` on a fresh start, the checkpointed ones after a
+        resume) and returns the new scalars and whether to stop; it
+        reads them from an :class:`Observed` on the step's output.
+        Without it the loop runs exactly ``iters`` supersteps. The
+        returned flag is True only when a stop test ended the loop;
+        ``width`` pins the loop's shuffle width (default: the session's,
+        see :func:`loop_width`)."""
         with _pinned(self.spark, width):
             state, start, scalars = self._resume_or_init(init)
             if self.run_dir:
                 self._classes = compiled_classes(self.spark)
+                self._jobs = spark_jobs(self.spark)
             for it in range(start, iters):
                 t0 = time.time()
                 new = step(state, it, scalars)
                 if new is None:
                     return state, scalars, True
-                new = self._truncate(new)
+                durable = self._durable(it) and bool(new)
+                new = self._write(it, new) if durable else self._truncate(new)
                 done = False
                 if converged is not None:
                     scalars, done = converged(new, state, scalars)
-                state = self._commit(it, new, scalars, (time.time() - t0) * 1000.0)
+                if durable:
+                    self._commit(it, new, scalars)
+                self._log({"iter": it, "ms": (time.time() - t0) * 1000.0,
+                           **({"scalars": scalars} if scalars else {})})
+                state = new
                 if done:
                     return state, scalars, True
         return state, scalars, False
@@ -270,37 +355,49 @@ class SuperstepRunner:
         stat reset is load-bearing)."""
         return {k: truncate_plan(df) if _has_lineage(df) else df for k, df in state.items()}
 
-    def _commit(self, it: int, state: State, scalars: dict, ms: float) -> State:
-        """Write a durable checkpoint when the cadence says so, then log
-        the superstep. Returns the (possibly checkpoint-backed) state."""
-        if state and self.checkpoint_every and self.run_dir and (it + 1) % self.checkpoint_every == 0:
-            cdir = self._ckpt_dir(it)
-            for k, df in state.items():
-                df.write.mode("overwrite").parquet(os.path.join(cdir, k))
-            meta = {
-                "iter": it,
-                "name": self.name,
-                "states": sorted(state.keys()),
-                "scalars": scalars,
-                "wall_ts": time.time(),
-            }
-            tmp = self._meta_path(it) + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(meta, fh)
-            os.replace(tmp, self._meta_path(it))  # atomic commit marker
-            # Re-read from parquet: truncates lineage to a durable source.
-            state = {
-                k: self.spark.read.parquet(os.path.join(cdir, k)) for k in state
-            }
-        self._log({"iter": it, "ms": ms, **({"scalars": scalars} if scalars else {})})
-        return state
+    def _durable(self, it: int) -> bool:
+        return bool(self.checkpoint_every and self.run_dir
+                    and (it + 1) % self.checkpoint_every == 0)
+
+    def _write(self, it: int, state: State) -> State:
+        """The superstep's action when a checkpoint is due: write each
+        frame's parquet straight from its plan and re-read it — read
+        with the known schema, so no inference job runs, and without
+        the files' size statistics, so the next superstep plans exactly
+        as after a truncation (no size-driven broadcast job). Not yet a
+        checkpoint: :meth:`_commit` marks it."""
+        cdir = self._ckpt_dir(it)
+        for k, df in state.items():
+            df.write.mode("overwrite").parquet(os.path.join(cdir, k))
+        return {
+            k: _without_stats(self.spark.read.schema(df.schema).parquet(os.path.join(cdir, k)))
+            for k, df in state.items()
+        }
+
+    def _commit(self, it: int, state: State, scalars: dict) -> None:
+        """Commit the checkpoint :meth:`_write` left: ``meta.json``
+        with the iteration and the stop test's scalars, atomically."""
+        meta = {
+            "iter": it,
+            "name": self.name,
+            "states": sorted(state.keys()),
+            "scalars": scalars,
+            "wall_ts": time.time(),
+        }
+        tmp = self._meta_path(it) + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump(meta, fh)
+        os.replace(tmp, self._meta_path(it))  # atomic commit marker
 
     def _log(self, rec: dict) -> None:
-        """Append one metrics line; ``classes`` counts the Janino
-        compiles since the previous line (or since init), the
-        superstep's checkpoint write included. No-op without a run_dir."""
+        """Append one metrics line; ``jobs`` and ``classes`` count the
+        Spark jobs run and the Janino compiles since the previous line
+        (or since init), the superstep's checkpoint write included.
+        No-op without a run_dir."""
         if not self.run_dir:
             return
+        seen, self._jobs = self._jobs, spark_jobs(self.spark)
+        rec["jobs"] = self._jobs - seen
         seen, self._classes = self._classes, compiled_classes(self.spark)
         rec["classes"] = self._classes - seen
         os.makedirs(self.run_dir, exist_ok=True)

@@ -1,9 +1,11 @@
 """SparkSession construction with scale-appropriate defaults.
 
 The conf here is the engine's analog of the reference Descriptor's
-environment knobs (reference docs/env_var.md): AQE on (runtime
-re-planning, skew-join splitting — the merge-path load-balancing
-analog, reference spmspv_inner.hpp:62-320), Arrow enabled for the
+environment knobs (reference docs/env_var.md): AQE on for batch
+queries (runtime re-planning, skew-join splitting — the merge-path
+load-balancing analog, reference spmspv_inner.hpp:62-320) and off
+inside superstep loops, where ``runtime/superstep.py`` turns it off so
+each superstep is one Spark job; Arrow enabled for the
 Python paths that remain (corpus generation, WARC parsing, the
 multimodal codec kernels, the ``mapInArrow`` SpMV kernel, pandas
 streaming state; distillation needs none), and shuffle

@@ -94,8 +94,9 @@ LOOPS = {
 @pytest.mark.parametrize("loop", sorted(LOOPS))
 def test_metrics_jsonl_shape(spark, tmp_path, loop):
     """One metrics line per superstep, consecutive ``iter`` from 0, a
-    wall ``ms`` on every line (perfbench reads ``["ms"]`` from each) and
-    the Janino ``classes`` compiled since the previous line."""
+    wall ``ms`` on every line (perfbench reads ``["ms"]`` from each), the
+    Spark ``jobs`` run (every superstep runs at least its own action)
+    and the Janino ``classes`` compiled since the previous line."""
     fixture, run = LOOPS[loop]
     g = fixture_graph(spark, fixture)
     run_dir = str(tmp_path / "m")
@@ -104,9 +105,63 @@ def test_metrics_jsonl_shape(spark, tmp_path, loop):
     assert lines
     assert [l["iter"] for l in lines] == list(range(len(lines)))
     assert all(isinstance(l["ms"], float) for l in lines)
+    assert all(isinstance(l["jobs"], int) and l["jobs"] >= 1 for l in lines)
     assert all(isinstance(l["classes"], int) and l["classes"] >= 0 for l in lines)
     if loop == "pr_fixed":
         assert len(lines) == 3
+    g.unpersist()
+
+
+def _metrics(run_dir):
+    return [json.loads(l) for l in open(os.path.join(run_dir, "metrics.jsonl"))]
+
+
+@pytest.mark.parametrize("checkpoint_every", [0, 1])
+@pytest.mark.parametrize("loop", ["cc", "pr_eps"])
+def test_one_job_per_superstep(spark, tmp_path, loop, checkpoint_every):
+    """Each superstep of a converging loop is ONE Spark job: the loop
+    runs without AQE (no job per query stage), the stop test's scalar
+    is observed by the superstep's own action (no ``.first()`` job),
+    and a due checkpoint's parquet write is that action (no truncation
+    before it, no schema-inference job after it)."""
+    fixture, run = LOOPS[loop]
+    g = fixture_graph(spark, fixture)
+    run_dir = str(tmp_path / "m")
+    run(g, SuperstepRunner(spark, run_dir=run_dir, checkpoint_every=checkpoint_every)).collect()
+    lines = _metrics(run_dir)
+    assert len(lines) >= 2
+    assert [l["jobs"] for l in lines] == [1] * len(lines)
+    if checkpoint_every:
+        assert SuperstepRunner(spark, run_dir=run_dir).latest_checkpoint()["iter"] == len(lines) - 1
+    g.unpersist()
+
+
+def test_pagerank_eps_checkpoint_resume(spark, tmp_path):
+    """PR-to-eps: the stop test's ``err`` is committed in meta.json with
+    the checkpoint it belongs to, and a fresh runner resumes from it to
+    the undisturbed run's ranks and superstep count."""
+    g = fixture_graph(spark, "chesapeake")
+    full_dir, run_dir = str(tmp_path / "full"), str(tmp_path / "pr")
+    full = _ranks(pagerank(g, runner=SuperstepRunner(spark, run_dir=full_dir)))
+    n_full = len(_metrics(full_dir))
+    assert n_full > 6
+
+    # Phase 1: die after 5 supersteps (the cap returns silently).
+    r1 = SuperstepRunner(spark, run_dir=run_dir, checkpoint_every=2, name="pr")
+    _ranks(pagerank(g, desc=DEFAULT_DESC.with_(max_niter=5), runner=r1))
+    meta = r1.latest_checkpoint()
+    assert meta["iter"] == 3
+    logged = _metrics(run_dir)[3]["scalars"]["err"]
+    assert isinstance(meta["scalars"]["err"], float) and meta["scalars"]["err"] == logged
+
+    # Phase 2: a fresh runner continues after superstep 3.
+    r2 = SuperstepRunner(spark, run_dir=run_dir, checkpoint_every=2, name="pr")
+    resumed = _ranks(pagerank(g, runner=r2))
+    lines = _metrics(run_dir)
+    assert [l["iter"] for l in lines[5:]] == list(range(4, n_full))
+    assert set(resumed) == set(full)
+    for k in full:
+        assert resumed[k] == pytest.approx(full[k], abs=1e-15)
     g.unpersist()
 
 
