@@ -350,9 +350,9 @@ class SuperstepRunner:
     # -- per-iteration bookkeeping ---------------------------------------
     @staticmethod
     def _truncate(state: State) -> State:
-        """The superstep action: materialize and cut the lineage of
-        every frame that has any (see :func:`truncate_plan` for why the
-        stat reset is load-bearing)."""
+        """The superstep action when no checkpoint is due (and init's):
+        materialize and cut the lineage of every frame that has any (see
+        :func:`truncate_plan` for why the stat reset is load-bearing)."""
         return {k: truncate_plan(df) if _has_lineage(df) else df for k, df in state.items()}
 
     def _durable(self, it: int) -> bool:
