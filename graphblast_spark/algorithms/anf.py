@@ -17,9 +17,10 @@ sketch column (``hll_sketch_agg`` / ``hll_union_agg`` /
 in the loop); one superstep = the same union-before-agg shape
 pagerank uses (neighbor sketches + own sketch → one hash aggregate),
 so the hot loop is one shuffle of |V| sketch rows per round against
-src-pinned persisted edges. N(t) per round is a single sum-estimate
-aggregate — the monotone convergence witness (N stops growing ⇔ every
-ball saturated ⇔ t reached the diameter).
+src-pinned persisted edges. N(t) per round is an exact (decimal) sum of
+estimates that the round's own action observes — the monotone
+convergence witness (N stops growing ⇔ every ball saturated ⇔ t
+reached the diameter).
 
 At 10^12 vertices the exact variant is impossible and HyperBall is the
 point: state is |V| × (2^lg_k bytes), unions are associative (map-side
@@ -38,7 +39,32 @@ from pyspark.sql import functions as F
 
 from graphblast_spark.descriptor import DEFAULT_DESC
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, loop_width
+from graphblast_spark.runtime.superstep import Observed, SuperstepRunner, loop_width
+
+
+def _estimate_sum(est) -> Observed:
+    """Σ ``est`` over the counters, observed by the action that
+    materialises them: summed as ``decimal(38,18)`` so the total is
+    exact whatever order the per-task partial sums merge in."""
+    return Observed(total=F.sum(est.cast("decimal(38,18)")))
+
+
+def _total(ob: Observed) -> float:
+    return float(ob.get()["total"] or 0)
+
+
+def _ball_union(e: DataFrame, counters: DataFrame) -> DataFrame:
+    """(id, sk): each vertex's sketch unioned with its out-neighbours'
+    — the neighbour-sketch gather (src-pinned edges, shuffle-hash
+    probe) and the own sketches in ONE hash aggregate."""
+    cs = counters.hint("shuffle_hash")
+    return (
+        e.join(cs, e["dst"] == cs["id"], "inner")
+        .select(e["src"].alias("id"), cs["sk"].alias("sk"))
+        .unionByName(counters.select("id", "sk"))
+        .groupBy("id")
+        .agg(F.hll_union_agg("sk", F.lit(True)).alias("sk"))
+    )
 
 
 def neighborhood_function_exact(
@@ -85,8 +111,8 @@ def hyperball(
 
     Per round: neighbor-sketch gather (src-pinned persisted edges,
     shuffle-hash probe) unioned with own sketches in ONE hash
-    aggregate; one scalar action reads Σ estimate. State: |V| sketch
-    rows, lineage truncated each round."""
+    aggregate, whose truncation also observes Σ estimate. State: |V|
+    sketch rows, lineage truncated each round."""
     spark = g.edges.sparkSession
     width = loop_width(spark, g.edges.count())
     e = g.edges.select("src", "dst").repartition(width, "src").persist()
@@ -94,37 +120,27 @@ def hyperball(
     if runner is None:
         runner = SuperstepRunner(spark)
 
-    def init():
-        return {"counters": g.vertices.groupBy("id").agg(
-            F.hll_sketch_agg("id", F.lit(lg_config_k)).alias("sk"))}
+    # N(0), observed by init's truncation, and N(t), by superstep t's
+    n_0 = _estimate_sum(F.hll_sketch_estimate("sk"))
+    n_t = _estimate_sum(F.hll_sketch_estimate("sk"))
 
-    def total(c: DataFrame) -> float:
-        return float(
-            c.agg(F.sum(F.hll_sketch_estimate("sk"))).first()[0]
-        )
+    def init():
+        return {"counters": n_0.on(g.vertices.groupBy("id").agg(
+            F.hll_sketch_agg("id", F.lit(lg_config_k)).alias("sk")))}
 
     def step(s, it, sc):
-        counters = s["counters"]
-        cs = counters.hint("shuffle_hash")
-        gathered = (
-            e.join(cs, e["dst"] == cs["id"], "inner")
-            .select(e["src"].alias("id"), cs["sk"].alias("sk"))
-        )
-        return {"counters": (
-            gathered.unionByName(counters)
-            .groupBy("id")
-            .agg(F.hll_union_agg("sk", F.lit(True)).alias("sk"))
-        )}
+        return {"counters": n_t.on(_ball_union(e, s["counters"]))}
 
-    def converged(new, old, sc):
-        # N(0..t) rides in the scalars, so a resumed run keeps the series
-        series = sc.get("n_pairs") or [total(old["counters"])]
-        n_t = total(new["counters"])
-        return {"n_pairs": series + [n_t]}, n_t == series[-1]  # balls stopped growing
+    def converged(sc):
+        # N(0..t) rides in the scalars, so a resumed run keeps the
+        # series; N(0) was observed by init's truncation
+        series = sc.get("n_pairs") or [_total(n_0)]
+        n = _total(n_t)
+        return {"n_pairs": series + [n]}, n == series[-1]  # balls stopped growing
 
-    state, sc, _ = runner.iterate(init, step, iters=max_t, converged=converged, width=width)
+    sc = runner.iterate(init, step, iters=max_t, converged=converged, width=width)[1]
     e.unpersist()
-    rows = list(enumerate(sc.get("n_pairs") or [total(state["counters"])]))
+    rows = list(enumerate(sc.get("n_pairs") or [_total(n_0)]))
     return spark.createDataFrame(rows, "t int, n_pairs double")
 
 
@@ -180,31 +196,23 @@ def harmonic_centrality_hyperball(
     if runner is None:
         runner = SuperstepRunner(spark)
 
+    # Σ est before the loop, observed by init's truncation, and after
+    # each superstep, by its own
+    total_0 = _estimate_sum(F.col("est"))
+    total = _estimate_sum(F.col("est"))
+
     def init():
-        return {"counters": (
+        return {"counters": total_0.on(
             g.vertices.groupBy("id")
             .agg(F.hll_sketch_agg("id", F.lit(lg_config_k)).alias("sk"))
             .withColumn("est", F.hll_sketch_estimate("sk"))
             .withColumn("harmonic", F.lit(0.0))
         )}
 
-    def total(c: DataFrame) -> float:
-        return float(c.agg(F.sum("est")).first()[0])
-
     def step(s, it, sc):
         counters, t = s["counters"], it + 1
-        cs = counters.hint("shuffle_hash")
-        gathered = (
-            e.join(cs, e["dst"] == cs["id"], "inner")
-            .select(e["src"].alias("id"), cs["sk"].alias("sk"))
-        )
-        unioned = (
-            gathered.unionByName(counters.select("id", "sk"))
-            .groupBy("id")
-            .agg(F.hll_union_agg("sk", F.lit(True)).alias("sk"))
-            .withColumn("est_new", F.hll_sketch_estimate("sk"))
-        )
-        return {"counters": (
+        unioned = _ball_union(e, counters).withColumn("est_new", F.hll_sketch_estimate("sk"))
+        return {"counters": total.on(
             unioned.join(
                 counters.select("id", F.col("est").alias("est_old"), "harmonic"),
                 "id",
@@ -221,9 +229,9 @@ def harmonic_centrality_hyperball(
             )
         )}
 
-    def converged(new, old, sc):
-        prev = sc["total"] if "total" in sc else total(old["counters"])
-        cur = total(new["counters"])
+    def converged(sc):
+        prev = sc["total"] if "total" in sc else _total(total_0)
+        cur = _total(total)
         return {"total": cur}, cur == prev  # all balls saturated
 
     counters = runner.iterate(

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, child_runner, truncate_plan
+from graphblast_spark.runtime.superstep import Observed, SuperstepRunner, child_runner, truncate_plan
 
 
 def betweenness_centrality(
@@ -125,16 +125,17 @@ def _bc_one_batch(
         level0 = roots.select(F.col("id").alias("root"), "id", F.lit(1.0).alias("sigma"))
         return {"L000000": level0, "settled": level0.select("root", "id")}
 
+    reached = Observed(n=F.count(F.lit(1)))  # counted by the level's truncation
+
     def fwd_step(s, d, sc):
         fr = s[f"L{d:06d}"].hint("shuffle_hash")
-        nxt = (
+        nxt = reached.on(
             edges.join(fr, on=edges["src"] == fr["id"], how="inner")
             .groupBy(fr["root"].alias("root"), edges["dst"].alias("id"))
             .agg(F.sum("sigma").alias("sigma"))
             .join(s["settled"], on=["root", "id"], how="left_anti")
-            .transform(truncate_plan)
-        )
-        if nxt.isEmpty():
+        ).transform(truncate_plan)
+        if reached.get()["n"] == 0:
             return None
         return {**s, f"L{d + 1:06d}": nxt,
                 "settled": s["settled"].unionByName(nxt.select("root", "id"))}

@@ -57,7 +57,7 @@ def bfs(
         ).withColumnRenamed("val", "depth")).transform(truncate_plan)
         return {"depths": s["depths"].unionByName(nxt), "frontier": nxt}
 
-    def converged(new, old, sc):
+    def converged(sc):
         n = frontier_n.get()["n"]
         return {"frontier_n": n}, n == 0
 

@@ -143,7 +143,7 @@ def connected_components(
         # (2) shortcut/jump: f[u] = f[f[u]] (cc.hpp:98-99 extractGather)
         return {"parent": witness.on(extract_gather(hooked, hooked))}
 
-    def converged(new, old, sc):
+    def converged(sc):
         label_sum = int(witness.get()["label_sum"])
         return {"label_sum": label_sum}, label_sum == sc.get("label_sum")
 

@@ -120,7 +120,7 @@ def _msbfs_one_batch(
         ).transform(truncate_plan)
         return {"visited": s["visited"].unionByName(nxt), "frontier": nxt}
 
-    def converged(new, old, sc):
+    def converged(sc):
         n = frontier_size.get()["n"]
         return {"frontier_n": n}, n == 0
 

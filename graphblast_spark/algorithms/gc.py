@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from graphblast_spark.algorithms.mis import lcg_weight, local_maxima, mis
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, truncate_plan
+from graphblast_spark.runtime.superstep import Observed, SuperstepRunner, truncate_plan
 
 
 def _smallest_free(used: str):
@@ -75,8 +75,8 @@ def graph_coloring(
     def step(s, it, sc):
         # local (weight, id) maxima of the uncolored (see mis.py),
         # with their colour
-        winners = local_maxima(adj, s["cand"]).transform(truncate_plan)
-        if winners.isEmpty():
+        winners, n_won = local_maxima(adj, s["cand"])
+        if n_won == 0:
             return None
         return {
             "cand": s["cand"].join(winners, on="id", how="left_anti")
@@ -117,6 +117,7 @@ def graph_coloring_mis(
     remaining = g.vertices.select("id")
     edges = g.edges
     n_left = g.n
+    left = Observed(n=F.count(F.lit(1)))  # counted by the remainder's truncation
     for k in range(1, limit + 1):
         if n_left == 0:
             break
@@ -125,8 +126,8 @@ def graph_coloring_mis(
         in_set = in_set.transform(truncate_plan)
         sub.unpersist()  # the residual graph's undirected view
         colored = colored.unionByName(in_set.withColumn("color", F.lit(k)))
-        remaining = remaining.join(in_set, on="id", how="left_anti").transform(truncate_plan)
-        n_left = remaining.count()
+        remaining = left.on(remaining.join(in_set, "id", "left_anti")).transform(truncate_plan)
+        n_left = left.get()["n"]
         # residual edge view: both endpoints still uncolored
         r_src = remaining.select(F.col("id").alias("src"))
         r_dst = remaining.select(F.col("id").alias("dst"))
@@ -174,6 +175,7 @@ def graph_coloring_spec(
         runner = SuperstepRunner(spark)
 
     adj = g.undirected()
+    moving = Observed(n=F.count(F.lit(1)))  # counted by the movers' truncation
 
     def init():
         w = lcg_weight(F.col("id"))
@@ -202,13 +204,12 @@ def graph_coloring_spec(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("nwk").alias("mnb"))
         )
-        movers = (
+        movers = moving.on(
             colors.join(mnb, on="id")
             .filter(F.col("wk") < F.col("mnb"))
             .select("id")
-            .transform(truncate_plan)
-        )
-        if movers.isEmpty():
+        ).transform(truncate_plan)
+        if moving.get()["n"] == 0:
             return None
         used = (
             adj.join(movers.withColumnRenamed("id", "dst"), on="dst", how="left_semi")
@@ -269,8 +270,8 @@ def graph_coloring_jp(
 
     def step(s, it, sc):
         cand, colored = s["cand"], s["colored"]
-        winners = local_maxima(adj, cand).transform(truncate_plan)
-        if winners.isEmpty():
+        winners, n_won = local_maxima(adj, cand)
+        if n_won == 0:
             return None
         # smallest color not used by already-colored neighbors
         cl = colored.select(F.col("id").alias("nid"), "color")

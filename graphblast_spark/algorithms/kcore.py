@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner
+from graphblast_spark.runtime.superstep import Observed, SuperstepRunner
 
 
 def k_core(
@@ -44,6 +44,8 @@ def k_core(
         runner = SuperstepRunner(spark)
 
     adj = g.undirected()
+    d = F.coalesce(F.col("d"), F.lit(0))
+    peel = Observed(n=F.count_if(d >= k), gone=F.count_if(d < k))  # survivors, peeled
 
     def init():
         return {"remaining": g.vertices.select("id")}
@@ -57,18 +59,14 @@ def k_core(
         )
         deg = live.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("d"))
         return {"remaining": (
-            remaining.join(deg, on="id", how="left")
-            .filter(F.coalesce(F.col("d"), F.lit(0)) >= k)
+            peel.on(remaining.join(deg, on="id", how="left"))
+            .filter(d >= k)
             .select("id")
         )}
 
-    def converged(new, old, sc):
-        # the previous round's survivor count rides in the scalars (and
-        # through checkpoint resume), so each peel round costs exactly
-        # ONE action — the survivors count
-        n_prev = sc["n"] if "n" in sc else old["remaining"].count()
-        n_now = new["remaining"].count()
-        return {"n": n_now}, n_now == n_prev or n_now == 0
+    def converged(sc):
+        o = peel.get()
+        return {"n": o["n"]}, o["gone"] == 0 or o["n"] == 0
 
     max_rounds = fixed_rounds if fixed_rounds is not None else desc.max_niter
     remaining = runner.iterate(init, step, iters=max_rounds, converged=converged)[0]["remaining"]
@@ -90,8 +88,8 @@ def core_decomposition(
     c(v) = deg(v) and repeat c'(v) = H({min(c(w), c(v)) : w ∈ N(v)})
     until the fixpoint, where H is the h-index (max t with ≥ t
     neighbors of value ≥ t). c is non-increasing, always ≥ coreness,
-    and the fixpoint is exactly coreness — so the decimal-sum witness
-    (scc.py's pattern) is an exact convergence test. The min(·, c(v))
+    and the fixpoint is exactly coreness — so "no c(v) moved", counted
+    by the round's own action, is an exact convergence test. The min(·, c(v))
     cap never changes H (all uncapped values ≥ c(v) are ≥ H) but keeps
     the per-vertex distinct-value spread bounded by c(v), which after
     round 1 is ≤ H(deg of neighbors) — the power-law hub's value list
@@ -109,8 +107,6 @@ def core_decomposition(
     in_core(k) = 1 ⟺ coreness ≥ k (pytest-pinned).
     """
     from pyspark.sql import Window
-
-    from graphblast_spark.algorithms.scc import _sum_witness
 
     spark = g.edges.sparkSession
     if runner is None:
@@ -130,6 +126,7 @@ def core_decomposition(
         }
 
     w = Window.partitionBy("id").orderBy(F.col("val").desc())
+    moved = Observed(n=F.count_if(F.col("c") != F.col("old")))
 
     def step(s, it, sc):
         core = s["core"]
@@ -146,15 +143,15 @@ def core_decomposition(
             .groupBy("id")
             .agg(F.max(F.least(F.col("val"), F.col("cum"))).alias("h"))
         )
-        return {"core": core.join(h, "id", "left").select(
+        return {"core": moved.on(core.join(h, "id", "left").select(
             "id",
+            F.col("c").alias("old"),
             F.coalesce("h", F.lit(0)).cast("long").alias("c"),
-        )}
+        )).select("id", "c")}
 
-    def converged(new, old, sc):
-        prev = sc["w"] if "w" in sc else _sum_witness(old["core"], "c")
-        cur = _sum_witness(new["core"], "c")
-        return {"w": cur}, cur == prev
+    def converged(sc):
+        n = moved.get()["n"]
+        return {"moved": n}, n == 0
 
     state, _, done = runner.iterate(
         init, step,

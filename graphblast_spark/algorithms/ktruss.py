@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner
+from graphblast_spark.runtime.superstep import Observed, SuperstepRunner
 
 
 def _support(und: DataFrame) -> DataFrame:
@@ -76,15 +76,16 @@ def k_truss(
         runner = SuperstepRunner(spark)
 
     und = g.undirected().filter(F.col("src") < F.col("dst")).toDF("a", "b")
+    keep = F.col("support") >= k - 2
+    peel = Observed(edges=F.count_if(keep), gone=F.count_if(~keep))
 
     def step(s, it, sc):
         sup = _support(s["edges"].select("a", "b"))
-        return {"edges": sup.filter(F.col("support") >= k - 2)}
+        return {"edges": peel.on(sup).filter(keep)}
 
-    def converged(new, old, sc):
-        n_prev = sc["edges"] if "edges" in sc else old["edges"].count()
-        n_keep = new["edges"].count()
-        return {"edges": n_keep}, n_keep == n_prev or n_keep == 0
+    def converged(sc):
+        o = peel.get()
+        return {"edges": o["edges"]}, o["gone"] == 0 or o["edges"] == 0
 
     state, scalars, done = runner.iterate(
         lambda: {"edges": und}, step, iters=max_rounds, converged=converged
@@ -113,8 +114,8 @@ def truss_decomposition(
     start at t(e) = support(e) and repeat
     t'(e) = H({min(t(e), t(e1), t(e2)) : {e,e1,e2} a triangle on e})
     until the fixpoint, which is exactly trussness(e) − 2. t is
-    non-increasing and always ≥ trussness−2, so the decimal-sum
-    witness (scc.py's pattern) is an exact convergence test; the
+    non-increasing and always ≥ trussness−2, so "no t(e) moved", counted
+    by the round's own action, is an exact convergence test; the
     min(·, t(e)) cap never changes H but bounds the per-edge
     distinct-value spread (core_decomposition's argument).
 
@@ -136,8 +137,6 @@ def truss_decomposition(
     edge ∈ k_truss(k) ⟺ trussness ≥ k (pytest-pinned).
     """
     from pyspark.sql import Window
-
-    from graphblast_spark.algorithms.scc import _sum_witness
 
     spark = g.edges.sparkSession
     if runner is None:
@@ -174,6 +173,7 @@ def truss_decomposition(
         }
 
     w = Window.partitionBy("ea", "eb").orderBy(F.col("val").desc())
+    moved = Observed(n=F.count_if(F.col("t") != F.col("old")))
 
     def step(s, it, sc):
         t = s["t"]
@@ -195,14 +195,15 @@ def truss_decomposition(
             .agg(F.max(F.least(F.col("val"), F.col("cum"))).alias("h"))
             .select(F.col("ea").alias("a"), F.col("eb").alias("b"), "h")
         )
-        return {"t": und.join(h, ["a", "b"], "left").select(
-            "a", "b", F.coalesce("h", F.lit(0)).cast("long").alias("t")
-        )}
+        # t holds every edge of und, so it carries the old value along
+        return {"t": moved.on(t.join(h, ["a", "b"], "left").select(
+            "a", "b", F.col("t").alias("old"),
+            F.coalesce("h", F.lit(0)).cast("long").alias("t"),
+        )).select("a", "b", "t")}
 
-    def converged(new, old, sc):
-        prev = sc["w"] if "w" in sc else _sum_witness(old["t"], "t")
-        cur = _sum_witness(new["t"], "t")
-        return {"w": cur}, cur == prev
+    def converged(sc):
+        n = moved.get()["n"]
+        return {"moved": n}, n == 0
 
     state, _, done = runner.iterate(
         init, step,

@@ -69,14 +69,13 @@ def lgc(
             F.lit(source).cast("long").alias("id"), F.lit(1.0).alias("r")
         )
         p0 = spark.createDataFrame([], "id long, p double")
-        return {"p": p0, "r": with_d(r0)}
+        return {"p": p0, "r": succ.on(with_d(r0))}
 
     def step(s, it, sc):
         p, r = s["p"], s["r"]
         f = r.filter(is_frontier)
-        # the previous superstep's observed frontier size; counted here
-        # only on a fresh start
-        n_f = sc["succ"] if "succ" in sc else f.count()
+        # the previous superstep's observed frontier size, or init's
+        n_f = sc["succ"] if "succ" in sc else succ.get()["succ"]
         if n_f == 0:
             return None
 
@@ -108,7 +107,7 @@ def lgc(
         ).select("id", F.col("val").alias("r"))
         return {"p": p, "r": succ.on(with_d(r))}
 
-    def converged(new, old, sc):
+    def converged(sc):
         n_f = succ.get()["succ"]
         return {"succ": n_f}, n_f == 0
 

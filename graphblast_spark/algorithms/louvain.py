@@ -38,8 +38,8 @@ Scale: every move round is four hash shuffles of vertex-or-edge-sized
 frames — stot (groupBy comm), k(v→c) (the vecmat join+agg, map-side
 partials on (v, c) absorb hub fan-in exactly like lp.py's vote
 shape), the candidate⋈stot join on c, and the decision join on id.
-No windows, no collect (one scalar movers-count action per round, the
-engine's one-action-per-superstep posture), no per-vertex sequential
+No windows, no collect (the round's own action counts its movers: one
+action per superstep), no per-vertex sequential
 scan — the classic sequential Louvain is inherently serial; this is
 the standard synchronous-parallel reformulation.
 """
@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 from graphblast_spark.matrix import Graph
 from graphblast_spark.runtime.superstep import (
+    Observed,
     SuperstepRunner,
     child_runner,
     loop_width,
@@ -82,7 +83,9 @@ def _move_round(
 ) -> DataFrame:
     """One gated synchronous local-move round. ``sym`` is the
     self-loop-free symmetrized neighbor view (src, dst, w); ``deg``
-    is (id, deg) including 2·self-loop; ``comm`` is (id, comm)."""
+    is (id, deg) including 2·self-loop; ``comm`` is (id, comm).
+    Returns (id, cur, comm): the old and the new community meet on
+    the round's last join, where the caller counts the movers."""
     curd = comm.join(deg, "id")  # (id, comm, deg)
     stot = (
         curd.groupBy("comm")
@@ -143,7 +146,7 @@ def _move_round(
     return (
         stay.join(cand, "id", "left")
         .select(
-            "id",
+            "id", "cur",
             F.when(
                 F.col("b").isNotNull()
                 & gate
@@ -178,15 +181,13 @@ def louvain(
     if runner is None:
         runner = SuperstepRunner(spark)
 
-    und = _canonical_undirected(g.edges)
+    und = _canonical_undirected(g.edges).persist()
+    n_edges = und.count()  # a contracted level's is observed
     mapping = g.vertices.select("id", F.col("id").alias("community"))
+    movers = Observed(n=F.count_if(F.col("comm") != F.col("cur")))
+    contracted_n = Observed(n=F.count(F.lit(1)))
 
     for lvl in range(levels):
-        und = und.persist()
-        n_edges = und.count()
-        if n_edges == 0:
-            und.unpersist()
-            break
         # Clamp the level's shuffle width to its actual state size
         # (sym = 2|E| rows) — at sandbox scale the 4-shuffle move
         # round otherwise schedules hundreds of near-empty tasks per
@@ -215,24 +216,23 @@ def louvain(
             .persist()
         )
         m2 = float(deg.agg(F.sum("deg")).first()[0] or 0.0)
-        if m2 <= 0.0:
+        if m2 <= 0.0:  # no edge (or no weight) left
             und.unpersist(); sym.unpersist(); deg.unpersist()
             break
 
         def step(s, it, sc):
-            return {"comm": _move_round(sym, deg, s["comm"], m2, it % 2)}
+            moved = _move_round(sym, deg, s["comm"], m2, it % 2)
+            return {"comm": movers.on(moved).select("id", "comm")}
 
-        def converged(new, old, sc):
-            movers = new["comm"].join(
-                old["comm"].withColumnRenamed("comm", "prev"), "id"
-            ).filter(F.col("comm") != F.col("prev")).count()
+        def converged(sc):
+            n = movers.get()["n"]
             # level_moved and the zero-move streak ride in the scalars,
             # so a resumed run takes the same stop and contraction
             # decisions as an uninterrupted one
-            streak = sc.get("zero_streak", 0) + 1 if movers == 0 else 0
+            streak = sc.get("zero_streak", 0) + 1 if n == 0 else 0
             return {
-                "movers": movers,
-                "level_moved": sc.get("level_moved", 0) + movers,
+                "movers": n,
+                "level_moved": sc.get("level_moved", 0) + n,
                 "zero_streak": streak,
             }, streak >= 2
 
@@ -258,7 +258,7 @@ def louvain(
         # work.
         contracted = None
         if lvl < levels - 1 and scalars.get("level_moved", 0) > 0:
-            contracted = (
+            contracted = contracted_n.on(
                 und.join(cm.withColumnRenamed("v", "a").withColumnRenamed("cv", "ca"), "a")
                 .join(cm.withColumnRenamed("v", "b").withColumnRenamed("cv", "cb"), "b")
                 .select(
@@ -268,11 +268,10 @@ def louvain(
                 )
                 .groupBy("a", "b")
                 .agg(F.sum("w").alias("w"))
-                .transform(truncate_plan)
-            )
+            ).transform(truncate_plan)
         und.unpersist(); sym.unpersist(); deg.unpersist()
         if contracted is None:
             break
-        und = contracted
+        und, n_edges = contracted.persist(), contracted_n.get()["n"]
 
     return mapping

@@ -29,8 +29,8 @@ state — a resume keeps prior rounds' matches (the mst.py lesson).
 Scale shape per round: one union + struct-min hash aggregate
 (map-side partials absorb hub fan-in), one two-sided mutual join on
 the vertex key, two anti-joins — all vertex- or edge-sized hash
-shuffles under a scaled width; no windows, no collect beyond the
-one live-count action per round.
+shuffles under a scaled width; no windows, no collect: the live-edge
+truncation observes the count that decides the next round.
 """
 
 from __future__ import annotations
@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from graphblast_spark.algorithms.walks import _A_ID, _A_STEP, _MOD
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, loop_width, truncate_plan
+from graphblast_spark.runtime.superstep import Observed, SuperstepRunner, loop_width, truncate_plan
 
 
 def _edge_struct():
@@ -73,7 +73,9 @@ def maximal_matching(
         runner = SuperstepRunner(spark)
 
     und0 = g.undirected().filter(F.col("src") < F.col("dst")).toDF("a", "b")
-    width = loop_width(spark, max(und0.count(), 1))
+    n_und = und0.count()
+    width = loop_width(spark, max(n_und, 1))
+    live_n = Observed(n=F.count(F.lit(1)))  # counted by the live edges' truncation
 
     def init():
         return {
@@ -83,7 +85,7 @@ def maximal_matching(
 
     def step(s, it, sc):
         live, matched = s["live"], s["matched"]
-        if live.isEmpty():
+        if sc.get("live", n_und) == 0:  # the previous round's live count
             return None
         pe = live.select("a", "b", _edge_struct().alias("e"))
         choice = (
@@ -107,7 +109,7 @@ def maximal_matching(
         )
         mvb = mva.select(F.col("va").alias("vb"))
         return {
-            "live": (
+            "live": live_n.on(
                 live.join(mva.hint("shuffle_hash"),
                           F.col("a") == F.col("va"), "left_anti")
                 .join(mvb.hint("shuffle_hash"),
@@ -116,12 +118,16 @@ def maximal_matching(
             "matched": matched.unionByName(mutual),
         }
 
-    state, _, done = runner.iterate(
+    def converged(sc):
+        n = live_n.get()["n"]
+        return {"live": n}, n == 0
+
+    state, sc, done = runner.iterate(
         init, step,
         iters=fixed_rounds if fixed_rounds is not None else max_rounds,
-        width=width,
+        converged=converged, width=width,
     )
-    if fixed_rounds is None and not done and state["live"].head(1):
+    if fixed_rounds is None and not done and sc.get("live", n_und):
         raise RuntimeError(
             f"maximal_matching did not converge within "
             f"max_rounds={max_rounds}"

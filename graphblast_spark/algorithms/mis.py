@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from graphblast_spark.descriptor import DEFAULT_DESC, Descriptor
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, truncate_plan
+from graphblast_spark.runtime.superstep import Observed, SuperstepRunner, truncate_plan
 
 _LCG_A = 1103515245
 _LCG_B = 12345
@@ -52,10 +52,12 @@ def lcg_weight(col, round_: int = 0):
     ) + F.lit(1)
 
 
-def local_maxima(adj: DataFrame, cand: DataFrame) -> DataFrame:
+def local_maxima(adj: DataFrame, cand: DataFrame) -> tuple[DataFrame, int]:
     """The candidate rows (``w`` dropped; any other column the candidates
     carry comes along) whose (weight, id) beats every candidate
-    neighbor's — no candidate neighbor → m null → winner. m(v) = max
+    neighbor's — no candidate neighbor → m null → winner — truncated,
+    and their count (succ = Σf, mis.hpp step 5), observed by that
+    truncation. m(v) = max
     (weight, id) among still-candidate neighbors (vxm
     MaximumMultiplies, mis.hpp:64-65); the id component breaks
     LCG-weight ties for ids ≥ 2^31−1 (struct max/> is lexicographic,
@@ -67,14 +69,16 @@ def local_maxima(adj: DataFrame, cand: DataFrame) -> DataFrame:
         .groupBy(F.col("dst").alias("id"))
         .agg(F.max(F.struct(F.col("nw").alias("w"), F.col("nid").alias("i"))).alias("m"))
     )
-    return (
+    won = Observed(n=F.count(F.lit(1)))
+    winners = won.on(
         cand.join(m, on="id", how="left")
         .filter(
             F.col("m").isNull()
             | (F.struct(F.col("w").alias("w"), F.col("id").alias("i")) > F.col("m"))
         )
         .drop("w", "m")
-    )
+    ).transform(truncate_plan)
+    return winners, won.get()["n"]
 
 
 def mis(
@@ -103,8 +107,8 @@ def mis(
 
     def step(s, it, sc):
         cand, members = s["cand"], s["members"]
-        winners = local_maxima(adj, cand).transform(truncate_plan)
-        if winners.isEmpty():
+        winners, n_won = local_maxima(adj, cand)
+        if n_won == 0:
             return None
         # remove winners and their neighbors from candidates
         # (masked assign-to-zero ×2, mis.hpp:72-83, 86-91)

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, loop_width, truncate_plan
+from graphblast_spark.runtime.superstep import Observed, SuperstepRunner, loop_width, truncate_plan
 
 
 def _canonical_weighted(edges: DataFrame) -> DataFrame:
@@ -72,6 +72,7 @@ def minimum_spanning_forest(
 
     und = _canonical_weighted(g.edges).persist()
     width = loop_width(spark, max(und.count(), 1))
+    picked = Observed(n=F.count(F.lit(1)))  # counted by the selection's truncation
 
     def init():
         return {
@@ -100,7 +101,7 @@ def minimum_spanning_forest(
         # alone decides the min, so the tie-break is unchanged) so
         # pair_edges below is a pure projection instead of two
         # more label joins per round.
-        sel = (
+        sel = picked.on(
             cross.select(F.col("ca").alias("c"), "w", "a", "b", "ca", "cb")
             .unionByName(
                 cross.select(F.col("cb").alias("c"), "w", "a", "b", "ca", "cb")
@@ -111,10 +112,9 @@ def minimum_spanning_forest(
                     F.col("e.w").alias("w"),
                     F.col("e.ca").alias("ca"), F.col("e.cb").alias("cb"))
             .distinct()
-            .transform(truncate_plan)
-        )
+        ).transform(truncate_plan)
         cross.unpersist()
-        if sel.isEmpty():  # no crossing edge left: the forest is spanning
+        if picked.get()["n"] == 0:  # no crossing edge left: the forest is spanning
             return None
         # union step: CC over the selected component-pair graph
         pair_edges = sel.select(

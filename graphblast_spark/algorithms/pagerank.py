@@ -167,7 +167,7 @@ def pagerank(
         old = s["ranks"].select("id", F.col("val").alias("old")).hint("shuffle_hash")
         return {"ranks": err.on(ranks.join(old, "id", "left")).select("id", "val")}
 
-    def converged(new, old, sc):
+    def converged(sc):
         e = err.get()["e"]
         return {"err": e}, e < eps
 

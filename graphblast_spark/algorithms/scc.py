@@ -16,8 +16,8 @@ Per outer round, on the still-unassigned subgraph:
    tendril/leaf mass of a web crawl in a few rounds).
 2. **Forward max-coloring** to fixpoint: ``cf(v) = max id that
    reaches v`` via monotone max-propagation along edges. Monotone ⇒
-   the decimal(38,0) sum of colors is an exact convergence witness
-   (same single-agg trick as cc.py — no diff join).
+   "no color moved", counted by the superstep's own truncation, is an
+   exact fixpoint test (no diff join, no job of its own).
 3. **Backward max-coloring inside each color class**: every vertex in
    class r has id ≤ r, so for ``cb(v) = max id reachable from v
    staying inside the class``, cb(v) == r ⟺ v reaches the root r
@@ -39,9 +39,9 @@ Labels are normalized to the **min vertex id of the SCC** at the end
 
 Scale shape: edges are persisted once per orientation, pinned on the
 join key so only the (vertex-sized) color/frontier tables shuffle per
-superstep; every convergence check is one aggregate; trim uses
-semi/anti joins, never distinct-on-edges. State across supersteps is
-O(|V|) rows.
+superstep; every stop decision reads a count observed by the action
+that materialises its frame; trim uses semi/anti joins, never
+distinct-on-edges. State across supersteps is O(|V|) rows.
 """
 
 from __future__ import annotations
@@ -50,11 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphblast_spark.matrix import Graph
-from graphblast_spark.runtime.superstep import SuperstepRunner, loop_width, truncate_plan
-
-
-def _sum_witness(df: DataFrame, col: str) -> int:
-    return int(df.agg(F.sum(F.col(col).cast("decimal(38,0)"))).first()[0] or 0)
+from graphblast_spark.runtime.superstep import Observed, SuperstepRunner, loop_width, truncate_plan
 
 
 def _max_coloring(
@@ -73,9 +69,9 @@ def _max_coloring(
     style pointer jump (val' = max(val, val[val]) — valid because
     colors compose along paths: if u reaches v and w reaches u then w
     reaches v), fused into ONE plan before a single eager lineage
-    truncation; convergence is one aggregate — labels are monotone
-    non-decreasing integers, so an unchanged decimal(38,0) sum is an
-    exact fixpoint witness. The jump doubles the known reach per
+    truncation, which also counts the labels that moved — labels are
+    monotone non-decreasing, so a superstep that moves none is the
+    exact fixpoint. The jump doubles the known reach per
     round → **O(log diameter) supersteps** (measured: a 40k-vertex
     path converges in 16 rounds at a flat ~1.2 s each; the full
     backward pass on the sf0.1 web fixture in 12 rounds, ~1–2 s each).
@@ -96,7 +92,7 @@ def _max_coloring(
     mechanism and measurements); tests/test_scc.py pins per-superstep
     flatness and tests/test_plans.py pins the bounded stat."""
     color = verts.select("id", F.col("id").alias("val"))
-    prev = _sum_witness(color, "val")
+    moved = Observed(n=F.count_if(F.col("val") != F.col("old")))
     for _ in range(max_inner):
         c = color.hint("shuffle_hash")
         nbr_max = (
@@ -108,6 +104,7 @@ def _max_coloring(
             color.join(nbr_max, "id", "left")
             .select(
                 "id",
+                F.col("val").alias("old"),
                 F.greatest(
                     F.col("val"), F.coalesce("nmax", F.col("val"))
                 ).alias("val"),
@@ -115,24 +112,26 @@ def _max_coloring(
         )
         parent = stepped.select(F.col("id").alias("pid"), F.col("val").alias("pval"))
         color = (
-            stepped.join(
-                parent.hint("shuffle_hash"),
-                stepped["val"] == F.col("pid"),
-                "left",
+            moved.on(
+                stepped.join(
+                    parent.hint("shuffle_hash"),
+                    stepped["val"] == F.col("pid"),
+                    "left",
+                )
+                .select(
+                    stepped["id"].alias("id"),
+                    F.greatest(
+                        stepped["val"], F.coalesce(F.col("pval"), stepped["val"])
+                    ).alias("val"),
+                    "old",
+                )
             )
-            .select(
-                stepped["id"].alias("id"),
-                F.greatest(
-                    stepped["val"], F.coalesce(F.col("pval"), stepped["val"])
-                ).alias("val"),
-            )
+            .select("id", "val")
             .transform(truncate_plan)
         )
-        cur = _sum_witness(color, "val")
-        if cur == prev:
+        if moved.get()["n"] == 0:
             return color
-        prev = cur
-    # The witness still moved on the last allowed superstep: a
+    # Labels still moved on the last allowed superstep: a
     # non-converged coloring would split a long-diameter SCC into
     # fragments with DIFFERENT scc_ids, silently — the outer loop can
     # still "terminate". Fail loudly like the outer max_rounds path.
@@ -165,6 +164,8 @@ def strongly_connected_components(
     e_fwd = g.edges.select("src", "dst").repartition(width, "src").persist()
     e_fwd.count()
 
+    left = Observed(n=F.count(F.lit(1)))  # rows of each next `remaining`
+
     def init():
         return {
             "remaining": g.vertices.select("id"),
@@ -173,7 +174,7 @@ def strongly_connected_components(
 
     def step(s, rnd, sc):
         remaining, assigned = s["remaining"], s["assigned"]
-        n_rem = sc["remaining"] if "remaining" in sc else remaining.count()
+        n_rem = sc.get("remaining", g.n)
 
         # -- 1. trim to fixpoint --------------------------------------
         while True:
@@ -183,12 +184,11 @@ def strongly_connected_components(
                 .join(remaining.hint("shuffle_hash"),
                       F.col("dst") == remaining["id"], "left_semi")
             )
-            keep = (
+            keep = left.on(
                 remaining.join(act, remaining["id"] == act["src"], "left_semi")
                 .join(act, remaining["id"] == act["dst"], "left_semi")
-                .transform(truncate_plan)
-            )
-            n_keep = keep.count()
+            ).transform(truncate_plan)
+            n_keep = left.get()["n"]
             if n_keep == n_rem:
                 break
             trimmed = remaining.join(keep, "id", "left_anti")
@@ -197,6 +197,7 @@ def strongly_connected_components(
             ).transform(truncate_plan)
             remaining, n_rem = keep, n_keep
         if n_rem == 0:
+            # a leaf, which no action observes; `left` read 0 on `keep`
             return {"remaining": remaining, "assigned": assigned}
 
         act = act.transform(truncate_plan)  # edges inside `keep`
@@ -234,14 +235,14 @@ def strongly_connected_components(
             .select("id", F.col("val").alias("root"))
         )
         return {
-            "remaining": remaining.join(members, "id", "left_anti"),
+            "remaining": left.on(remaining.join(members, "id", "left_anti")),
             "assigned": assigned.unionByName(
                 members.select("id", F.col("root").alias("scc_id"))
             ),
         }
 
-    def converged(new, old, sc):
-        n = new["remaining"].count()
+    def converged(sc):
+        n = left.get()["n"]
         return {"remaining": n}, n == 0
 
     state, sc, done = runner.iterate(
@@ -269,16 +270,16 @@ def _reach_from(edges: DataFrame, seeds: DataFrame, reverse: bool = False) -> Da
     src, dst = ("dst", "src") if reverse else ("src", "dst")
     visited = seeds.select("id").transform(truncate_plan)
     frontier = visited
+    found = Observed(n=F.count(F.lit(1)))
     while True:
-        nxt = (
+        nxt = found.on(
             edges.join(frontier.hint("shuffle_hash"),
                        edges[src] == frontier["id"], "inner")
             .select(edges[dst].alias("id"))
             .distinct()
             .join(visited, "id", "left_anti")
-            .transform(truncate_plan)
-        )
-        if nxt.isEmpty():
+        ).transform(truncate_plan)
+        if found.get()["n"] == 0:
             return visited
         visited = visited.unionByName(nxt).transform(truncate_plan)
         frontier = nxt

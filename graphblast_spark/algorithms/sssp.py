@@ -59,7 +59,7 @@ def sssp(
             "frontier": new_frontier,
         }
 
-    def converged(new, old, sc):
+    def converged(sc):
         n = improved_n.get()["n"]
         return {"improved_n": n}, n == 0
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from graphblast_spark.functions.dedup import _clusters_from_pairs
 from graphblast_spark.runtime.superstep import truncate_plan
 
 
@@ -304,33 +305,7 @@ def embedding_dedup_clusters(
     components, because near-duplication chains: A≈B≈C must dedup to
     one kept row even when cos(A,C) < threshold. ``cluster_id`` = min
     vec_id of the cluster; singletons cluster with themselves."""
-    from graphblast_spark.algorithms.cc import connected_components
-    from graphblast_spark.matrix import Graph
-
     pairs = cosine_near_dup_pairs(
         vectors, threshold, n_cells, id_col, vec_col, quantizer=quantizer
     ).transform(truncate_plan)
-    if not pairs.head(1):  # no near-dups anywhere: all singletons
-        return vectors.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(id_col).alias("cluster_id"),
-            F.lit(True).alias("is_canonical"),
-        )
-    # CC runs over paired vectors only (the vast majority pair with
-    # nothing at corpus scale); singletons are restored by the left join
-    # without ever entering the superstep loop.
-    g = Graph.build(
-        pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"), F.lit(1.0).alias("val")),
-        symmetrize=True,
-    )
-    cc = connected_components(g)  # localCheckpointed → safe to release g
-    g.unpersist()
-    return (
-        vectors.select(F.col(id_col).alias("vec_id"))
-        .join(cc.withColumnRenamed("id", "vec_id"), "vec_id", "left")
-        .select(
-            "vec_id",
-            F.coalesce("component", "vec_id").alias("cluster_id"),
-            (F.coalesce("component", "vec_id") == F.col("vec_id")).alias("is_canonical"),
-        )
-    )
+    return _clusters_from_pairs(vectors, id_col, pairs).withColumnRenamed("doc_id", "vec_id")

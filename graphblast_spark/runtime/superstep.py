@@ -8,11 +8,11 @@ once, for the whole engine. The caller supplies only the algorithm:
 
 - ``init()`` → the starting state, a dict of named DataFrames;
 - ``step(state, it, scalars)`` → the next state, lazily (or ``None``
-  when the step finds nothing left to do — an empty frontier);
-- either a fixed superstep count, or ``converged(new, old, scalars)``
-  → ``(scalars, done)``, evaluated on the already-materialised new
-  state. The stop test reads an :class:`Observed` that the step hung
-  on its output, so it runs no Spark job of its own.
+  when an observation shows nothing left to do — an empty frontier);
+- either a fixed superstep count, or ``converged(scalars)`` →
+  ``(scalars, done)``, called after the superstep's action. It sees
+  only scalars, never a frame: it reads an :class:`Observed` that the
+  step hung on its output, so it cannot run a Spark job of its own.
 
 The driver owns everything else, identically for every loop:
 
@@ -145,9 +145,14 @@ class Observed:
     output; after the superstep's action, :meth:`get` returns
     ``{name: value}``.
 
-    Hang it above the step's last exchange, so it is computed in the
-    action's result stage: a result task's metrics are merged once per
-    partition, so a retried task is not counted twice."""
+    The one way a loop decides to stop: in ``converged``, in a ``step``
+    that returns ``None`` and in a hand-rolled loop. Hang it above the
+    step's last exchange, so it is computed in the action's result
+    stage: a result task's metrics are merged once per partition, so a
+    retried task is not counted twice. Decide on a count or a decimal
+    sum: partials merge in task-completion order, so a double sum's
+    last bits vary. On a plan leaf (see :func:`_has_lineage`) it never
+    fires, since nothing materialises a leaf again."""
 
     def __init__(self, **metrics: Column):
         self._metrics = [c.alias(k) for k, c in metrics.items()]
@@ -269,7 +274,7 @@ class SuperstepRunner:
         init: Callable[[], State],
         step: Callable[[State, int, dict], State | None],
         iters: int,
-        converged: Callable[[State, State, dict], tuple[dict, bool]] | None = None,
+        converged: Callable[[dict], tuple[dict, bool]] | None = None,
         width: int | None = None,
     ) -> tuple[State, dict, bool]:
         """Run supersteps ``0 .. iters-1`` (resuming after the newest
@@ -280,11 +285,11 @@ class SuperstepRunner:
         truncated, or written as the durable checkpoint when one is due
         — so a step may truncate an intermediate it reuses itself.
         Returning ``None`` stops the loop as converged without a
-        superstep. ``converged(new, old, scalars)`` sees the
-        materialised new state, the previous state and the previous
-        scalars (``{}`` on a fresh start, the checkpointed ones after a
-        resume) and returns the new scalars and whether to stop; it
-        reads them from an :class:`Observed` on the step's output.
+        superstep. ``converged(scalars)`` runs after the superstep's
+        action: it gets the previous scalars (``{}`` on a fresh start,
+        the checkpointed ones after a resume) and returns the new
+        scalars and whether to stop. It reads the new values from an
+        :class:`Observed` on the step's output; it never sees a frame.
         Without it the loop runs exactly ``iters`` supersteps. The
         returned flag is True only when a stop test ended the loop;
         ``width`` pins the loop's shuffle width (default: the session's,
@@ -303,7 +308,7 @@ class SuperstepRunner:
                 new = self._write(it, new) if durable else self._truncate(new)
                 done = False
                 if converged is not None:
-                    scalars, done = converged(new, state, scalars)
+                    scalars, done = converged(scalars)
                 if durable:
                     self._commit(it, new, scalars)
                 self._log({"iter": it, "ms": (time.time() - t0) * 1000.0,

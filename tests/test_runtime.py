@@ -13,12 +13,27 @@ import os
 import pytest
 
 from graphblast_spark.algorithms import (
+    betweenness_centrality,
     connected_components,
+    core_decomposition,
+    graph_coloring,
+    graph_coloring_jp,
+    graph_coloring_spec,
+    harmonic_centrality_hyperball,
+    hyperball,
     incremental_connected_components,
+    k_core,
+    k_truss,
     label_propagation_majority,
+    lgc,
+    louvain,
+    maximal_matching,
+    minimum_spanning_forest,
+    mis,
     pagerank,
     personalized_pagerank,
     strongly_connected_components,
+    truss_decomposition,
 )
 from graphblast_spark.descriptor import DEFAULT_DESC
 from graphblast_spark.runtime.superstep import SuperstepRunner
@@ -88,6 +103,11 @@ LOOPS = {
     "lp_majority": ("test_cc", lambda g, r: label_propagation_majority(g, iters=3, runner=r)),
     "incremental_cc": ("test_cc", _incremental_cc),
     "scc": ("test_pr", lambda g, r: strongly_connected_components(g, runner=r)),
+    "core_decomposition": ("test_mesh", lambda g, r: core_decomposition(g, runner=r)),
+    "k_truss": ("test_mesh", lambda g, r: k_truss(g, k=3, runner=r)),
+    "hyperball": ("test_cc", lambda g, r: hyperball(g, max_t=8, runner=r)),
+    "louvain": ("test_cc", lambda g, r: louvain(g, levels=2, runner=r)),
+    "mis": ("test_mis", lambda g, r: mis(g, runner=r)),
 }
 
 
@@ -101,12 +121,16 @@ def test_metrics_jsonl_shape(spark, tmp_path, loop):
     g = fixture_graph(spark, fixture)
     run_dir = str(tmp_path / "m")
     run(g, SuperstepRunner(spark, run_dir=run_dir, checkpoint_every=0)).collect()
-    lines = [json.loads(l) for l in open(os.path.join(run_dir, "metrics.jsonl"))]
-    assert lines
-    assert [l["iter"] for l in lines] == list(range(len(lines)))
-    assert all(isinstance(l["ms"], float) for l in lines)
-    assert all(isinstance(l["jobs"], int) and l["jobs"] >= 1 for l in lines)
-    assert all(isinstance(l["classes"], int) and l["classes"] >= 0 for l in lines)
+    # a loop run in levels (louvain) logs each level's runner beneath run_dir
+    logs = sorted(root for root, _, files in os.walk(run_dir) if "metrics.jsonl" in files)
+    assert logs
+    for root in logs:
+        lines = [json.loads(l) for l in open(os.path.join(root, "metrics.jsonl"))]
+        assert lines
+        assert [l["iter"] for l in lines] == list(range(len(lines)))
+        assert all(isinstance(l["ms"], float) for l in lines)
+        assert all(isinstance(l["jobs"], int) and l["jobs"] >= 1 for l in lines)
+        assert all(isinstance(l["classes"], int) and l["classes"] >= 0 for l in lines)
     if loop == "pr_fixed":
         assert len(lines) == 3
     g.unpersist()
@@ -136,6 +160,47 @@ def test_one_job_per_superstep(spark, tmp_path, loop, checkpoint_every):
     g.unpersist()
 
 
+# Loops whose stop decision reads an Observed hung on the superstep's
+# own action: each superstep runs no count/isEmpty/agg job of its own,
+# one job fewer than a probe of the state would cost.
+CONVERTED = {
+    "k_core": ("test_mesh", lambda g, r: k_core(g, k=3, runner=r), [2, 2, 2]),
+    "core_decomposition": ("test_mesh", lambda g, r: core_decomposition(g, runner=r), [2, 2, 2]),
+    "k_truss": ("chesapeake", lambda g, r: k_truss(g, k=4, runner=r), [1, 1, 1, 1]),
+    "truss_decomposition": ("chesapeake", lambda g, r: truss_decomposition(g, runner=r), [2, 2, 2, 2, 2]),
+    "scc": ("test_pr", lambda g, r: strongly_connected_components(g, runner=r), [13]),
+    "hyperball": ("test_cc", lambda g, r: hyperball(g, max_t=8, runner=r), [1, 1, 1]),
+    "harmonic": ("test_cc", lambda g, r: harmonic_centrality_hyperball(g, max_t=8, runner=r), [1, 1, 1]),
+    "louvain": ("test_cc", lambda g, r: louvain(g, levels=2, runner=r), [3, 3, 3, 3, 3, 3, 3, 3]),
+    "mis": ("test_mis", lambda g, r: mis(g, runner=r), [5, 5, 5]),
+    "graph_coloring": ("test_mis", lambda g, r: graph_coloring(g, runner=r), [4, 4, 4, 4, 4]),
+    "graph_coloring_spec": ("test_mis", lambda g, r: graph_coloring_spec(g, palette=1, runner=r), [4, 4, 4, 4]),
+    "graph_coloring_jp": ("test_mis", lambda g, r: graph_coloring_jp(g, runner=r), [5, 5, 5, 5, 5]),
+    "matching": ("test_mesh", lambda g, r: maximal_matching(g, runner=r), [3, 3, 3]),
+    "mst": ("test_mesh", lambda g, r: minimum_spanning_forest(g, runner=r), [9]),
+    "bc": ("test_bc", lambda g, r: betweenness_centrality(g, sources=[0], runner=r), [2, 2]),
+    "lgc": ("test_bc", lambda g, r: lgc(g, source=0, fixed_iters=3, runner=r), [3, 3, 3]),
+}
+
+
+@pytest.mark.parametrize("loop", sorted(CONVERTED))
+def test_converted_loop_jobs(spark, tmp_path, loop):
+    """Each converted loop's per-superstep Spark jobs, pinned: the stop
+    scalar (a survivor, mover, winner or frontier count; an exact
+    estimate sum) is observed by the superstep's own action, so no
+    superstep pays a separate probe job for it."""
+    fixture, run, jobs = CONVERTED[loop]
+    g = fixture_graph(spark, fixture)
+    run_dir = str(tmp_path / "m")
+    run(g, SuperstepRunner(spark, run_dir=run_dir)).collect()
+    lines = []
+    for root, _, files in sorted(os.walk(run_dir)):  # child runners log beneath
+        if "metrics.jsonl" in files:
+            lines += _metrics(root)
+    assert [l["jobs"] for l in lines] == jobs
+    g.unpersist()
+
+
 def test_pagerank_eps_checkpoint_resume(spark, tmp_path):
     """PR-to-eps: the stop test's ``err`` is committed in meta.json with
     the checkpoint it belongs to, and a fresh runner resumes from it to
@@ -162,6 +227,57 @@ def test_pagerank_eps_checkpoint_resume(spark, tmp_path):
     assert set(resumed) == set(full)
     for k in full:
         assert resumed[k] == pytest.approx(full[k], abs=1e-15)
+    g.unpersist()
+
+
+def _core(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("loop", ["core_decomposition", "hyperball"])
+def test_observed_stop_checkpoint_resume(spark, tmp_path, loop):
+    """Loops whose stop scalars are observations resume from the
+    scalars in meta.json: a fresh runner continues after the last
+    checkpoint, takes the undisturbed run's supersteps and returns its
+    output. Hyperball's N(0..t) series is read back from meta.json, not
+    recomputed: a value planted there comes out as N(0)."""
+    g = fixture_graph(spark, "chesapeake")
+    full_dir, run_dir = str(tmp_path / "full"), str(tmp_path / "run")
+    if loop == "core_decomposition":
+        def run(r, cap=None):
+            desc = DEFAULT_DESC if cap is None else DEFAULT_DESC.with_(max_niter=cap)
+            return _core(core_decomposition(g, desc=desc, runner=r))
+    else:
+        def run(r, cap=None):
+            return _core(hyperball(g, max_t=8 if cap is None else cap, runner=r))
+    full = run(SuperstepRunner(spark, run_dir=full_dir))
+    n_full = len(_metrics(full_dir))
+    assert n_full >= 4
+
+    # Phase 1: stop after 2 supersteps, a checkpoint after each (the
+    # core loop raises at its cap, the crash being simulated).
+    r1 = SuperstepRunner(spark, run_dir=run_dir, checkpoint_every=1, name=loop)
+    if loop == "core_decomposition":
+        with pytest.raises(RuntimeError, match="did not converge"):
+            run(r1, cap=2)
+    else:
+        run(r1, cap=2)
+    meta_path = os.path.join(run_dir, "ckpt_000001", "meta.json")
+    meta = json.load(open(meta_path))
+    assert meta["iter"] == 1 and meta["scalars"] == _metrics(run_dir)[1]["scalars"]
+    if loop == "hyperball":
+        assert meta["scalars"]["n_pairs"] == [t[1] for t in full[:3]]
+        meta["scalars"]["n_pairs"][0] = -1.0
+        json.dump(meta, open(meta_path, "w"))
+
+    # Phase 2: a fresh runner continues after superstep 1.
+    resumed = run(SuperstepRunner(spark, run_dir=run_dir, checkpoint_every=1, name=loop))
+    assert [l["iter"] for l in _metrics(run_dir)[2:]] == list(range(2, n_full))
+    if loop == "hyperball":
+        assert resumed[0] == (0, -1.0)
+        assert resumed[1:] == full[1:]
+    else:
+        assert resumed == full
     g.unpersist()
 
 
