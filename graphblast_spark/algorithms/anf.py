@@ -17,7 +17,7 @@ sketch column (``hll_sketch_agg`` / ``hll_union_agg`` /
 in the loop); one superstep = the same union-before-agg shape
 pagerank uses (neighbor sketches + own sketch → one hash aggregate),
 so the hot loop is one shuffle of |V| sketch rows per round against
-src-pinned persisted edges. N(t) per round is an exact (decimal) sum of
+src-pinned persisted edges. N(t) per round is an exact decimal sum of
 estimates that the round's own action observes — the monotone
 convergence witness (N stops growing ⇔ every ball saturated ⇔ t
 reached the diameter).
@@ -43,14 +43,17 @@ from graphblast_spark.runtime.superstep import Observed, SuperstepRunner, loop_w
 
 
 def _estimate_sum(est) -> Observed:
-    """Σ ``est`` over the counters, observed by the action that
-    materialises them: summed as ``decimal(38,18)`` so the total is
-    exact whatever order the per-task partial sums merge in."""
-    return Observed(total=F.sum(est.cast("decimal(38,18)")))
+    """Σ ``est`` (a bigint HLL estimate), observed by the action that
+    materialises the counters: a ``decimal(38,0)`` sum, as cc.py sums
+    labels, is exact in any partial-merge order up to 10^38."""
+    return Observed(total=F.sum(est.cast("decimal(38,0)")), rows=F.count(F.lit(1)))
 
 
 def _total(ob: Observed) -> float:
-    return float(ob.get()["total"] or 0)
+    m = ob.get()
+    if m["total"] is None and m["rows"]:  # decimal overflow with ANSI mode off
+        raise ArithmeticError("HyperBall estimate sum overflowed decimal(38,0)")
+    return float(m["total"] or 0)  # no vertices: the empty sum
 
 
 def _ball_union(e: DataFrame, counters: DataFrame) -> DataFrame:
@@ -120,7 +123,7 @@ def hyperball(
     if runner is None:
         runner = SuperstepRunner(spark)
 
-    # N(0), observed by init's truncation, and N(t), by superstep t's
+    # N(0) is observed by init's truncation, N(t) by superstep t's
     n_0 = _estimate_sum(F.hll_sketch_estimate("sk"))
     n_t = _estimate_sum(F.hll_sketch_estimate("sk"))
 
@@ -132,8 +135,7 @@ def hyperball(
         return {"counters": n_t.on(_ball_union(e, s["counters"]))}
 
     def converged(sc):
-        # N(0..t) rides in the scalars, so a resumed run keeps the
-        # series; N(0) was observed by init's truncation
+        # N(0..t) rides in the scalars, so a resumed run keeps the series
         series = sc.get("n_pairs") or [_total(n_0)]
         n = _total(n_t)
         return {"n_pairs": series + [n]}, n == series[-1]  # balls stopped growing
@@ -196,8 +198,7 @@ def harmonic_centrality_hyperball(
     if runner is None:
         runner = SuperstepRunner(spark)
 
-    # Σ est before the loop, observed by init's truncation, and after
-    # each superstep, by its own
+    # Σ est is observed by init's truncation, then by each superstep's
     total_0 = _estimate_sum(F.col("est"))
     total = _estimate_sum(F.col("est"))
 

@@ -74,7 +74,9 @@ def maximal_matching(
 
     und0 = g.undirected().filter(F.col("src") < F.col("dst")).toDF("a", "b")
     n_und = und0.count()
-    width = loop_width(spark, max(n_und, 1))
+    if n_und == 0:
+        return und0
+    width = loop_width(spark, n_und)
     live_n = Observed(n=F.count(F.lit(1)))  # counted by the live edges' truncation
 
     def init():
@@ -85,8 +87,6 @@ def maximal_matching(
 
     def step(s, it, sc):
         live, matched = s["live"], s["matched"]
-        if sc.get("live", n_und) == 0:  # the previous round's live count
-            return None
         pe = live.select("a", "b", _edge_struct().alias("e"))
         choice = (
             pe.select(F.col("a").alias("v"), "e")
@@ -119,15 +119,16 @@ def maximal_matching(
         }
 
     def converged(sc):
+        # also under fixed_rounds: no live edge left ends the rounds
         n = live_n.get()["n"]
         return {"live": n}, n == 0
 
-    state, sc, done = runner.iterate(
+    state, _, done = runner.iterate(
         init, step,
         iters=fixed_rounds if fixed_rounds is not None else max_rounds,
         converged=converged, width=width,
     )
-    if fixed_rounds is None and not done and sc.get("live", n_und):
+    if fixed_rounds is None and not done:
         raise RuntimeError(
             f"maximal_matching did not converge within "
             f"max_rounds={max_rounds}"

@@ -49,6 +49,17 @@ def test_hyperball_monotone_and_saturates(spark):
     assert vals[-1] == vals[-2]  # final round confirmed saturation
 
 
+def test_hyperball_empty_graph(spark):
+    """No vertices: the observed estimate sum is the empty sum, 0."""
+    from graphblast_spark.algorithms.anf import harmonic_centrality_hyperball
+
+    g = Graph.build(
+        spark.createDataFrame([], "src long, dst long"), vertices=spark.range(0)
+    )
+    assert sorted(tuple(r) for r in hyperball(g, max_t=4).collect()) == [(0, 0.0), (1, 0.0)]
+    assert harmonic_centrality_hyperball(g, max_t=4).collect() == []
+
+
 def test_effective_diameter_interpolates(spark):
     nf = neighborhood_function_exact(_path_graph(spark, 4), max_t=3)
     d = effective_diameter(nf, q=0.9)

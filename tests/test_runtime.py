@@ -96,6 +96,21 @@ def _incremental_cc(g, runner):
     return incremental_connected_components(g, prev, runner=runner)
 
 
+def _metrics(run_dir):
+    return [json.loads(l) for l in open(os.path.join(run_dir, "metrics.jsonl"))]
+
+
+def _all_metrics(run_dir):
+    """(dir, lines) of every metrics.jsonl under ``run_dir``, in path
+    order: a loop run in levels (louvain) logs each level's runner
+    beneath run_dir."""
+    return [
+        (root, _metrics(root))
+        for root, _, files in sorted(os.walk(run_dir))
+        if "metrics.jsonl" in files
+    ]
+
+
 LOOPS = {
     "pr_fixed": ("test_pr", lambda g, r: pagerank(g, fixed_iters=3, runner=r)),
     "pr_eps": ("test_pr", lambda g, r: pagerank(g, eps=1e-6, runner=r)),
@@ -121,23 +136,19 @@ def test_metrics_jsonl_shape(spark, tmp_path, loop):
     g = fixture_graph(spark, fixture)
     run_dir = str(tmp_path / "m")
     run(g, SuperstepRunner(spark, run_dir=run_dir, checkpoint_every=0)).collect()
-    # a loop run in levels (louvain) logs each level's runner beneath run_dir
-    logs = sorted(root for root, _, files in os.walk(run_dir) if "metrics.jsonl" in files)
+    logs = dict(_all_metrics(run_dir))
     assert logs
-    for root in logs:
-        lines = [json.loads(l) for l in open(os.path.join(root, "metrics.jsonl"))]
+    # the loop's own runner logs at run_dir; louvain's levels log beneath it
+    assert loop == "louvain" or run_dir in logs
+    for lines in logs.values():
         assert lines
         assert [l["iter"] for l in lines] == list(range(len(lines)))
         assert all(isinstance(l["ms"], float) for l in lines)
         assert all(isinstance(l["jobs"], int) and l["jobs"] >= 1 for l in lines)
         assert all(isinstance(l["classes"], int) and l["classes"] >= 0 for l in lines)
     if loop == "pr_fixed":
-        assert len(lines) == 3
+        assert len(logs[run_dir]) == 3
     g.unpersist()
-
-
-def _metrics(run_dir):
-    return [json.loads(l) for l in open(os.path.join(run_dir, "metrics.jsonl"))]
 
 
 @pytest.mark.parametrize("checkpoint_every", [0, 1])
@@ -193,11 +204,7 @@ def test_converted_loop_jobs(spark, tmp_path, loop):
     g = fixture_graph(spark, fixture)
     run_dir = str(tmp_path / "m")
     run(g, SuperstepRunner(spark, run_dir=run_dir)).collect()
-    lines = []
-    for root, _, files in sorted(os.walk(run_dir)):  # child runners log beneath
-        if "metrics.jsonl" in files:
-            lines += _metrics(root)
-    assert [l["jobs"] for l in lines] == jobs
+    assert [l["jobs"] for _, lines in _all_metrics(run_dir) for l in lines] == jobs
     g.unpersist()
 
 
